@@ -4,13 +4,13 @@
 package org.apache.spark.sql.graftnative
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType, TypeCollection}
 
-/** Fused dot product over two array<double> columns as a native
+/** Fused dot product over two array<double|float> columns as a native
   * Catalyst expression with whole-stage codegen (SURVEY §4 item 1).
   *
   * The higher-order-function formulation
@@ -23,6 +23,11 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
   * version and to DuckDB's `list_dot_product`, so oracle parity is
   * unaffected.
   *
+  * An array<float> side is read as `(double) getFloat(i)` — the exact
+  * widening a cast to array<double> performs, without materializing
+  * the cast array for every row. Any other numeric array casts
+  * implicitly to array<double>, never to float.
+  *
   * NULL contract matches the HOF form exactly: NULL when either input
   * is NULL, when the lengths differ (zip_with would null-pad, and the
   * null propagates through the sum), or when any element is NULL. The
@@ -30,10 +35,11 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
   * containsNull = false — the engine's own vector columns.
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
+    extends BinaryExpression with ImplicitCastInputTypes {
 
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
+  // double first: implicit casts pick the first type that fits
+  override def inputTypes: Seq[AbstractDataType] = Seq.fill(2)(
+    TypeCollection(ArrayType(DoubleType), ArrayType(FloatType)))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot"
   // NULL on length mismatch / null element, even for non-null inputs
@@ -46,6 +52,13 @@ case class DotProduct(left: Expression, right: Expression)
     }
   }
 
+  private def isFloat(e: Expression): Boolean = e.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+  private lazy val leftFloat = isFloat(left)
+  private lazy val rightFloat = isFloat(right)
+
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
@@ -55,7 +68,9 @@ case class DotProduct(left: Expression, right: Expression)
     var i = 0
     while (i < n) {
       if (elemsMayBeNull && (x.isNullAt(i) || y.isNullAt(i))) return null
-      s += x.getDouble(i) * y.getDouble(i)
+      val xi = if (leftFloat) x.getFloat(i).toDouble else x.getDouble(i)
+      val yi = if (rightFloat) y.getFloat(i).toDouble else y.getDouble(i)
+      s += xi * yi
       i += 1
     }
     s
@@ -70,6 +85,8 @@ case class DotProduct(left: Expression, right: Expression)
         if (elemsMayBeNull)
           s"""if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"""
         else ""
+      def elem(arr: String, float: Boolean) =
+        if (float) s"(double) $arr.getFloat($i)" else s"$arr.getDouble($i)"
       s"""
          |final int $n = $a.numElements();
          |if ($b.numElements() != $n) {
@@ -78,7 +95,7 @@ case class DotProduct(left: Expression, right: Expression)
          |  double $s = 0.0;
          |  for (int $i = 0; $i < $n; $i++) {
          |    $nullCheck
-         |    $s += $a.getDouble($i) * $b.getDouble($i);
+         |    $s += ${elem(a, leftFloat)} * ${elem(b, rightFloat)};
          |  }
          |  if (!${ev.isNull}) ${ev.value} = $s;
          |}

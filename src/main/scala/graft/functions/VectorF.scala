@@ -24,9 +24,11 @@ object VectorF {
     * Reference `src/pipeline/utils.py:24` (`float(np.dot(a, b))`).
     * Backed by the codegen'd [[NativeExpressions.dotNative]] — a
     * single fused loop, same left-to-right summation order as the
-    * `aggregate(zip_with(...))` formulation it replaces. */
+    * `aggregate(zip_with(...))` formulation it replaces. It reads
+    * array<float> elements directly, widened to double, so a float
+    * vector is never cast to a double array per row. */
   def dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.graftnative.NativeExpressions.dotNative(toDouble(a), toDouble(b))
+    org.apache.spark.sql.graftnative.NativeExpressions.dotNative(a, b)
 
   /** The original higher-order-function dot — kept as the reference
     * semantic definition and for A/B parity testing. */

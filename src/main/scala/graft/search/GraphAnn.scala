@@ -1822,7 +1822,7 @@ object GraphAnn {
         "predates content routing; rebuild it with GraphAnn.writeIndex")
 
   /** Per-query top-P routing cells, computed DISTRIBUTIVELY — the
-    * [[IVF.multiProbes]] shape with the broadcast FLIPPED: the
+    * direction [[IVF.probePairs]] also takes: the
     * routing table is parts = ⌈N/cell⌉ rows, CORPUS-PROPORTIONAL at
     * fleet scale (10⁷–10⁸ full vectors at the 100 TB north star), so
     * it is the scanned side — never collected, never broadcast; the

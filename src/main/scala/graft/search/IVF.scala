@@ -3,6 +3,7 @@ package graft.search
 import graft.functions.VectorF._
 import graft.ingest.Ingest
 import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.graftnative.QueryBatch
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -934,12 +935,9 @@ object IVF {
       .select(col(idCol), col("rank"), round(col("score"), 6).as("score"))
   }
 
-  /** Multi-query IVF search: ONE corpus scan serves every query.
-    * Each query ranks the centroids and keeps its `nprobe` best
-    * lists; candidates meet through an equi-join on cid (over a
-    * persisted index: partition pruning), and per-query top-k runs
-    * through the bounded-heap aggregate, so the exchange carries
-    * O(queries × k) rows. */
+  /** Multi-query IVF search over an in-memory corpus: trains the
+    * centroids, assigns the corpus, then serves the batch as
+    * [[ivfMultiTopKAssigned]] does. */
   def ivfMultiTopK(docs: DataFrame, idCol: String, vecCol: String,
                    queries: DataFrame, qidCol: String, qvecCol: String,
                    k: Int, nCentroids: Int, nprobe: Int): DataFrame = {
@@ -955,82 +953,53 @@ object IVF {
     * localCheckpoint'd) and share it here — the assignment is a
     * corpus × K crossJoin plus a per-row rank window, and recomputing
     * it per knob was ~2/3 of q48's cost. Over a persisted index the
-    * same role is played by the partitionBy(cid) parquet layout. */
+    * same role is played by the partitionBy(cid) parquet layout.
+    * Probe step as in [[searchIndexMulti]]; the scan of `assigned`
+    * is one routed `graft_topk_batch` aggregate. */
   def ivfMultiTopKAssigned(assigned: DataFrame, cents: DataFrame,
                            idCol: String, vecCol: String,
                            queries: DataFrame, qidCol: String, qvecCol: String,
                            k: Int, nprobe: Int): DataFrame = {
     Search.requireIntegralId(assigned, idCol, "ivfMultiTopK")
-    multiTopKProbed(assigned,
-      multiProbes(cents, queries, qidCol, qvecCol, nprobe), idCol, vecCol, k)
+    val batch = Search.queryBatch(queries, qidCol, qvecCol)
+    Search.batchTopK(assigned, idCol, vecCol,
+      batch.routed(probePairs(cents, batch, nprobe)), Some(col("cid")), k)
   }
 
-  /** Each query's `nprobe` best cids: (qid, __qv, cid) — the
-    * queries × nprobe probe table every multi-query IVF-family path
-    * shares (in-memory, persisted, SQ8). Driver-bounded by contract
-    * (the query set is the small side).
+  /** The probe step every multi-query IVF-family serve shares
+    * (in-memory, persisted, SQ8): each query row's `nprobe` best
+    * cids, as (query row, cid) pairs on the driver — queries × nprobe
+    * pairs, driver-bounded by the multi-query contract.
     *
-    * The broadcast direction is the round-18 flip of the graph serve's
-    * round-17 lesson, applied here before it bites: the CENTROID table
-    * grows with the corpus at derived-K geometry (K = ⌈√N⌉ is ~10⁵
-    * rows / ~50 MB at 10¹⁰ vectors — past any sane broadcast), so it
-    * is the SCANNED side; the QUERY set broadcasts. Per-query top-P
-    * rides the same bounded-heap aggregate as [[GraphAnn
-    * .routeQueriesDf]] with the identical (score desc, cid asc) tie
-    * order the old per-query rank window used — probe sets are
-    * BIT-IDENTICAL to the pre-flip path (every oracled IVF/SQ row
-    * re-certifies it), and the exchange carries O(queries × nprobe)
-    * rows. __qv rides THROUGH the aggregate (`first` over a group
-    * whose rows all carry the same vector), so the queries frame is
-    * evaluated exactly once — a re-join would evaluate it twice, and
-    * a non-deterministic query source (limit/sample over multiple
-    * partitions) could materialize different sets per evaluation and
-    * silently drop probes. */
-  private[graft] def multiProbes(cents: DataFrame, queries: DataFrame,
-                                 qidCol: String, qvecCol: String,
-                                 nprobe: Int): DataFrame = {
-    val qs = queries.select(col(qidCol).as("qid"), col(qvecCol).as("__qv"))
-    cents
-      .crossJoin(broadcast(qs))
-      .select(col("qid"), col("__qv"), col("cid"),
-        dot(col("__qv"), col("cvec")).as("__cs"))
-      .groupBy("qid")
-      .agg(
-        org.apache.spark.sql.graftnative.TopKAggregate
-          .topK(col("cid").cast("long"), col("__cs"), nprobe).as("__tk"),
-        first(col("__qv")).as("__qv"))
-      .select(col("qid"), col("__qv"), explode(col("__tk")).as("__e"))
-      .select(col("qid"), col("__qv"), col("__e.id").as("cid"))
-  }
-
-  /** The candidate join + per-query bounded-heap top-k over a probe
-    * table — one scan of `assigned` serves every query. */
-  private[search] def multiTopKProbed(assigned: DataFrame, probes: DataFrame,
-                                      idCol: String, vecCol: String,
-                                      k: Int): DataFrame =
-    assigned
-      .join(broadcast(probes), "cid")
-      .select(col("qid"), col(idCol), dot(col(vecCol), col("__qv")).as("score"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graftnative.TopKAggregate
-        .topK(col(idCol).cast("long"), col("score"), k).as("__tk"))
-      .select(col("qid"), explode(col("__tk")).as("__e"))
-      .select(col("qid"), col("__e.id").as(idCol), col("__e.rank").as("rank"),
-        round(col("__e.score"), 6).as("score"))
+    * The CENTROID table is the scanned side: it grows with the corpus
+    * at derived-K geometry (K = ⌈√N⌉ is ~10⁵ rows / ~50 MB at 10¹⁰
+    * vectors — past any sane broadcast), so it is never collected or
+    * broadcast. The query batch rides inside ONE `graft_topk_batch`
+    * aggregate over that scan — a heap per query row, the (score
+    * desc, cid asc) tie order and the left-to-right dot every IVF
+    * probe uses — so probe sets are bit-identical to the per-query
+    * centroid ranking, and only the pairs come back. */
+  private[graft] def probePairs(cents: DataFrame, batch: QueryBatch,
+                                nprobe: Int): Seq[(Int, Long)] =
+    Search.batchTopK(cents, "cid", "cvec", batch.perRow, None, nprobe)
+      .select(col("qid"), col("cid")).collect().toSeq
+      .map(r => (r.getInt(0), r.getLong(1)))
 
   /** MULTI-QUERY search over a PERSISTED index: ONE pruned scan of
     * the at-rest lists serves every query (the
     * [[GraphAnn.searchIndexMulti]] contract brought to the IVF
     * path — [[searchIndex]] reads the lists once per query; a
     * serving tier answering a query batch reads them once, period).
-    * Each query ranks the centroids and keeps its `nprobe` best
-    * cids; the lists scan is filtered to the UNION of every query's
-    * cids — a STATIC `cid IN (...)` partition filter, so unprobed
-    * list directories never leave disk (PlanSpec asserts it) — and
-    * per-query top-k runs through the bounded heap, so the exchange
-    * carries O(queries × k) rows. The probe table is
-    * queries × nprobe rows, driver-bounded by the multi-query
-    * contract (the routing-table discipline). */
+    *
+    * Plan shape: the query batch is collected on the driver once;
+    * [[probePairs]] scans the centroids and returns queries × nprobe
+    * (query, cid) pairs; the lists scan is filtered to the UNION of
+    * the probed cids — a STATIC `cid IN (...)` partition filter, so
+    * unprobed list directories never leave disk (PlanSpec asserts
+    * it) — and feeds one routed `graft_topk_batch` aggregate that
+    * scores each row only against the queries probing its cell. No
+    * join and no per-pair cast on the scoring path; the single final
+    * merge receives partitions × queries × k heap entries. */
   def searchIndexMulti(spark: org.apache.spark.sql.SparkSession, path: String,
                        idCol: String, vecCol: String,
                        queries: DataFrame, qidCol: String, qvecCol: String,
@@ -1045,23 +1014,20 @@ object IVF {
     * [[currentGeneration]] at session start answers every query
     * batch from the exact (quantizer, lists) pair it captured,
     * paired with that generation's own sidecar, across any
-    * concurrent [[compactIndex]] flip within the grace window. */
+    * concurrent [[compactIndex]] flip within the grace window. Same
+    * plan shape and bounds as [[searchIndexMulti]]. */
   def searchIndexMultiPinned(spark: org.apache.spark.sql.SparkSession,
                              path: String, gen: (String, String),
                              idCol: String, vecCol: String,
                              queries: DataFrame, qidCol: String, qvecCol: String,
                              k: Int, nprobe: Int): DataFrame = {
-    val cents = spark.read.parquet(s"$path/${gen._2}")
-    val probes = multiProbes(cents, queries, qidCol, qvecCol, nprobe)
-      // queries × nprobe rows: materialized once, reused by the cid
-      // collect below and the candidate join
-      .localCheckpoint()
-    val cids = probes.select(col("cid").cast("long")).distinct()
-      .as(org.apache.spark.sql.Encoders.scalaLong).collect().toSeq.sorted
+    val batch = Search.queryBatch(queries, qidCol, qvecCol)
+    val pairs = probePairs(spark.read.parquet(s"$path/${gen._2}"), batch, nprobe)
+    val cids = pairs.map(_._2).distinct.sorted
     val lists = dropTombstoned(spark, s"$path/${gen._1}",
       spark.read.parquet(s"$path/${gen._1}")
         .filter(col("cid").isin(cids: _*))) // union of probed cells
-    multiTopKProbed(lists, probes, idCol, vecCol, k)
+    Search.batchTopK(lists, idCol, vecCol, batch.routed(pairs), Some(col("cid")), k)
   }
 
   /** IVF search: probe the query's `nprobe` best lists, exact re-rank

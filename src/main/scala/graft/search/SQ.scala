@@ -1,7 +1,8 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 import org.apache.spark.sql.graftnative.NativeExpressions.{dotNative => dot, sqAdcNative, sqPackNative}
 
 /** R2 (fifth scale path): IVF with SCALAR-QUANTIZED (SQ8) inverted
@@ -377,16 +378,19 @@ object SQ {
 
   /** MULTI-QUERY search over the persisted SQ8 index — ONE pruned
     * scan of the quantized lists serves every query (the
-    * [[IVF.searchIndexMulti]] contract on the SQ8 layout): per-query
-    * centroid ranking keeps each query's `nprobe` cids, the lists
-    * scan is filtered to the UNION of probed cids (static partition
-    * filter), every surviving code is ADC-scored against its
-    * queries through the fused kernel, per-query top-`rerank`
-    * candidates come off the bounded heap, and ONE exact point-fetch
-    * (the union of all queries' candidate ids as an `In` predicate on
-    * the source scan) re-scores them full-precision before the final
-    * per-query top-k. The exchange carries O(queries × rerank) rows;
-    * the fetch reads O(queries × rerank) source rows. */
+    * [[IVF.searchIndexMulti]] contract on the SQ8 layout). The query
+    * batch is collected on the driver once; [[IVF.probePairs]] scans
+    * the centroids and returns each query's `nprobe` cids (queries ×
+    * nprobe pairs on the driver); the lists scan is filtered to the
+    * UNION of probed cids (static partition filter), every surviving
+    * code is ADC-scored against the queries probing its cell (the
+    * pairs broadcast as a local table) through the fused kernel,
+    * per-query top-`rerank` candidates come off the bounded heap, and
+    * ONE exact point-fetch (the union of all queries' candidate ids
+    * as an `In` predicate on the source scan) re-scores them
+    * full-precision before the final per-query top-k. The exchange
+    * carries O(queries × rerank) rows; the fetch reads
+    * O(queries × rerank) source rows. */
   def searchIndexMulti(spark: SparkSession, path: String,
                        source: DataFrame, idCol: String, vecCol: String,
                        queries: DataFrame, qidCol: String, qvecCol: String,
@@ -394,10 +398,15 @@ object SQ {
     require(rerank >= k, s"need rerank >= k, got rerank=$rerank k=$k")
     val cents = spark.read.parquet(s"$path/centroids")
     val ba = boundsArrays(spark.read.parquet(s"$path/bounds"))
-    val probes = IVF.multiProbes(cents, queries, qidCol, qvecCol, nprobe)
-      .localCheckpoint() // queries x nprobe rows: cid collect + join
-    val cids = probes.select(col("cid").cast("long")).distinct()
-      .as(org.apache.spark.sql.Encoders.scalaLong).collect().toSeq.sorted
+    val batch = Search.queryBatch(queries, qidCol, qvecCol)
+    val pairs = IVF.probePairs(cents, batch, nprobe)
+    val cids = pairs.map(_._2).distinct.sorted
+    val probes = spark.createDataFrame( // queries × nprobe rows
+      java.util.Arrays.asList(pairs.map { case (q, c) =>
+        Row(batch.qidOf(q), batch.vecs(q).toSeq, c) }: _*),
+      StructType(Seq(StructField("qid", batch.qidType),
+        StructField("__qv", ArrayType(DoubleType, containsNull = false)),
+        StructField("cid", LongType, nullable = false))))
     val lp = IVF.listsPath(path) // one pointer read
     val cand = IVF.dropTombstoned(spark, lp, // delete sidecar hidden here too
         spark.read.parquet(lp)

@@ -2,6 +2,7 @@ package graft.search
 
 import graft.functions.VectorF._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.graftnative.{QueryBatch, TopKAggregate}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -60,33 +61,52 @@ object Search {
       .select(col(idCol), col("rank"), round(col("score"), 6).as("score"))
   }
 
-  /** R1 multi-query: broadcast the (small) query set against the
-    * corpus, then per-query top-k via the bounded-heap
-    * `TopKByScore` aggregate (SURVEY §4 item 2). The corpus is
-    * scanned ONCE for all queries, each task keeps a k-buffer per
-    * query (map-side partial aggregation), and the exchange carries
-    * O(queries × k) heap entries — the window formulation shuffles
-    * and sorts EVERY scored row per query, which at 100 TB is the
-    * difference between a broadcast-sized exchange and a full-corpus
-    * one. Tie order (score desc, id asc) is identical, so results
-    * match the sort-based plan and the oracle bit-for-bit. */
+  /** R1 multi-query: per-query exact top-k of a query batch in ONE
+    * pass over the corpus — FlatIP's batch search (reference
+    * `src/pipeline/pipeline.py:126-136,143-159`). The query set is
+    * collected on the driver (the side a broadcast would have
+    * collected) and rides inside the [[org.apache.spark.sql
+    * .graftnative.BatchTopK]] aggregate: the plan is the corpus scan
+    * feeding one `graft_topk_batch` aggregate, with no join, no
+    * exchange of scored rows and no per-pair cast. Each task reads a
+    * row's vector once and keeps a k-heap per query, so the single
+    * final merge receives partitions × queries × k heap entries.
+    * Scores, the (score desc, id asc) tie order and the output
+    * (qid keeps its type; id and rank bigint; score rounded to 6)
+    * match the window-sort formulation bit-for-bit. Rows that share
+    * a qid feed one heap. */
   def multiTopK(docs: DataFrame, idCol: String, vecCol: String,
                 queries: DataFrame, qidCol: String, qvecCol: String,
                 k: Int): DataFrame = {
     requireIntegralId(docs, idCol, "multiTopK")
-    docs
-      .crossJoin(broadcast(queries.select(col(qidCol).as("qid"), col(qvecCol).as("__qv"))))
-      .select(col("qid"), col(idCol), dot(col(vecCol), col("__qv")).as("score"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graftnative.TopKAggregate
-        .topK(col(idCol).cast("long"), col("score"), k).as("__tk"))
-      .select(col("qid"), explode(col("__tk")).as("__e"))
-      .select(col("qid"), col("__e.id").as(idCol), col("__e.rank").as("rank"),
-        round(col("__e.score"), 6).as("score"))
+    batchTopK(docs, idCol, vecCol, queryBatch(queries, qidCol, qvecCol), None, k)
   }
 
-  /** The window-sort formulation of multi-query top-k — kept for A/B
-    * parity testing against the heap aggregate. */
+  /** The query batch of `queries`, collected on the driver once: qid
+    * (any type) and the vector as array<double> — the same exact
+    * widening the dot product applies to a float vector. */
+  private[graft] def queryBatch(queries: DataFrame, qidCol: String,
+                                qvecCol: String): QueryBatch =
+    QueryBatch(queries.schema(qidCol).dataType,
+      queries.select(col(qidCol), toDouble(col(qvecCol))).collect().toSeq
+        .map(r => (r.get(0), if (r.isNullAt(1)) null else r.getSeq[Any](1))))
+
+  /** Per-query top-k of `rows` against `batch` as one `BatchTopK`
+    * aggregate, exploded to (qid, idCol, rank, score). With `cid` the
+    * batch is routed: a row scores only against the queries that probe
+    * its cell. */
+  private[graft] def batchTopK(rows: DataFrame, idCol: String, vecCol: String,
+                               batch: QueryBatch, cid: Option[Column],
+                               k: Int): DataFrame =
+    rows
+      .agg(TopKAggregate.topKBatch(col(idCol).cast("long"), col(vecCol),
+        cid.map(_.cast("long")), batch, k).as("__tk"))
+      .select(explode(col("__tk")).as("__e"))
+      .select(col("__e.qid").as("qid"), col("__e.id").as(idCol),
+        col("__e.rank").as("rank"), round(col("__e.score"), 6).as("score"))
+
+  /** The window-sort formulation of multi-query top-k — the
+    * reference [[multiTopK]]'s batch kernel is tested against. */
   def multiTopKWindow(docs: DataFrame, idCol: String, vecCol: String,
                       queries: DataFrame, qidCol: String, qvecCol: String,
                       k: Int): DataFrame = {

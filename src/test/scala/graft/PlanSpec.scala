@@ -26,15 +26,27 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"))
   }
 
+  /** The scoring-path properties of a batch-kernel plan: scoring and
+    * top-k are one graft_topk_batch aggregate, fed by no pair join,
+    * whose vector input is read as stored — never cast per pair. */
+  private def assertBatchKernel(p: String): Unit = {
+    assert(p.contains("graft_topk_batch("), s"expected the batch top-k kernel:\n$p")
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+      s"the scoring path must not cross-join:\n$p")
+    assert("""graft_topk_batch\([^,]*, cast\(""".r.findFirstIn(p).isEmpty &&
+      !p.contains("graft_dot(cast("), s"no per-pair cast on the scoring path:\n$p")
+  }
+
   test("q11: multi-query top-k runs through the graft_topk heap aggregate, no window sort") {
     val p = plan("q11_knn_multi")
-    assert(p.contains("graft_topk"))
+    assertBatchKernel(p)
     assert(!p.contains("Window"))
   }
 
   test("q10/q11: scoring uses the fused native dot product") {
     assert(plan("q10_knn_exact").contains("graft_dot"))
-    assert(plan("q11_knn_multi").contains("graft_dot"))
+    // q11 scores inside the batch kernel: the same fused dot loop
+    assertBatchKernel(plan("q11_knn_multi"))
   }
 
   test("q33: near-dup candidates meet via bucket equi-join, never a nested-loop pair join") {
@@ -112,7 +124,7 @@ class PlanSpec extends SparkSpec {
 
   test("q124: every dial row runs through the graft_topk heap, no window sort") {
     val p = plan("q124_matryoshka_recall")
-    assert(p.contains("graft_topk"), s"expected the heap aggregate:\n$p")
+    assertBatchKernel(p)
     assert(!p.contains("Window"), s"q124 fell back to a window sort:\n$p")
     assert(!p.contains("SortMergeJoin"), s"q124 sort-merged the recall join:\n$p")
   }
@@ -351,47 +363,33 @@ class PlanSpec extends SparkSpec {
 
   test("IVF probe table: the centroid table is scanned (never broadcast), top-P rides the heap") {
     import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // the round-18 flip of the graph serve's round-17 lesson, applied
-    // to the IVF family before it bites: at derived-K geometry the
-    // centroid table is corpus-proportional (K = ⌈√N⌉), so per-query
-    // probe selection must stream it through the bounded-heap
-    // aggregate with the QUERY SET as the broadcast side
+    import graft.search.{IVF, Search}
+    // at derived-K geometry the centroid table is corpus-proportional
+    // (K = ⌈√N⌉), so the probe step must stream it: the query batch
+    // rides inside the batch top-k aggregate, and neither side is
+    // broadcast or joined
     val path = java.nio.file.Files.createTempDirectory("plan_ivfprobe").toString
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    graft.search.IVF.writeIndex(e, "vec_id", "v", 8, 0, path)
+    IVF.writeIndex(e, "vec_id", "v", 8, 0, path)
     val qs = e.filter(col("vec_id") < 4)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
-    val cents = spark.read.parquet(graft.search.IVF.centroidsPath(path))
-    val df = graft.search.IVF.multiProbes(cents, qs, "qid", "qv", 2)
+    val cents = spark.read.parquet(IVF.centroidsPath(path))
+    val batch = Search.queryBatch(qs, "qid", "qv")
+    // the frame IVF.probePairs collects
+    val df = Search.batchTopK(cents, "cid", "cvec", batch.perRow, None, 2)
     val sp = df.queryExecution.sparkPlan
-    val joins = sp.collect {
-      case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j
-    }
-    assert(joins.size == 1, s"expected the one centroids × queries join:\n$sp")
-    val j = joins.head
-    val build = j.buildSide match {
-      case org.apache.spark.sql.catalyst.optimizer.BuildRight => j.right
-      case _ => j.left
-    }
-    // the broadcast side may scan the QUERY parquet (query-sized by
-    // contract); it must never be the centroid table
-    val buildScans = build.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-    }
-    assert(buildScans.flatMap(_.relation.location.rootPaths.map(_.toString))
-        .forall(!_.contains("centroids")),
-      s"the corpus-proportional centroid table must never be the broadcast side:\n$sp")
-    val streamed = if (build eq j.right) j.left else j.right
-    assert(streamed.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-      }.flatMap(_.relation.location.rootPaths.map(_.toString))
-      .exists(_.contains("centroids")),
-      s"the centroid table must be the streamed scan side:\n$sp")
+    assert(sp.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }.isEmpty,
+      s"the probe step must not join:\n$sp")
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("graft_topk"), s"expected the heap top-P:\n$p")
-    assert(df.count() == 4L * 2)
+    assert(!p.contains("BroadcastExchange"), s"nothing may be broadcast:\n$p")
+    val scans = sp.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.flatMap(_.relation.location.rootPaths.map(_.toString))
+    assert(scans.size == 1 && scans.head.contains("centroids"),
+      s"the centroid table must be the one scanned side:\n$sp")
+    assert(p.contains("graft_topk_batch"), s"expected the batch heap top-P:\n$p")
+    assert(IVF.probePairs(cents, batch, 2).size == 4 * 2)
   }
 
   test("two-level routing: the member scan is spart-partition-pruned, supercell table is the streamed side") {
@@ -609,8 +607,8 @@ class PlanSpec extends SparkSpec {
     val scans = "FileScan parquet".r.findAllIn(p).size
     assert(scans == 1 && p.contains("ivf_idx0"),
       s"expected ONE lists scan serving the whole query batch, got $scans:\n$p")
-    // per-query top-k through the bounded heap, never a window sort
-    assert(p.contains("graft_topk"), s"expected the heap aggregate:\n$p")
+    // per-query top-k through the batch kernel, never a window sort
+    assertBatchKernel(p)
     assert(!p.contains("SortMergeJoin"))
   }
 
@@ -635,7 +633,7 @@ class PlanSpec extends SparkSpec {
       s"expected exactly ONE pinned lists scan for the batch:\n$p")
     assert(p.contains("PartitionFilters: [cid") && p.contains(" IN "),
       s"expected the static cid IN partition filter:\n$p")
-    assert(p.contains("graft_topk"), s"expected the heap top-k:\n$p")
+    assertBatchKernel(p)
     assert(!p.contains("SortMergeJoin"))
     // across a concurrent flip the pin still reads ITS generation —
     // the scan path names the pinned lists, not the flipped ones

@@ -106,6 +106,26 @@ class SQSpec extends SparkSpec {
     assert(overlap >= 8, s"recall@10 too low: $overlap/10")
   }
 
+  test("SQ8 multi-query serve equals the per-query serves at every nprobe") {
+    val path = "/tmp/graft_test/sq_index_multi"
+    SQ.writeIndex(e, "vec_id", "v", 8, path)
+    val qs = e.filter(col("vec_id") < 4).select(col("vec_id").as("qid"), col("v").as("qv"))
+    Seq(1, 3, 8).foreach { p =>
+      val multi = SQ.searchIndexMulti(spark, path, e, "vec_id", "v", qs, "qid", "qv",
+          10, p, RetrievalQueries.sqRerank)
+        .select("qid", "vec_id", "rank", "score")
+        .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
+      val single = (0L until 4L).flatMap { q =>
+        SQ.searchIndex(spark, path, e, "vec_id", "v",
+            e.filter(col("vec_id") === q).select(col("v").as("qv")), "qv",
+            10, p, RetrievalQueries.sqRerank)
+          .select(lit(q).as("qid"), col("vec_id"), col("rank"), col("score"))
+          .as[(Long, Long, Long, Double)].collect()
+      }.sortBy(r => (r._1, r._3))
+      assert(multi == single, s"nprobe=$p")
+    }
+  }
+
   test("SQ8 delete: tombstone hides from ADC serve now, compaction removes later") {
     import graft.search.IVF
     val path = "/tmp/graft_test/sq_delete"

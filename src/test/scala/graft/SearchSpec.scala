@@ -72,6 +72,111 @@ class SearchSpec extends SparkSpec {
     assert(heap.toSeq == win.toSeq)
   }
 
+  /** The sf0.001 corpus with the batch kernel's edge rows, vectors
+    * as stored (array<float>): exact copies of 20 vectors under new
+    * ids (score ties broken by id), a NULL vector, a length mismatch
+    * and a NULL element. */
+  private lazy val edgeCorpus = {
+    val base = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").as("v"))
+    val ties = base.filter(col("vec_id") < 20)
+      .select((col("vec_id") + 1000000L).as("vec_id"), col("v"))
+    val edge = spark.sql("""SELECT * FROM VALUES
+        (900001L, CAST(NULL AS ARRAY<FLOAT>)),
+        (900002L, array(CAST(0.5 AS FLOAT), CAST(0.5 AS FLOAT))),
+        (900003L, array_repeat(CAST(NULL AS FLOAT), 64))
+      AS t(vec_id, v)""")
+    base.unionByName(ties).unionByName(edge)
+  }
+
+  /** Query rows over the first 8 vectors; rows 6 and 7 repeat qids 0
+    * and 1 with other vectors (one heap per qid). */
+  private def edgeQueries(corpus: org.apache.spark.sql.DataFrame) =
+    corpus.filter(col("vec_id") < 8)
+      .select((col("vec_id") % 6).as("qid"), col("v").as("qv"))
+
+  private def ranked(df: org.apache.spark.sql.DataFrame) =
+    df.select("qid", "vec_id", "rank", "score")
+      .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
+
+  test("batch kernel multiTopK equals the window sort on float and double vectors") {
+    Seq("array<float>", "array<double>").foreach { t =>
+      val corpus = edgeCorpus.select(col("vec_id"), col("v").cast(t).as("v"))
+      val qs = edgeQueries(corpus)
+      val heap = ranked(Search.multiTopK(corpus, "vec_id", "v", qs, "qid", "qv", 7))
+      val win = ranked(Search.multiTopKWindow(corpus, "vec_id", "v", qs, "qid", "qv", 7))
+      assert(heap == win, s"$t: batch kernel diverges from the window sort")
+      assert(heap.size == 6 * 7)
+      // the self-match ties its exact copy; the lower id ranks first
+      assert(heap.filter(r => r._1 == 2L && r._3 <= 2L).map(_._2) == Seq(2L, 1000002L))
+      // many partitions: partial heaps really merge
+      assert(ranked(Search.multiTopK(corpus.repartition(13), "vec_id", "v",
+        qs, "qid", "qv", 7)) == win, s"$t: merged partial heaps diverge")
+      assert(Search.multiTopK(corpus.filter(lit(false)), "vec_id", "v",
+        qs, "qid", "qv", 7).count() == 0)
+    }
+  }
+
+  test("batch kernel output schema: qid keeps its type, id and rank are bigint") {
+    val corpus = edgeCorpus.select(col("vec_id").cast("int").as("vec_id"), col("v"))
+    Seq("int", "string").foreach { t =>
+      val qs = edgeQueries(corpus).select(col("qid").cast(t).as("qid"), col("qv"))
+      val out = Search.multiTopK(corpus, "vec_id", "v", qs, "qid", "qv", 3)
+      assert(out.schema.map(f => f.name -> f.dataType.simpleString) == Seq(
+        "qid" -> t, "vec_id" -> "bigint", "rank" -> "bigint", "score" -> "double"))
+      assert(out.count() == 6 * 3)
+    }
+  }
+
+  test("IVF probe step: the batch kernel returns the joined heap's (qid, cid) set, nprobe 1..K") {
+    import graft.search.IVF
+    import org.apache.spark.sql.graftnative.TopKAggregate
+    val path = java.nio.file.Files.createTempDirectory("graft_probe").toString
+    IVF.writeIndex(emb, "vec_id", "v", 8, 0, path)
+    val cents = spark.read.parquet(IVF.centroidsPath(path))
+    // float query vectors against the double centroids
+    val qs = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .filter(col("vec_id") < 16).select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val batch = Search.queryBatch(qs, "qid", "qv")
+    (1 to 8).foreach { p =>
+      // the joined formulation: centroids × broadcast queries, one
+      // bounded heap per qid
+      val want = cents.crossJoin(broadcast(qs))
+        .select(col("qid"), col("cid"), VectorF.dot(col("qv"), col("cvec")).as("s"))
+        .groupBy("qid")
+        .agg(TopKAggregate.topK(col("cid").cast("long"), col("s"), p).as("tk"))
+        .select(col("qid"), explode(col("tk.id")).as("cid"))
+        .as[(Long, Long)].collect().toSet
+      val got = IVF.probePairs(cents, batch, p)
+        .map { case (q, c) => (batch.qidOf(q).asInstanceOf[Long], c) }
+      assert(got.size == 16 * p && got.toSet == want, s"nprobe=$p")
+    }
+  }
+
+  test("IVF multi-query serves equal the per-query serves at every nprobe") {
+    import graft.search.IVF
+    val path = java.nio.file.Files.createTempDirectory("graft_ivfmulti").toString
+    IVF.writeIndex(emb, "vec_id", "v", 8, 0, path)
+    val cents = spark.read.parquet(IVF.centroidsPath(path))
+    val assigned = IVF.assign(emb, "vec_id", "v", cents).localCheckpoint()
+    val qs = emb.filter(col("vec_id") < 4).select(col("vec_id").as("qid"), col("v").as("qv"))
+    def perQuery(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
+      (0L until 4L).flatMap { q =>
+        f(emb.filter(col("vec_id") === q).select(col("v").as("qv")))
+          .select(lit(q).as("qid"), col("vec_id"), col("rank"), col("score"))
+          .as[(Long, Long, Long, Double)].collect()
+      }.sortBy(r => (r._1, r._3))
+    Seq(1, 3, 8).foreach { p =>
+      assert(ranked(IVF.searchIndexMulti(spark, path, "vec_id", "v", qs, "qid", "qv", 10, p)) ==
+        perQuery(q => IVF.searchIndex(spark, path, "vec_id", "v", q, "qv", 10, p)),
+        s"searchIndexMulti, nprobe=$p")
+      assert(ranked(IVF.ivfMultiTopKAssigned(assigned, cents, "vec_id", "v",
+          qs, "qid", "qv", 10, p)) ==
+        perQuery(q => IVF.ivfTopKAssigned(assigned, cents, "vec_id", "v", q, "qv", 10, p)),
+        s"ivfMultiTopKAssigned, nprobe=$p")
+    }
+  }
+
   test("IVF: assignment covers the corpus, probe-pruned top-k is a ranked subset") {
     import graft.search.IVF
     val cents = IVF.centroids(emb, "vec_id", "v", 8)

@@ -84,6 +84,59 @@ class VectorFSpec extends SparkSpec {
     diffs.foreach(d => assert(d == 0.0))
   }
 
+  test("DotProduct reads array<float> directly: bit-identical to the double-cast HOF, interpreted and codegen'd") {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select(col("embedding").as("f"))
+    val q = emb.limit(1).select(col("f").as("g"), col("f").cast("array<double>").as("d"))
+    val edge = spark.sql("""SELECT * FROM VALUES
+        (array(CAST(0.1 AS FLOAT), CAST(NULL AS FLOAT)),
+         array(CAST(1.5 AS FLOAT), CAST(2 AS FLOAT)), array(0.3D, 0.7D)),
+        (array(CAST(0.1 AS FLOAT), CAST(0.2 AS FLOAT)),
+         array(CAST(1.5 AS FLOAT), CAST(NULL AS FLOAT)), array(0.3D, CAST(NULL AS DOUBLE))),
+        (array(CAST(0.1 AS FLOAT)),
+         array(CAST(1.5 AS FLOAT), CAST(2 AS FLOAT)), array(0.3D, 0.1D)),
+        (CAST(NULL AS ARRAY<FLOAT>), array(CAST(1 AS FLOAT)), CAST(NULL AS ARRAY<DOUBLE>))
+      AS t(f, g, d)""")
+    // through parquet, so the projection is planned (and codegen'd),
+    // not folded over a local relation
+    val path = java.nio.file.Files.createTempDirectory("graft_fdot").toString
+    emb.crossJoin(q).unionByName(edge).write.mode("overwrite").parquet(path)
+    val rows = spark.read.parquet(path)
+    def bits(c: org.apache.spark.sql.Column): Seq[Option[Long]] =
+      rows.select(c.as("x")).as[Option[Double]].collect().toSeq
+        .map(_.map(java.lang.Double.doubleToRawLongBits))
+    def check(mode: String): Unit =
+      Seq(("f", "g"), ("f", "d"), ("d", "f")).foreach { case (a, b) =>
+        val fused = bits(dot(col(a), col(b)))
+        assert(fused == bits(dotHof(toDouble(col(a)), toDouble(col(b)))), s"$mode ${a}·$b")
+        assert(fused.count(_.isEmpty) == 4, s"$mode ${a}·$b: the NULL cases")
+      }
+    check("codegen")
+    try {
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      check("interpreted")
+    } finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+    // the fused dot reads the float column as stored: no cast to
+    // array<double> in the plan
+    val p = rows.select(dot(col("f"), col("g"))).queryExecution.executedPlan.toString
+    assert(p.contains("graft_dot(f#") && !p.contains("as array<double>"), p)
+  }
+
+  test("DotProduct casts an array<int> input to double, never to float") {
+    val df = Seq((Seq(1, 2, 3), Seq(0.5f, 0.25f, 0.125f))).toDF("i", "f")
+    val e = df.select(dot(col("i"), col("f")).as("x"))
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+    val elems = e.queryExecution.analyzed.expressions.flatMap(_.collect {
+      case d: org.apache.spark.sql.graftnative.DotProduct => d.children.map(_.dataType)
+    }).flatten.collect { case ArrayType(t, _) => t }
+    assert(elems == Seq(DoubleType, FloatType))
+    assert(e.as[Double].head() == 0.5 + 0.5 + 0.375)
+  }
+
   test("planeCoef gives distinct hyperplanes across bits") {
     val df = spark.range(0, 32).toDF("i")
     val planes = (0 until 12).map { b =>
