@@ -1,6 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
+  /** A JSON string literal with backslash, quote and EVERY control
+    * character below 0x20 escaped — the one escaper of the harness
+    * (Bench's stdout, the oracle_sql.json Verify and Scratch write):
+    * a raw tab or CR in a declared oracle query would make a strict
+    * JSON reader (Python's json.load) reject the whole file and
+    * silently zero the correctness signal. */
   private[graft] def jstr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
@@ -13,24 +18,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Every global rank window in the engine sits AFTER a limit(k) —
-    // k-row inputs in one task — but WindowExec warns "No Partition
-    // Defined" unconditionally on an empty partition spec, and Spark 4
-    // constant-folds any literal partition key away (so the
-    // partitionBy(lit(0)) idiom can't silence it plan-side). The
-    // warning is a false positive for post-limit windows; mute that
-    // one logger in the harness mains rather than globally.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window", org.apache.logging.log4j.Level.ERROR)
+    val spark = Sessions.local(defaultCpus = 4)
     // session warm-up: JVM/codegen/scheduler/parquet-reader spin-up
     // should not be attributed to whichever query happens to run
     // first. Touch the BIG fact tables too (lineitem, events,

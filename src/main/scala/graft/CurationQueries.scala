@@ -621,18 +621,18 @@ object CurationQueries {
         graft.streaming.ExactlyOnce.stageDir(new java.io.File(mut), bid).mkdirs()
       deliver()
       if (bid == 2L) { // crash AFTER the promote, BEFORE the marker
-        val m = new java.io.File(mut + "__applied", s"b$bid")
+        val m = new java.io.File(Generations.ledger(mut), s"b$bid")
         require(m.delete(), s"q188: batch $bid must have committed a marker")
       }
       deliver() // the at-least-once re-delivery, every batch
       require(graft.streaming.ExactlyOnce.isApplied(
-          new java.io.File(mut + "__applied"), bid),
+          Generations.ledger(mut), bid),
         s"q188: batch $bid must end committed in the ledger")
-    }, sweepLedgers = Seq(new java.io.File(mut + "__applied")))
+    }, sweepLedgers = Seq(Generations.ledger(mut)))
     // ledger RETIREMENT (round 18, the q193 discipline): the durable
     // checkpoint's watermark sweep retired every committed marker;
     // the one-shot-build gate below proves it re-applied nothing
-    val q188Markers = Option(new java.io.File(mut + "__applied").listFiles())
+    val q188Markers = Option(Generations.ledger(mut).listFiles())
       .toSeq.flatten.map(_.getName)
     require(q188Markers.isEmpty,
       s"q188: the post-drain sweep must retire every marker, got $q188Markers")

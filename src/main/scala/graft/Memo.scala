@@ -46,9 +46,14 @@ object Memo {
       if (f.isDirectory)
         Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk)
       else Seq(f)
-    walk(new java.io.File(dir))
+    val listing = walk(new java.io.File(dir))
       .map(f => s"${f.getPath}:${f.length}:${f.lastModified}")
-      .mkString("|").hashCode.toString
+      .mkString("|")
+    // a real digest: a 32-bit String.hashCode collides on equal-hash,
+    // equal-length names ("Aa" ↔ "BB") and would serve the stale entry
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(listing.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
   }
 
   /** Memoize `build` per (session, dir-content, tag), materialized

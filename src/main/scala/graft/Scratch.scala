@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Throwaway profiling experiments (not part of the library surface).
   * Edit freely: time a query, dump a plan, probe a cross-engine
   * numeric question — whatever the current investigation needs. */
 object Scratch {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(defaultCpus = 16)
     // round 9: dump a named-query subset to parquet for a fast local
     // oracle spot-check (tools/oracle_check.py on the partial dir)
     if (args.contains("dumpsubset")) {
@@ -26,10 +17,9 @@ object Scratch {
           .write.mode("overwrite").parquet(s"$out/$name")
         println(s"dumped $name")
       }
-      def q(x: String) = "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t") + "\""
       val json = SparkEntry.oracleSql
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+        .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }
+        .mkString("{", ",", "}")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$out/oracle_sql.json"), json)
       spark.stop(); return

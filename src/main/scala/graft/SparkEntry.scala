@@ -540,7 +540,7 @@ object Queries {
       // rebuilds ([[rebuildPostings]]) pass preserveLedger: wiping
       // the markers would turn a re-delivered committed batch into
       // doubled postings on a rebuild that already re-tokenized it.
-      if (!preserveLedger) graft.FileTree.delete(postingsLedger(target))
+      if (!preserveLedger) graft.FileTree.delete(Generations.ledger(target))
     }
     post.write.mode(mode)
       .option("path", target)
@@ -570,7 +570,7 @@ object Queries {
       val p = PipelineQueries.roundtripPath(dir, s"src_$tag")
       graft.FileTree.delete(new java.io.File(p))
       graft.FileTree.delete(new java.io.File(BM25.tombPath(p)))
-      graft.FileTree.delete(postingsLedger(p))
+      graft.FileTree.delete(Generations.ledger(p))
       writePostings(s, docsOf, tbl, p, "overwrite")
       tbl
     }
@@ -596,7 +596,7 @@ object Queries {
     val srcPath = postingsLivePath(s, srcTbl)
     s.sql(s"DROP TABLE IF EXISTS $tbl")
     graft.FileTree.delete(new java.io.File(BM25.tombPath(path)))
-    graft.FileTree.delete(postingsLedger(path))
+    graft.FileTree.delete(Generations.ledger(path))
     graft.FileTree.delete(new java.io.File(path))
     graft.FileTree.copy(new java.io.File(srcPath), new java.io.File(path))
     val buckets = bucketCountOf(s, srcTbl)
@@ -627,13 +627,6 @@ object Queries {
       .repartition(buckets, col("term"))
   }
 
-  /** The postings family's committed-batch ledger — a sibling of the
-    * generation paths (`<base>__applied`), the
-    * [[graft.dedup.Dedup]] register's convention: the live data path
-    * flips across [[compactPostings]], stream history must not. */
-  private[graft] def postingsLedger(path: String): java.io.File =
-    new java.io.File(path.replaceAll("__gen\\d+$", "") + "__applied")
-
   /** [[writePostings]](append) with EXACTLY-ONCE semantics under
     * streaming re-delivery — the
     * [[graft.search.IVF.appendToIndexIdempotent]] contract on the
@@ -651,7 +644,7 @@ object Queries {
                                              tbl: String, batchId: Long): Unit = {
     import graft.streaming.ExactlyOnce
     val live0 = postingsLivePath(s, tbl)
-    val ledger = postingsLedger(live0)
+    val ledger = Generations.ledger(live0)
     if (ExactlyOnce.isApplied(ledger, batchId)) return
     val debris = ExactlyOnce.stageDir(new java.io.File(live0), batchId)
     if (debris.isDirectory) {
@@ -757,23 +750,14 @@ object Queries {
     // idempotent-append stage under this path is a half-landed ingest
     // batch whose re-delivery would double whatever a rewrite folds
     graft.streaming.ExactlyOnce.sweepStages(new java.io.File(path),
-      postingsLedger(path), failOnInflight = true, s"compactPostings($tbl)")
-    val base = path.replaceAll("__gen\\d+$", "")
-    val baseName = new java.io.File(base).getName
-    val parent = new java.io.File(base).getParentFile
-    val siblings = Option(parent.listFiles())
-      .toSeq.flatten.map(_.getName)
-      .filter(_.startsWith(baseName + "__gen"))
-      .flatMap(n => scala.util.Try(
-        n.stripPrefix(baseName + "__gen").toInt).toOption)
-    // claim (derive + fence, the shared WriterFence.claim protocol):
-    // two compactions racing from the same listing derive the same v
-    // — the loser fails loudly before any staged bytes or metastore
-    // DDL; a crashed writer's marker burns one number, never wedges
-    val fencePrefix = baseName + "__WRITER__v"
-    val v = graft.WriterFence.claim(parent, fencePrefix, siblings,
-      s"compactPostings($tbl)")
-    val stagePath = base + "__gen" + v
+      Generations.ledger(path), failOnInflight = true, s"compactPostings($tbl)")
+    // claim (derive + fence, [[Generations.claim]]): two compactions
+    // racing from the same listing derive the same v — the loser
+    // fails loudly before any staged bytes or metastore DDL; a crashed
+    // writer's marker burns one number, never wedges
+    val gens = Generations.siblings(path)
+    val v = Generations.claim(gens, s"compactPostings($tbl)")
+    val stagePath = Generations.siblingPath(path, v)
     // the intermediate metastore names are VERSIONED with the fence:
     // un-versioned `tbl__stage`/`tbl__old` were a shared resource a
     // STAGGERED second writer (fenced at v+1) could DROP out from
@@ -816,13 +800,13 @@ object Queries {
       .option("path", stagePath)
       .bucketBy(buckets, "term").sortBy("term")
       .saveAsTable(stage)
-    // ORDERED commit (the flipCurrent guard's metastore twin): if a
+    // ORDERED commit (the Generations.flip guard's metastore twin): if a
     // staggered newer writer already swapped the table while this one
     // was staging, committing would silently replace its generation
     // with ours — sourced from a now-superseded path, resurrecting
     // whatever the newer sidecar was hiding. Fail loudly instead; the
     // staged table/path are orphaned and GC'd. (Read-then-rename
-    // window documented at IVF.flipCurrent; a metastore with
+    // window documented at Generations.flip; a metastore with
     // transactional DDL closes it exactly.)
     if (postingsLivePath(s, tbl) != path) {
       s.sql(s"DROP TABLE IF EXISTS $stage")
@@ -835,22 +819,11 @@ object Queries {
     s.sql(s"ALTER TABLE $tbl RENAME TO $old")
     s.sql(s"ALTER TABLE $stage RENAME TO $tbl")
     s.sql(s"DROP TABLE $old") // external: files remain as the grace window
-    graft.WriterFence.sweep(parent, fencePrefix, v)
     // GC generations two+ cycles old (with their sidecars); the
     // immediately superseded `path` keeps its files AND sidecar as
     // the in-flight readers' coherent grace window
-    val keep = Set(new java.io.File(stagePath).getName,
-      new java.io.File(path).getName,
-      new java.io.File(BM25.tombPath(stagePath)).getName,
-      new java.io.File(BM25.tombPath(path)).getName)
-    Option(new java.io.File(base).getParentFile.listFiles()).toSeq.flatten
-      .filter { f =>
-        val n = f.getName
-        f.isDirectory && !keep.contains(n) &&
-          (n == baseName || n.startsWith(baseName + "__gen") ||
-            n == new java.io.File(BM25.tombPath(base)).getName)
-      }
-      .foreach(graft.FileTree.delete)
+    Generations.commit(gens, v, keep = Seq(stagePath, path)
+      .map(new java.io.File(_).getName), s"compactPostings($tbl)")
     // drop pin tables whose generation left the grace window — their
     // files are gone, a read would fail loudly anyway; this is
     // metastore hygiene (metadata-only, external locations)
@@ -939,7 +912,7 @@ object Queries {
     // (the SQ.rebuildIndex / Dedup.rebuildRegister discipline on the
     // lexical family)
     graft.streaming.ExactlyOnce.sweepStages(new java.io.File(livePath),
-      postingsLedger(livePath), failOnInflight = true, s"rebuildPostings($tbl)")
+      Generations.ledger(livePath), failOnInflight = true, s"rebuildPostings($tbl)")
     val td = new java.io.File(BM25.tombPath(livePath))
     val src =
       if (!td.isDirectory) docs
@@ -1437,19 +1410,19 @@ object Queries {
       writePostingsIdempotent(s, b, tbl, bid)
       if (bid == 2L) { // crash AFTER the promote, BEFORE the marker
         val m = new java.io.File(
-          postingsLedger(postingsLivePath(s, tbl)), s"b$bid")
+          Generations.ledger(postingsLivePath(s, tbl)), s"b$bid")
         require(m.delete(), s"q186: batch $bid must have committed a marker")
       }
       writePostingsIdempotent(s, b, tbl, bid) // the re-delivery
       require(graft.streaming.ExactlyOnce.isApplied(
-          postingsLedger(postingsLivePath(s, tbl)), bid),
+          Generations.ledger(postingsLivePath(s, tbl)), bid),
         s"q186: batch $bid must end committed in the ledger")
-    }, sweepLedgers = Seq(postingsLedger(postingsLivePath(s, tbl))))
+    }, sweepLedgers = Seq(Generations.ledger(postingsLivePath(s, tbl))))
     val live = postingsLivePath(s, tbl)
     // ledger RETIREMENT (round 18): the watermark sweep retired every
     // committed marker; the row-for-row gate below proves it
     // re-applied nothing
-    val q186Markers = Option(postingsLedger(live).listFiles())
+    val q186Markers = Option(Generations.ledger(live).listFiles())
       .toSeq.flatten.map(_.getName)
     require(q186Markers.isEmpty,
       s"q186: the post-drain sweep must retire every marker, got $q186Markers")

@@ -159,7 +159,7 @@ object Dedup {
     // inheriting a dead stream's applied set would silently skip
     // batches); the fingerprint-upgrade rebuild goes through
     // [[writeRegisterData]] directly — maintenance preserves it
-    graft.FileTree.delete(registerLedger(path))
+    graft.FileTree.delete(graft.Generations.ledger(path))
     writeRegisterData(bands, path, buckets)
   }
 
@@ -170,10 +170,10 @@ object Dedup {
   private def writeRegisterData(bands: DataFrame, path: String,
                                 buckets: Int): Unit = {
     val base = new java.io.File(path)
+    val ledger = graft.Generations.ledger(path)
     Option(base.getParentFile.listFiles()).toSeq.flatten
       .filter(f => (f.getName == base.getName ||
-          f.getName.startsWith(base.getName + "__")) &&
-        !f.getName.endsWith("__applied"))
+          f.getName.startsWith(base.getName + "__")) && f != ledger)
       .foreach(graft.FileTree.delete)
     bands.repartition(buckets, col("sigbucket"))
       .write.mode("overwrite").partitionBy("sigbucket").parquet(path)
@@ -200,7 +200,8 @@ object Dedup {
     // would turn the next crash's re-delivery of a committed batch
     // into doubled bands on a rebuild that already re-derived them)
     graft.streaming.ExactlyOnce.sweepStages(new java.io.File(livePath),
-      registerLedger(livePath), failOnInflight = true, "Dedup.rebuildRegister")
+      graft.Generations.ledger(livePath), failOnInflight = true,
+      "Dedup.rebuildRegister")
     val src =
       if (!hasRegisterTomb(livePath)) bands
       else {
@@ -286,16 +287,6 @@ object Dedup {
         .isEmpty) path
     else compactRegister(spark, path, buckets)
 
-  /** The register family's committed-batch ledger — a SIBLING of the
-    * generation paths (`<base>__applied`, next to `__tomb` and
-    * `__genN`), because the register path itself is a scanned parquet
-    * dir and flips across [[compactRegister]]: whether a batch was
-    * applied is a property of the register, not of one generation.
-    * [[writeRegister]]'s CREATE clears it with the other siblings —
-    * a fresh register legitimately has no stream history. */
-  private def registerLedger(path: String): java.io.File =
-    new java.io.File(path.replaceAll("__gen\\d+$", "") + "__applied")
-
   /** [[appendToRegister]] with EXACTLY-ONCE semantics under streaming
     * re-delivery — [[graft.search.IVF.appendToIndexIdempotent]]'s
     * contract on the dedup artifact ([[graft.streaming.ExactlyOnce]]
@@ -312,7 +303,8 @@ object Dedup {
                                  path: String, bands: DataFrame,
                                  buckets: Int, batchId: Long): String = {
     import graft.streaming.ExactlyOnce
-    val ledger = registerLedger(path)
+    val ledger = graft.Generations.ledger(path)
+    val gens = graft.Generations.siblings(path)
     if (ExactlyOnce.isApplied(ledger, batchId)) {
       // return the path the batch LANDED in (recorded with the
       // marker), NOT the caller's threaded path: the register has no
@@ -330,16 +322,8 @@ object Dedup {
         .filter(p => new java.io.File(p).isDirectory)
       return recorded.getOrElse {
         if (new java.io.File(path).isDirectory) path
-        else {
-          val base = path.replaceAll("__gen\\d+$", "")
-          val baseName = new java.io.File(base).getName
-          val gens = Option(new java.io.File(base).getParentFile.listFiles())
-            .toSeq.flatten
-            .filter(f => f.isDirectory && f.getName.startsWith(baseName + "__gen"))
-            .flatMap(f => scala.util.Try(
-              f.getName.stripPrefix(baseName + "__gen").toInt).toOption)
-          if (gens.isEmpty) base else base + "__gen" + gens.max
-        }
+        else graft.Generations.versions(gens).maxOption
+          .fold(graft.Generations.baseOf(path))(graft.Generations.siblingPath(path, _))
       }
     }
     // crash-debris probe across the WHOLE register family: a prior
@@ -353,12 +337,8 @@ object Dedup {
     // so the debris is scrubbed on re-delivery (the no-stage-debris
     // discipline the other families gate on) rather than deferred to
     // generation GC.
-    val base = path.replaceAll("__gen\\d+$", "")
-    val baseName = new java.io.File(base).getName
-    val family = new java.io.File(base) +:
-      Option(new java.io.File(base).getParentFile.listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory && f.getName.startsWith(baseName + "__gen"))
-    family.foreach { dir =>
+    (new java.io.File(graft.Generations.baseOf(path)) +:
+        graft.Generations.generationDirs(gens)).foreach { dir =>
       val debris = ExactlyOnce.stageDir(dir, batchId)
       if (debris.isDirectory) {
         ExactlyOnce.scrub(dir, batchId)
@@ -420,39 +400,20 @@ object Dedup {
     // idempotent-append stage under this path is a half-landed ingest
     // batch whose re-delivery would double whatever a rewrite folds
     graft.streaming.ExactlyOnce.sweepStages(new java.io.File(path),
-      registerLedger(path), failOnInflight = true, "Dedup.compactRegister")
-    val base = path.replaceAll("__gen\\d+$", "")
-    val baseName = new java.io.File(base).getName
-    val parent = new java.io.File(base).getParentFile
-    val siblings = Option(parent.listFiles()).toSeq.flatten.map(_.getName)
-      .filter(_.startsWith(baseName + "__gen"))
-      .flatMap(n => scala.util.Try(
-        n.stripPrefix(baseName + "__gen").toInt).toOption)
-    // claim (derive + fence, the shared WriterFence.claim protocol):
-    // the loser of a same-version race fails loudly before staging,
-    // the committer sweeps to v
-    val fencePrefix = baseName + "__WRITER__v"
-    val v = graft.WriterFence.claim(parent, fencePrefix, siblings,
+      graft.Generations.ledger(path), failOnInflight = true,
       "Dedup.compactRegister")
-    val stagePath = base + "__gen" + v
+    // claim (derive + fence): the loser of a same-version race fails
+    // loudly before staging
+    val gens = graft.Generations.siblings(path)
+    val v = graft.Generations.claim(gens, "Dedup.compactRegister")
+    val stagePath = graft.Generations.siblingPath(path, v)
     liveRegister(spark, path, spark.read.parquet(path))
       .repartition(buckets, col("sigbucket"))
       .write.mode("overwrite").partitionBy("sigbucket").parquet(stagePath)
-    graft.WriterFence.sweep(parent, fencePrefix, v)
     // GC generations two+ cycles old (with sidecars); keep the new
     // generation and the immediately superseded `path` + its sidecar
-    val keep = Set(new java.io.File(stagePath).getName,
-      new java.io.File(path).getName,
-      new java.io.File(registerTombPath(stagePath)).getName,
-      new java.io.File(registerTombPath(path)).getName)
-    Option(parent.listFiles()).toSeq.flatten
-      .filter { f =>
-        val n = f.getName
-        f.isDirectory && !keep.contains(n) &&
-          (n == baseName || n.startsWith(baseName + "__gen") ||
-            n == new java.io.File(registerTombPath(base)).getName)
-      }
-      .foreach(graft.FileTree.delete)
+    graft.Generations.commit(gens, v, keep = Seq(stagePath, path)
+      .map(new java.io.File(_).getName), "Dedup.compactRegister")
     stagePath
   }
 

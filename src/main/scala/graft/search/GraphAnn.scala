@@ -581,7 +581,7 @@ object GraphAnn {
 
   /** Delete every cell version not resolved by any of `keepRoots`'
     * visibility versions — the pool half of generation GC (the
-    * directory half is [[staleGenerations]]). Orphans from crashed
+    * directory half is [[graft.Generations.commit]]). Orphans from crashed
     * appends (versions above every kept V_c) sweep too: the claim
     * protocol guarantees the caller's own fresh version is the
     * maximum, and a re-delivered batch re-stages under a NEW claim,
@@ -827,12 +827,7 @@ object GraphAnn {
     // prior index would otherwise shadow or pollute the tables this
     // build is about to write — readers would resolve stale state
     // instead of the new index
-    if (new java.io.File(s"$path/CURRENT").isFile) {
-      java.nio.file.Files.delete(java.nio.file.Paths.get(s"$path/CURRENT"))
-      Option(new java.io.File(path).listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory && f.getName.startsWith("gen__v"))
-        .foreach(graft.FileTree.delete)
-    }
+    graft.Generations.reset(generations(path))
     graft.FileTree.delete(cellsRoot(path))
     // a pre-pool index at this path left partitioned nodes/meta
     // tables the v2 layout never reads — dead bytes a long-lived
@@ -1116,7 +1111,7 @@ object GraphAnn {
     }
     writeCells(rewritten, idx, v)
     setCellsVersion(path, v) // COMMIT — atomic, all touched cells at once
-    graft.WriterFence.sweep(new java.io.File(idx), FencePrefix, v)
+    graft.Generations.release(generations(idx), v)
     // per-part grace GC: keep the committed version, the immediately
     // superseded LIVE resolution (the one-cycle window for in-flight
     // readers of this generation), AND — the gcCells predicate, which
@@ -1158,10 +1153,7 @@ object GraphAnn {
     * the next [[gcCells]] sweeps. */
   private def survivingGenRoots(spark: SparkSession,
                                 idxPath: String): Seq[(String, (Int, Set[Int]))] = {
-    val gens = Option(new java.io.File(idxPath).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("gen__v"))
-      .map(_.getPath)
-    (gens :+ idxPath)
+    (graft.Generations.generationDirs(generations(idxPath)).map(_.getPath) :+ idxPath)
       .filter(r => new java.io.File(r, "CELLS").isFile &&
         new java.io.File(r, "routing").isDirectory)
       .flatMap { r =>
@@ -1296,7 +1288,7 @@ object GraphAnn {
 
   // ---------- generations: the IVF CURRENT-pointer contract ----------
 
-  /** The graph index carries [[IVF]]'s versioned-generation contract:
+  /* The graph index carries [[IVF]]'s versioned-generation contract:
     * a generation is ONE consistency unit — the four tables
     * (nodes/routing/meta/params) one build wrote together, since
     * nodes are partitioned under the exact routing they were assigned
@@ -1304,9 +1296,8 @@ object GraphAnn {
     * the BASE layout (the four tables directly under `path`, no
     * pointer — generation name ""); each in-place [[refreshRouting]]
     * stages a complete new index under `path/gen__vN/` and commits it
-    * by atomically replacing the one-line `path/CURRENT` pointer
-    * (single-file ATOMIC_MOVE on a filesystem, a small-object PUT on
-    * an object store). A crash before the flip leaves the old
+    * with the ordered flip of the one-line `path/CURRENT` pointer
+    * ([[graft.Generations.flip]]). A crash before the flip leaves the old
     * generation serving and the staged one orphaned (re-run; the
     * orphan is GC'd next cycle); a crash after leaves the new one
     * serving — no window straddles old nodes and new routing, the
@@ -1315,13 +1306,6 @@ object GraphAnn {
     * The immediately superseded generation survives ONE further cycle
     * as the in-flight readers' grace window; older generations are
     * GC'd. */
-  private def parseCurrentGen(path: String): Option[String] = {
-    val cur = new java.io.File(s"$path/CURRENT")
-    if (!cur.isFile) None
-    else Some(new String(java.nio.file.Files.readAllBytes(cur.toPath),
-      java.nio.charset.StandardCharsets.UTF_8).trim)
-  }
-
   /** The live generation name — "" for the base layout, `gen__vN`
     * once maintenance has flipped the pointer. This is the PINNABLE
     * handle: a long-running reader resolves it once and serves every
@@ -1332,7 +1316,7 @@ object GraphAnn {
     * maintenance cycle; re-resolve at least once per cycle (the
     * [[IVF.currentGeneration]] snapshot-reader discipline). */
   def currentGeneration(path: String): String =
-    parseCurrentGen(path).getOrElse("")
+    graft.Generations.pointer(new java.io.File(path)).getOrElse("")
 
   private def genRoot(path: String, gen: String): String =
     if (gen.isEmpty) path else s"$path/$gen"
@@ -1352,84 +1336,49 @@ object GraphAnn {
   def tablePath(path: String, table: String): String =
     s"${resolveRoot(path)}/$table"
 
-  /** Next free generation number from the LISTING (live, grace, or
-    * orphaned — the [[IVF]] rule: a counter derived from the live
-    * name would collide with a surviving grace generation). */
-  private val FencePrefix = "WRITER__v"
-
-  /** Derive the next generation name AND acquire the single-writer
-    * fence for it in one step — every in-place staging op
-    * ([[refreshRouting]], [[compactTombstones]], [[reviveToIndex]])
-    * must go through this so a same-version race between two
-    * maintenance writers fails loudly at the loser instead of
-    * overwriting the winner's staged generation (the shared
-    * [[graft.WriterFence.claim]] protocol: generation dirs ∪
-    * standing markers, max + 1, create-exclusive acquire). Returns
-    * (genName, version); the committer sweeps markers up to
-    * `version` after its ordered flip. */
-  private def claimNextGen(path: String, what: String): (String, Int) = {
-    val dirs = Option(new java.io.File(path).listFiles()).toSeq.flatten
-      .filter(_.isDirectory).map(_.getName)
-      .collect { case n if n.startsWith("gen__v") => n.stripPrefix("gen__v") }
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-    // appends consume versions WITHOUT creating generation dirs —
-    // their commits live in the CELLS files, so the claim must read
-    // the standing generations' visibility versions too or a later
-    // claim could collide with a committed append's cells
-    val cells = (dirs.map(g => s"$path/gen__v$g") :+ path)
-      .flatMap(r => scala.util.Try(cellsVersion(r)).toOption)
-    val v = graft.WriterFence.claim(new java.io.File(path), FencePrefix,
-      dirs ++ cells, what)
-    (s"gen__v$v", v)
-  }
-
-  /** ORDERED commit of the CURRENT pointer — the graph twin of
-    * [[graft.search.IVF.flipCurrent]]'s guard: a flip must carry a
-    * version strictly above the standing generation's, so a writer
-    * that stalled mid-staging while a staggered newer writer
-    * committed cannot wake up and regress the pointer (and silently
-    * resurrect what the newer sidecar was hiding). Filesystem
-    * read-then-move window documented there; conditional PUT is the
-    * object-store drop-in. */
-  private[graft] def flipCurrent(path: String, gen: String): Unit = {
-    def versionOf(g: String): Int =
-      if (!g.startsWith("gen__v")) 1
-      else scala.util.Try(g.stripPrefix("gen__v").toInt).getOrElse(1)
-    val standing = versionOf(currentGeneration(path))
-    val ours = versionOf(gen)
-    if (ours <= standing)
-      throw new IllegalStateException(
-        s"GraphAnn.flipCurrent: stale commit — $path already points at " +
-          s"generation v$standing while this writer staged v$ours; a " +
-          "newer maintenance writer committed during staging. This " +
-          "writer's generation is orphaned (the GC collects it); " +
-          "re-run against the live pointer.")
-    val tmp = java.nio.file.Paths.get(s"$path/CURRENT.tmp")
-    java.nio.file.Files.write(tmp,
-      gen.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(s"$path/CURRENT"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
   // tombstones rides along so a GC'd base layout cannot leak a stale
   // sidecar into a later index at the same path; CELLS so a dead
   // base's visibility version cannot linger
   private val IndexTables =
     Seq("routing", "routing2", "routing2c", "params", "tombstones", "CELLS")
 
-  /** Generation directories under `path` minus `keep` — the GC
-    * predicate (the POOL half is [[gcCells]]). The base layout
-    * participates as generation "": its table directories and CELLS
-    * file are deleted once it leaves the grace window. */
-  private def staleGenerations(path: String, keep: Set[String]): Seq[java.io.File] = {
-    val gens = Option(new java.io.File(path).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("gen__v") &&
-        !keep.contains(f.getName))
-    val base = if (keep.contains("")) Seq.empty
-      else IndexTables.map(t => new java.io.File(s"$path/$t"))
-        .filter(f => f.isDirectory || f.isFile)
-    gens ++ base
+  /** The index's generation family ([[graft.Generations]]): every
+    * `gen__vN` root, plus the base layout as generation "" — its
+    * table directories and CELLS file are collected once it leaves
+    * the grace window (the POOL half of GC is [[gcCells]]). */
+  private def generations(path: String): graft.Generations.Family =
+    graft.Generations.pointerFamily(path, Seq("gen__v"),
+      f => (f.isDirectory && f.getName.startsWith("gen__v")) ||
+        IndexTables.contains(f.getName),
+      g => if (g.isEmpty) IndexTables else Seq(g))
+
+  /** Derive the next generation name AND acquire the single-writer
+    * fence for it in one step ([[graft.Generations.claim]]) — every
+    * in-place staging op ([[refreshRouting]], [[compactTombstones]],
+    * [[reviveToIndex]], [[upgradeIndex]]) and the append's cell
+    * commit go through this, so a same-version race between two
+    * writers fails loudly at the loser. Returns (genName, version). */
+  private def claimNextGen(path: String, what: String): (String, Int) = {
+    val gens = generations(path)
+    // appends consume versions WITHOUT creating generation dirs —
+    // their commits live in the CELLS files, so the claim must read
+    // the standing generations' visibility versions too or a later
+    // claim could collide with a committed append's cells
+    val cells = (graft.Generations.generationDirs(gens).map(_.getPath) :+ path)
+      .flatMap(r => scala.util.Try(cellsVersion(r)).toOption)
+    val v = graft.Generations.claim(gens, what, extra = cells)
+    (s"gen__v$v", v)
+  }
+
+  /** Commit a staged generation: the ordered CURRENT flip, the marker
+    * sweep and the directory GC ([[graft.Generations.commit]], keeping
+    * `newGen` and the superseded `prevGen`), then the cell-pool GC
+    * over the two surviving roots. */
+  private def commitGen(spark: SparkSession, path: String, newGen: String,
+                        prevGen: String, v: Int, what: String): Unit = {
+    graft.Generations.commit(generations(path), v, keep = Seq(newGen, prevGen),
+      what, pointer = Some(newGen))
+    gcCells(spark, path, Seq(s"$path/$newGen", genRoot(path, prevGen)))
   }
 
   /** ROUTING REFRESH — [[IVF]]'s q96 retrain discipline applied to the
@@ -1473,11 +1422,7 @@ object GraphAnn {
     writeIndexInto(routingFor(src, "id", "vec", parts), src, "id", "vec",
       m, efC, idxPath = path, genRoot = s"$path/$newGen", version = v,
       replicas = replicas)
-    flipCurrent(path, newGen)
-    graft.WriterFence.sweep(new java.io.File(path), FencePrefix, v)
-    staleGenerations(path, keep = Set(newGen, prevGen))
-      .foreach(graft.FileTree.delete)
-    gcCells(spark, path, Seq(s"$path/$newGen", root))
+    commitGen(spark, path, newGen, prevGen, v, "GraphAnn.refreshRouting")
   }
 
   /** [[refreshRouting]] into an EXPLICIT new deployment path (no
@@ -1538,11 +1483,7 @@ object GraphAnn {
     writeIndexInto(routingFor(src, idCol, vecCol, parts), src, idCol,
       vecCol, m, efC, idxPath = path, genRoot = s"$path/$newGen",
       version = fenceV, replicas = replicas)
-    flipCurrent(path, newGen)
-    graft.WriterFence.sweep(new java.io.File(path), FencePrefix, fenceV)
-    staleGenerations(path, keep = Set(newGen, prevGen))
-      .foreach(graft.FileTree.delete)
-    gcCells(spark, path, Seq(s"$path/$newGen", root))
+    commitGen(spark, path, newGen, prevGen, fenceV, "GraphAnn.upgradeIndex")
   }
 
   /** TOMBSTONE DELETE — the right-to-be-forgotten op on the index
@@ -1636,11 +1577,7 @@ object GraphAnn {
     spark.read.parquet(s"$root/params").coalesce(1)
       .write.mode("overwrite").parquet(s"$out/params")
     setCellsVersion(out, fenceV)
-    flipCurrent(path, newGen)
-    graft.WriterFence.sweep(new java.io.File(path), FencePrefix, fenceV)
-    staleGenerations(path, keep = Set(newGen, prevGen))
-      .foreach(graft.FileTree.delete)
-    gcCells(spark, path, Seq(out, root))
+    commitGen(spark, path, newGen, prevGen, fenceV, "GraphAnn.compactTombstones")
   }
 
   /** REVIVE — re-ingest of tombstoned ids, the graph family's upsert
@@ -1737,11 +1674,7 @@ object GraphAnn {
     spark.read.parquet(s"$root/params").coalesce(1)
       .write.mode("overwrite").parquet(s"$out/params")
     setCellsVersion(out, fenceV)
-    flipCurrent(path, newGen)
-    graft.WriterFence.sweep(new java.io.File(path), FencePrefix, fenceV)
-    staleGenerations(path, keep = Set(newGen, prevGen))
-      .foreach(graft.FileTree.delete)
-    gcCells(spark, path, Seq(out, root))
+    commitGen(spark, path, newGen, prevGen, fenceV, "GraphAnn.reviveToIndex")
   }
 
   /** CDC UPSERT APPLY — the batch router the feed-drain loop calls

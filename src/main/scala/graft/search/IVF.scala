@@ -197,21 +197,16 @@ object IVF {
     writeIndexFrom(cents, assignAuto(docs, idCol, vecCol, cents, k), path)
   }
 
-  /** Persist CALLER-SUPPLIED index artifacts (e.g. the session-memoized
-    * centroids + assignment the in-memory queries share) — the
-    * memoized index and the at-rest index are then the same object in
-    * two representations. */
-  /** Generation directories under `path` (the initial `lists` /
-    * `centroids` plus every versioned `lists__vN` / `centroids__vN`),
-    * minus `keep` — the ONE predicate both compaction's and the
-    * rebuild's GC share. */
-  private def staleGenerations(path: String, keep: Set[String]): Seq[java.io.File] =
-    Option(new java.io.File(path).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory &&
-        (f.getName == "lists" || f.getName.startsWith("lists__v") ||
-          f.getName == "centroids" || f.getName.startsWith("centroids__v") ||
-          f.getName.startsWith("tomb__")) &&
-        !keep.contains(f.getName))
+  /** The index's generation family ([[graft.Generations]]): the
+    * base `lists` / `centroids` plus every versioned `lists__vN` /
+    * `centroids__vN`, each lists generation with its `tomb__` sidecar
+    * (kept and collected together). */
+  private def generations(path: String): graft.Generations.Family =
+    graft.Generations.pointerFamily(path, Seq("lists__v", "centroids__v"),
+      f => f.isDirectory && (f.getName == "lists" ||
+        f.getName.startsWith("lists__v") || f.getName == "centroids" ||
+        f.getName.startsWith("centroids__v") || f.getName.startsWith("tomb__")),
+      g => Seq(g, tombName(g)))
 
   /** A lists generation's tombstone sidecar name: the sidecar is
     * VERSIONED WITH the lists (`tomb__<listsName>`), so a pinned
@@ -308,78 +303,10 @@ object IVF {
     dropTombstoned(spark, lp, spark.read.parquet(lp))
   }
 
-  /** The next free generation number: max over EVERY versioned dir
-    * present (live, grace, or orphaned) + 1 — derived from the
-    * listing, never from the live name, so a staged write can never
-    * collide with a surviving generation (a liveName-based counter
-    * restarts at v2 after a rebuild and overwrites the grace
-    * generation readers may still hold). */
-  private def dirVersions(path: String): Seq[Int] =
-    Option(new java.io.File(path).listFiles()).toSeq.flatten
-      .filter(_.isDirectory).map(_.getName)
-      .collect {
-        case n if n.startsWith("lists__v") => n.stripPrefix("lists__v")
-        case n if n.startsWith("centroids__v") => n.stripPrefix("centroids__v")
-      }
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-
-  /** Derive + fence the next generation version in one step — the
-    * shared [[graft.WriterFence.claim]] protocol (generation dirs ∪
-    * standing markers, max + 1, create-exclusive acquire): the
-    * version derives from the LISTING, never the live name (a
-    * liveName-based counter restarts at v2 after a rebuild and
-    * overwrites the grace generation readers may still hold), and
-    * the loser of a same-version staging race fails loudly here. */
-  private def claimVersion(path: String, what: String): Int =
-    graft.WriterFence.claim(new java.io.File(path), FencePrefix,
-      dirVersions(path), what)
-
-  private val FencePrefix = "WRITER__v"
-
-  /** Atomically point CURRENT at a (lists, centroids) generation
-    * pair: single-file ATOMIC_MOVE on a filesystem, a small-object
-    * PUT on an object store.
-    *
-    * COMMITS ARE ORDERED — the other half of the writer-fence
-    * contract ([[graft.WriterFence]] orders staging CLAIMS; this
-    * orders the commits): a flip must carry a version STRICTLY ABOVE
-    * the currently-pointed generation's, or fail loudly. Without the
-    * guard, a writer that stalled mid-staging while a staggered
-    * newer writer claimed, committed, and swept could wake up and
-    * flip the pointer BACK to its stale generation — silently
-    * regressing the index and resurrecting whatever the newer
-    * generation's sidecar was hiding (last-flip-wins, the failure
-    * class the fence exists to kill). On a plain filesystem a
-    * read-then-move window remains (microseconds, against the
-    * documented single-writer contract); an object store closes it
-    * exactly with a conditional PUT (`If-Match` on the CURRENT
-    * object) — the guard is written so that swap is drop-in. */
-  private[graft] def flipCurrent(path: String, listsN: String,
-                                 centsN: String): Unit = {
-    val ours = genVersionOf(listsN)
-    val standing = genVersionOf(generationPair(path)._1)
-    if (ours <= standing)
-      throw new IllegalStateException(
-        s"IVF.flipCurrent: stale commit — $path already points at " +
-          s"generation v$standing while this writer staged v$ours; a " +
-          "newer maintenance writer committed during staging. This " +
-          "writer's generation is orphaned (the GC collects it); " +
-          "re-run the maintenance op against the live pointer.")
-    val tmp = java.nio.file.Paths.get(s"$path/CURRENT.tmp")
-    java.nio.file.Files.write(tmp,
-      s"$listsN $centsN".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(s"$path/CURRENT"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** A generation name's version: the base layout ("lists") is v1,
-    * versioned names carry their own number. */
-  private def genVersionOf(listsN: String): Int =
-    if (!listsN.contains("__v")) 1
-    else scala.util.Try(
-      listsN.substring(listsN.indexOf("__v") + 3).toInt).getOrElse(1)
-
+  /** Persist CALLER-SUPPLIED index artifacts (e.g. the session-memoized
+    * centroids + assignment the in-memory queries share) — the
+    * memoized index and the at-rest index are then the same object in
+    * two representations. */
   def writeIndexFrom(cents: DataFrame, assigned: DataFrame, path: String): Unit = {
     // REBUILD — a wholesale replacement of the index (new centroids +
     // new lists). The quantizer and its lists are ONE consistency
@@ -395,7 +322,7 @@ object IVF {
     // after leaves the new one serving — no window pairs mismatched
     // tables. The superseded generation survives one cycle as the
     // in-flight readers' grace window, exactly like compaction's.
-    val freshIndex = !new java.io.File(s"$path/CURRENT").isFile &&
+    val freshIndex = graft.Generations.pointer(new java.io.File(path)).isEmpty &&
       !new java.io.File(s"$path/lists").isDirectory
     // one file per inverted list: without the cid shuffle every
     // write task drops a fragment into every cid= dir it holds
@@ -441,18 +368,16 @@ object IVF {
       // claim (derive + fence) BEFORE any staged bytes: the loser of
       // a same-version race fails loudly instead of overwriting the
       // winner's staged generation and racing the CURRENT flip
-      val v = claimVersion(path, "IVF.writeIndexFrom")
+      val gens = generations(path)
+      val v = graft.Generations.claim(gens, "IVF.writeIndexFrom")
       cents.write.mode("overwrite").parquet(s"$path/centroids__v$v")
       listWrite(staged).parquet(s"$path/lists__v$v")
-      flipCurrent(path, s"lists__v$v", s"centroids__v$v")
-      graft.WriterFence.sweep(new java.io.File(path), FencePrefix, v)
       // each kept lists generation keeps ITS tombstone sidecar: a
       // grace-window pin pairs its lists with its delete set, so the
       // sidecar must survive exactly as long as the lists do
-      staleGenerations(path,
-        keep = Set(s"lists__v$v", s"centroids__v$v", prevLists, prevCents,
-          tombName(s"lists__v$v"), tombName(prevLists)))
-        .foreach(graft.FileTree.delete)
+      graft.Generations.commit(gens, v,
+        keep = Seq(s"lists__v$v", s"centroids__v$v", prevLists, prevCents),
+        "IVF.writeIndexFrom", pointer = Some(s"lists__v$v centroids__v$v"))
     }
   }
 
@@ -511,19 +436,14 @@ object IVF {
       .write.mode("append").partitionBy("cid").parquet(s"$path/$ln")
   }
 
-  /** The index's committed-batch ledger (one marker file per applied
-    * streaming batch — [[graft.streaming.ExactlyOnce]]). A SIBLING of
-    * the index path (`<path>__applied`, the postings/register
-    * convention), not a child: it must survive generation flips AND
-    * the whole-path wipe of [[graft.search.SQ.rebuildIndex]]'s
-    * requant (a maintenance rebuild that lost the ledger would turn
-    * the next crash's re-delivery of a committed batch into a second
-    * append on top of a rebuild that already holds its docs — and a
-    * save/restore around the wipe would still carry a crash window
-    * between the delete and the restore). CREATE paths clear it
-    * explicitly; maintenance never touches it. */
+  /** The index's committed-batch ledger, [[graft.Generations.ledger]]:
+    * a SIBLING of the index path, so it also survives the whole-path
+    * wipe of [[graft.search.SQ.rebuildIndex]]'s requant (a maintenance
+    * rebuild that lost the ledger would turn the next crash's
+    * re-delivery of a committed batch into a second append on top of
+    * a rebuild that already holds its docs). */
   private[graft] def appendLedger(path: String): java.io.File =
-    new java.io.File(path.stripSuffix("/") + "__applied")
+    graft.Generations.ledger(path)
 
   /** [[appendToIndex]] with EXACTLY-ONCE semantics under streaming
     * re-delivery — the sink-side contract
@@ -689,24 +609,15 @@ object IVF {
     * no pointer and lives at the base `lists` / `centroids`. A legacy
     * single-token pointer (written before centroids were versioned)
     * names only the lists generation — its centroids are the base
-    * table, which that layout never moved. */
-  private def parseCurrent(path: String): Option[(String, String)] = {
-    val cur = new java.io.File(s"$path/CURRENT")
-    if (!cur.isFile) None
-    else {
-      val toks = new String(java.nio.file.Files.readAllBytes(cur.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+")
-      Some((toks(0), if (toks.length > 1) toks(1) else "centroids"))
-    }
-  }
-  /** The live (listsName, centroidsName) pair from ONE pointer read.
-    * Every caller that needs both names must go through this — two
-    * independent `parseCurrent` reads can straddle a concurrent
-    * maintenance flip and pair one generation's lists with another's
-    * quantizer (the exact mixed-pair state the versioned-generation
-    * design exists to prevent). */
+    * table, which that layout never moved. Every caller that needs
+    * both names goes through this ONE pointer read: two reads can
+    * straddle a concurrent flip and pair one generation's lists with
+    * another's quantizer. */
   private def generationPair(path: String): (String, String) =
-    parseCurrent(path).getOrElse(("lists", "centroids"))
+    graft.Generations.pointer(new java.io.File(path)).map { p =>
+      val toks = p.split("\\s+")
+      (toks(0), if (toks.length > 1) toks(1) else "centroids")
+    }.getOrElse(("lists", "centroids"))
   private def listsName(path: String): String = generationPair(path)._1
   private def centroidsName(path: String): String = generationPair(path)._2
 
@@ -788,7 +699,8 @@ object IVF {
     // scheduled one and a valve-fired one from another session)
     // derive the same v from the same listing — the loser fails
     // loudly here
-    val v = claimVersion(path, "IVF.compactIndex")
+    val gens = generations(path)
+    val v = graft.Generations.claim(gens, "IVF.compactIndex")
     val nextName = s"lists__v$v"
     // the rewrite is sourced through the tombstone filter: compaction
     // is deletion's PHASE 2, and the new generation starts with a
@@ -847,13 +759,10 @@ object IVF {
     // compaction moves bytes, never content: the new lists still live
     // under the SAME quantizer, so the pointer keeps the centroids
     // name and swaps only the lists generation
-    flipCurrent(path, nextName, liveCents)
-    graft.WriterFence.sweep(new java.io.File(path), FencePrefix, v)
     // the superseded generation keeps its sidecar through the grace
     // window — a pinned reader pairs old lists with the old delete set
-    staleGenerations(path,
-        keep = Set(nextName, liveLists, liveCents, tombName(liveLists)))
-      .foreach(graft.FileTree.delete)
+    graft.Generations.commit(gens, v, keep = Seq(nextName, liveLists, liveCents),
+      "IVF.compactIndex", pointer = Some(s"$nextName $liveCents"))
   }
 
   /** Files per inverted list of a persisted index — the compaction

@@ -39,8 +39,10 @@ import org.apache.spark.sql.graftnative.NativeExpressions.{dotNative => dot, sqA
   * (cid-partitioned parquet + small sidecar tables) is deliberately
   * identical, so [[IVF.compactIndex]] compacts an SQ index's
   * fragmented lists into a fresh `lists__vN` generation committed by
-  * the same atomic CURRENT flip (bounds and centroids never move
-  * during compaction — they are index geometry, not list bytes), and
+  * the same ordered CURRENT flip ([[graft.Generations]] — the one
+  * generation protocol every index family shares; bounds and
+  * centroids never move during compaction — they are index
+  * geometry, not list bytes), and
   * [[IVF.listFileCounts]] is the shared fragmentation trigger. Every
   * SQ list read and append below resolves the live generation
   * through [[IVF.listsPath]], so readers ride the same

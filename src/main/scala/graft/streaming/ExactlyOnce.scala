@@ -46,12 +46,12 @@ package graft.streaming
   * maintenance refuses to run while an UNCOMMITTED stage dir exists
   * ([[sweepStages]] with `failOnInflight = true`) — an in-flight
   * append is the ingest loop's to finish (just re-run the drain), in
-  * the same spirit as [[graft.WriterFence]]'s loud loser. Committed
+  * the same spirit as [[graft.Generations]]'s loud loser. Committed
   * stage debris (crash between marker and cleanup) is garbage and is
   * swept, not fatal.
   *
   * CONTRACT — ONE INGEST STREAM PER INDEX (the ingest twin of the
-  * single-maintenance-writer contract [[graft.WriterFence]] states
+  * single-maintenance-writer contract [[graft.Generations]] states
   * for rewrites): batchIds come from ONE streaming checkpoint, so
   * the ledger's `b<id>` namespace and the promoted `b<id>-p*` names
   * are unambiguous. Two checkpoints feeding the same index would

@@ -399,7 +399,7 @@ class ExactlyOnceSpec extends SparkSpec {
     Queries.writePostings(spark, docs.filter(col("doc_id") >= 3), tbl, path, "overwrite")
     val pbatch = docs.filter(col("doc_id") < 3).localCheckpoint()
     Queries.writePostingsIdempotent(spark, pbatch, tbl, 1L)
-    val pledger = Queries.postingsLedger(path)
+    val pledger = Generations.ledger(path)
     assert(new java.io.File(pledger, "b1").isFile)
     Queries.rebuildPostings(spark,
       docs.select(col("doc_id"), concat(lit("v2 "), col("text")).as("text")),
@@ -493,7 +493,7 @@ class ExactlyOnceSpec extends SparkSpec {
     Queries.writePostingsIdempotent(spark, batch, tbl, 1L)
     assert(all() == once, "duplicate delivery must be a no-op")
     // crash-after-promote replay
-    val ledger = Queries.postingsLedger(Queries.postingsLivePath(spark, tbl))
+    val ledger = Generations.ledger(Queries.postingsLivePath(spark, tbl))
     assert(new java.io.File(ledger, "b1").delete())
     Queries.writePostingsIdempotent(spark, batch, tbl, 1L)
     assert(all() == once, "crash replay must converge — postings tf must never double")
@@ -531,10 +531,10 @@ class ExactlyOnceSpec extends SparkSpec {
     Queries.writePostings(spark, docs.filter(col("doc_id") >= 3), tbl, path, "overwrite")
     val batch = docs.filter(col("doc_id") < 3).localCheckpoint()
     Queries.writePostingsIdempotent(spark, batch, tbl, 1L)
-    assert(new java.io.File(Queries.postingsLedger(path), "b1").isFile)
+    assert(new java.io.File(Generations.ledger(path), "b1").isFile)
     // the rebuild: same (tbl, path); the dead stream's ledger must go
     Queries.writePostings(spark, docs.filter(col("doc_id") >= 3), tbl, path, "overwrite")
-    assert(!Queries.postingsLedger(path).exists(),
+    assert(!Generations.ledger(path).exists(),
       "postings CREATE must clear the sibling ledger")
     Queries.writePostingsIdempotent(spark, batch, tbl, 1L)
     assert(spark.table(tbl).select("doc").as[Long].distinct().collect().toSet

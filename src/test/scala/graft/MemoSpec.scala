@@ -82,4 +82,17 @@ class MemoSpec extends AnyFunSuite {
     assert(get() == 42L)
     assert(builds == 2)
   }
+
+  test("cachedValue rebuilds when a name changes to an equal-hash, equal-length one") {
+    // "Aa" and "BB" share String.hashCode; with equal size and mtime
+    // the two listings differ only in that name, so a 32-bit string
+    // hash of the listing keys both to the same memo entry
+    val d = tempDir()
+    val a = write(d, "Aa", "one", 1000000000000L)
+    assert(Memo.cachedValue(SparkSpec.spark, d.getPath, "memospec_fp")("first") == "first")
+    assert(a.delete())
+    write(d, "BB", "one", 1000000000000L)
+    assert(Memo.cachedValue(SparkSpec.spark, d.getPath, "memospec_fp")("second") == "second",
+      "a changed listing must never serve the stale memo")
+  }
 }

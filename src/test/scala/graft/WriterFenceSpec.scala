@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The single-maintenance-writer fence ([[graft.WriterFence]]) on the
-  * generation machineries. The protected race is two CONCURRENT
-  * writers deriving the same next version from the same listing and
+/** The single-maintenance-writer fence of the generation protocol
+  * ([[graft.Generations]]) on every index family. The protected race
+  * is two CONCURRENT writers deriving the same next version from the
+  * same listing and
   * then racing the create-exclusive marker — the loser of that
   * `createFile` race throws (unit-tested directly, since a
   * sequential test can never lose it: a marker that exists at
@@ -39,11 +40,11 @@ class WriterFenceSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("fence_unit").toFile
     val marker = new java.io.File(dir, "WRITER__v5")
     // writer A wins the create-exclusive
-    WriterFence.acquire(marker, "specA")
+    Generations.acquire(marker, "specA")
     // writer B derived the same version from the same listing — the
     // atomic CREATE_NEW makes it the loser, loudly, before any bytes
     val e = intercept[IllegalStateException] {
-      WriterFence.acquire(marker, "specB")
+      Generations.acquire(marker, "specB")
     }
     assert(e.getMessage.contains("specB"))
     assert(e.getMessage.contains("concurrent maintenance writer"))
@@ -58,9 +59,9 @@ class WriterFenceSpec extends SparkSpec {
     }
     java.nio.file.Files.createFile(
       new java.io.File(dir, "WRITER__vjunk").toPath) // unparseable: ignored
-    assert(WriterFence.markerVersions(dir, "WRITER__v").sorted == Seq(2, 3, 7))
-    WriterFence.sweep(dir, "WRITER__v", upTo = 3)
-    assert(WriterFence.markerVersions(dir, "WRITER__v") == Seq(7),
+    assert(Generations.markerVersions(dir, "WRITER__v").sorted == Seq(2, 3, 7))
+    Generations.sweep(dir, "WRITER__v", upTo = 3)
+    assert(Generations.markerVersions(dir, "WRITER__v") == Seq(7),
       "sweep must drop markers <= upTo and keep those above")
   }
 
@@ -160,14 +161,14 @@ class WriterFenceSpec extends SparkSpec {
     assert(IVF.listsPath(path).endsWith("lists__v3"))
     // A wakes up and tries to commit its stale v2
     val e = intercept[IllegalStateException] {
-      IVF.flipCurrent(path, "lists__v2", "centroids__v2")
+      Generations.flip(new java.io.File(path), "lists__v2 centroids__v2", "specA")
     }
     assert(e.getMessage.contains("stale commit"))
     assert(IVF.listsPath(path).endsWith("lists__v3"),
       "the pointer must never regress to a stale generation")
     // equal-version re-flip is rejected too (idempotent-commit abuse)
     intercept[IllegalStateException] {
-      IVF.flipCurrent(path, "lists__v3", "centroids__v3")
+      Generations.flip(new java.io.File(path), "lists__v3 centroids__v3", "specA")
     }
     // the graph twin: after a commit at gen__v2, a flip carrying the
     // base generation (v1) must be rejected
@@ -177,9 +178,116 @@ class WriterFenceSpec extends SparkSpec {
       emb.filter(col("vec_id") % 9 === 2).select(col("vec_id")), "vec_id", countPresent = true)
     GraphAnn.compactTombstones(spark, gp)
     val gen = GraphAnn.currentGeneration(gp)
-    val eg = intercept[IllegalStateException] { GraphAnn.flipCurrent(gp, "") }
+    val eg = intercept[IllegalStateException] {
+      Generations.flip(new java.io.File(gp), "", "specA")
+    }
     assert(eg.getMessage.contains("stale commit"))
     assert(GraphAnn.currentGeneration(gp) == gen)
+  }
+
+  /** One step of an on-disk layout pin: the action, then the exact
+    * sorted top-level listing expected after it and the `CURRENT`
+    * text (None: no pointer file). */
+  private case class Step(name: String, run: () => Unit,
+                          listing: Seq[String], current: Option[String])
+
+  /** Drive `steps` in order; after each, the entries of `dir` that
+    * `member` selects must list exactly as pinned. */
+  private def pinLayout(family: String, dir: java.io.File,
+                        member: String => Boolean, steps: Seq[Step]): Unit =
+    steps.foreach { st =>
+      st.run()
+      val got = Option(dir.listFiles()).toSeq.flatten.map(_.getName)
+        .filter(member).sorted
+      assert(got == st.listing, s"$family/${st.name}: listing $got")
+      val cur = new java.io.File(dir, "CURRENT")
+      val text = if (cur.isFile) Some(new String(
+        java.nio.file.Files.readAllBytes(cur.toPath), "UTF-8")) else None
+      assert(text == st.current, s"$family/${st.name}: CURRENT $text")
+    }
+
+  test("on-disk layout: every family's generation names, keep sets and CURRENT text through a lifecycle") {
+    import graft.dedup.Dedup
+    import graft.lexical.BM25
+    import graft.search.{GraphAnn, IVF}
+    val del = (m: Int) => emb.filter(col("vec_id") % 9 === m).select(col("vec_id"))
+
+    val ivf = java.nio.file.Files.createTempDirectory("layout_ivf").toFile
+    val ip = ivf.getPath
+    pinLayout("ivf", ivf, _ => true, Seq(
+      Step("build", () => IVF.writeIndex(emb, "vec_id", "v", 8, refineIters = 0, ip),
+        Seq("centroids", "lists"), None),
+      Step("delete", () => IVF.deleteFromIndex(spark, ip, del(2), "vec_id"),
+        Seq("centroids", "lists", "tomb__lists"), None),
+      Step("compact", () => IVF.compactIndex(spark, ip),
+        Seq("CURRENT", "centroids", "lists", "lists__v2", "tomb__lists"),
+        Some("lists__v2 centroids")),
+      Step("rebuild", () => {
+        val cents = IVF.centroids(emb, "vec_id", "v", 8).localCheckpoint()
+        IVF.writeIndexFrom(cents, IVF.assign(emb, "vec_id", "v", cents), ip)
+      }, Seq("CURRENT", "centroids", "centroids__v3", "lists__v2", "lists__v3"),
+      Some("lists__v3 centroids__v3")),
+      Step("compact2", () => IVF.compactIndex(spark, ip),
+        Seq("CURRENT", "centroids__v3", "lists__v3", "lists__v4"),
+        Some("lists__v4 centroids__v3"))))
+
+    val graph = java.nio.file.Files.createTempDirectory("layout_graph").toFile
+    val gp = graph.getPath
+    pinLayout("graph", graph, _ => true, Seq(
+      Step("build", () => GraphAnn.writeIndex(emb, "vec_id", "v", m = 8,
+        efC = 48, parts = 4, gp), Seq("CELLS", "cells", "params", "routing"), None),
+      Step("delete", () => GraphAnn.deleteFromIndex(spark, gp, del(2), "vec_id"),
+        Seq("CELLS", "cells", "params", "routing", "tombstones"), None),
+      Step("compact", () => GraphAnn.compactTombstones(spark, gp),
+        Seq("CELLS", "CURRENT", "cells", "gen__v2", "params", "routing", "tombstones"),
+        Some("gen__v2")),
+      Step("refresh", () => GraphAnn.refreshRouting(spark, gp, 4),
+        Seq("CURRENT", "cells", "gen__v2", "gen__v3"), Some("gen__v3"))))
+
+    val regDir = java.nio.file.Files.createTempDirectory("layout_reg").toFile
+    var reg = regDir.getPath + "/reg"
+    Dedup.writeRegister(Dedup.bandedSignatures(docs, "doc_id", "text", 3, 16, 4)
+      .withColumn("sigbucket", pmod(hash(col("band"), col("bandsig")), lit(4))),
+      reg, 4)
+    pinLayout("register", regDir, _.startsWith("reg"), Seq(
+      Step("delete", () => Dedup.deleteFromRegister(spark, reg, Seq(1L).toDF("id")),
+        Seq("reg", "reg__tomb"), None),
+      Step("compact", () => reg = Dedup.compactRegister(spark, reg, 4),
+        Seq("reg", "reg__gen2", "reg__tomb"), None),
+      Step("delete2", () => Dedup.deleteFromRegister(spark, reg, Seq(4L).toDF("id")),
+        Seq("reg", "reg__gen2", "reg__gen2__tomb", "reg__tomb"), None),
+      Step("compact2", () => reg = Dedup.compactRegister(spark, reg, 4),
+        Seq("reg__gen2", "reg__gen2__tomb", "reg__gen3"), None)))
+
+    val tbl = "bm25_layout_spec"
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    val postDir = java.nio.file.Files.createTempDirectory("layout_post").toFile
+    var post = postDir.getPath + "/t"
+    Queries.writePostings(spark, docs, tbl, post, "overwrite")
+    pinLayout("postings", postDir, _.startsWith("t"), Seq(
+      Step("delete", () => BM25.deleteFromPostings(spark, post, spark.table(tbl),
+        Seq(1L).toDF("doc")), Seq("t", "t__tomb"), None),
+      Step("compact", () => post = Queries.compactPostings(spark, tbl, post),
+        Seq("t", "t__gen2", "t__tomb"), None),
+      Step("delete2", () => BM25.deleteFromPostings(spark, post, spark.table(tbl),
+        Seq(4L).toDF("doc")), Seq("t", "t__gen2", "t__gen2__tomb", "t__tomb"),
+        None),
+      Step("compact2", () => post = Queries.compactPostings(spark, tbl, post),
+        Seq("t__gen2", "t__gen2__tomb", "t__gen3"), None)))
+  }
+
+  test("IVF: a legacy one-token CURRENT still reads, and the next commit versions past it") {
+    import graft.search.IVF
+    val path = java.nio.file.Files.createTempDirectory("fence_legacy").toString
+    IVF.writeIndex(emb, "vec_id", "v", 8, refineIters = 0, path)
+    IVF.compactIndex(spark, path)
+    // a pointer written before centroids were versioned names only
+    // the lists generation; its quantizer is the base table
+    java.nio.file.Files.write(new java.io.File(path, "CURRENT").toPath,
+      "lists__v2\n".getBytes("UTF-8"))
+    assert(IVF.currentGeneration(path) == ("lists__v2", "centroids"))
+    IVF.compactIndex(spark, path)
+    assert(IVF.currentGeneration(path) == ("lists__v3", "centroids"))
   }
 
   test("a crashed writer's dead marker (no staged dir) burns one version, never wedges repeated runs") {
