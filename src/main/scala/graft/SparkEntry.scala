@@ -1267,10 +1267,10 @@ object Queries {
 
   /** MULTI-QUERY BM25 SERVING from the shared at-rest postings —
     * [[graft.lexical.BM25.searchIndexedMulti]]: ONE bucket-pruned
-    * postings scan scores all three term-sets (per-term idf computed
-    * once and shared, the per-query fan-out a broadcast routing
-    * join), per-query top-k through the bounded heap — the exchange
-    * carries O(queries × k) rows. The lexical row of the multi-query
+    * postings scan feeds one `graft_topk_bm25` aggregate that scores
+    * all three term-sets (per-term idf computed once and shared) and
+    * keeps each query's top-k in a bounded heap — no df pass, no
+    * routing join, no exchange on qid. The lexical row of the multi-query
     * serving matrix (q134 IVF, q135 SQ8, graph multi — this was the
     * gap); PlanSpec pins the one-scan contract. Oracle: per-qid BM25
     * replay over a VALUES routing table. */

@@ -2,6 +2,8 @@ package graft.hybrid
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.TopKAggregate
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Hybrid retrieval: candidate union (R4) + MMR re-rank (R5).
   *
@@ -52,12 +54,15 @@ object Hybrid {
   /** MULTI-QUERY [[rrfFuse]]: both legs carry (qid, id, rank) for a
     * BATCH of queries (the multi-query index reads —
     * [[graft.search.IVF.searchIndexMulti]] for the vector leg,
-    * [[graft.lexical.BM25.searchIndexedMulti]] for the lexical one);
-    * fusion scores group by (qid, id) and per-query top-k is a
-    * window over each query's ≤ 2·depth fused candidates — the
-    * exchange carries O(queries × depth) rows end to end, and the
-    * corpus-sized artifacts were already read ONCE for the whole
-    * batch by the legs. */
+    * [[graft.lexical.BM25.searchIndexedMulti]] for the lexical one).
+    * Fusion is ONE aggregate grouped by qid, `graft_topk_sum`
+    * ([[org.apache.spark.sql.graftnative.SumTopK]]): per query it sums
+    * each id's reciprocal-rank terms (at most one per leg, so the sum
+    * is order-free and bit-identical to [[rrfFuse]]'s) and keeps the
+    * top k by (score desc, id asc). The only exchange is the one on
+    * qid, carrying the map-side partial sums — no (qid, id) exchange,
+    * no sort, no window; the corpus-sized artifacts were already read
+    * ONCE for the whole batch by the legs. */
   def rrfFuseMulti(vec: DataFrame, vecIdCol: String,
                    lex: DataFrame, lexIdCol: String,
                    c: Int, k: Int): DataFrame = {
@@ -65,15 +70,12 @@ object Hybrid {
       (lit(1.0) / (lit(c) + col("rank"))).as("__t"))
     val l = lex.select(col("qid"), col(lexIdCol).as("id"),
       (lit(1.0) / (lit(c) + col("rank"))).as("__t"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("__s").desc, col("id").asc)
     v.union(l)
-      .groupBy("qid", "id").agg(sum(col("__t")).as("__s"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("id"), col("rank"),
-        round(col("__s"), 6).as("score"))
+      .groupBy("qid")
+      .agg(TopKAggregate.topKSum(col("id"), col("__t"), k).as("__tk"))
+      .select(col("qid"), explode(col("__tk")).as("__e"))
+      .select(col("qid"), col("__e.id").as("id"), col("__e.rank").as("rank"),
+        round(col("__e.score"), 6).as("score"))
   }
 
   /** R5: MMR greedy re-rank. Inherently sequential (each pick
@@ -139,9 +141,10 @@ object Hybrid {
       picked(bestIdx) = true
       chosen += bestIdx
     }
-    import spark.implicits._
-    chosen.toSeq.zipWithIndex
-      .map { case (i, r) => (ids(i), (r + 1).toLong) }
-      .toDF(idCol, "rank")
+    spark.createDataFrame(
+      java.util.Arrays.asList(chosen.toSeq.zipWithIndex
+        .map { case (i, r) => Row(ids(i), (r + 1).toLong) }: _*),
+      StructType(Seq(StructField(idCol, LongType, nullable = false),
+        StructField("rank", LongType, nullable = false))))
   }
 }

@@ -3,6 +3,7 @@ package graft.lexical
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.{LexicalBatch, TopKAggregate}
 
 /** Lexical (BM25) retrieval as pure relational algebra (SURVEY §2 R3).
   *
@@ -238,44 +239,30 @@ object BM25 {
     * lexical index: a serving tier answering a query batch must not
     * read the postings once per query). The scan is filtered to the
     * UNION of every query's terms — a single bucket-pruned read
-    * (PlanSpec asserts one scan) — per-term df/idf is computed once
-    * and shared (corpus statistics do not depend on which query asked),
-    * the per-query fan-out is a broadcast join against the
-    * queries × terms routing table (driver-bounded by the multi-query
-    * contract), and per-query top-k runs through the bounded-heap
-    * aggregate, so the exchange after scoring carries
-    * O(queries × k) rows. Output (qid, doc, rank, score); scores are
-    * identical to per-query [[searchIndexed]] calls. */
+    * (PlanSpec asserts one scan) — and feeds ONE global aggregate,
+    * `graft_topk_bm25` ([[org.apache.spark.sql.graftnative.BatchBM25]]),
+    * which carries the query batch from the driver: it gathers the
+    * matching postings, takes each term's df from them (corpus
+    * statistics do not depend on which query asked), reads (N, avgdl)
+    * off the `corpus` row broadcast into the scan, scores, and keeps
+    * one (score desc, doc asc) heap per query. No df pass, no
+    * query-term join and no exchange on (qid, doc) or qid: the only
+    * exchange is the aggregate's single merge. Entries sharing a qid
+    * score as one query over their concatenated terms, and a term a
+    * query names twice scores twice. Output (qid, doc, rank, score);
+    * scores equal per-query [[searchIndexed]] calls for queries
+    * without repeated terms. */
   def searchIndexedMulti(post: DataFrame, corpus: DataFrame,
                          queries: Seq[(Long, Seq[String])],
                          k: Int): DataFrame = {
-    val spark = post.sparkSession
-    import spark.implicits._
-    val qt = queries
-      .flatMap { case (qid, ts) => ts.map(t => (qid, t.toLowerCase)) }
-      .toDF("qid", "term")
-    val allTerms = queries.flatMap(_._2).map(_.toLowerCase).distinct
-    val filtered = post.filter(col("term").isin(allTerms: _*))
-    val stats = filtered.groupBy("term")
-      .agg(countDistinct(col("doc")).cast("double").as("df"))
+    val batch = LexicalBatch(queries)
+    post.filter(col("term").isin(batch.terms.toIndexedSeq: _*))
       .crossJoin(broadcast(corpus))
-      .withColumn("idf",
-        log(lit(1.0) + (col("__n") - col("df") + 0.5) / (col("df") + 0.5)))
-      .select(col("term"), col("idf"), col("__avgdl"))
-    filtered
-      .join(broadcast(stats), "term")
-      .withColumn("s",
-        col("idf") * col("tf") * (K1 + 1.0) /
-          (col("tf") + lit(K1) * (lit(1.0 - B) + lit(B) * col("len") / col("__avgdl"))))
-      .join(broadcast(qt), "term") // fan out to the queries sharing the term
-      .groupBy("qid", "doc")
-      .agg(sum(col("s")).as("score"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graftnative.TopKAggregate
-        .topK(col("doc"), col("score"), k).as("__tk"))
-      .select(col("qid"), explode(col("__tk")).as("__e"))
-      .select(col("qid"), col("__e.id").as("doc"), col("__e.rank").as("rank"),
-        round(col("__e.score"), 4).as("score"))
+      .agg(TopKAggregate.topKBm25(col("term"), col("doc"), col("tf"), col("len"),
+        col("__n"), col("__avgdl"), batch, k).as("__tk"))
+      .select(explode(col("__tk")).as("__e"))
+      .select(col("__e.qid").as("qid"), col("__e.doc").as("doc"),
+        col("__e.rank").as("rank"), round(col("__e.score"), 4).as("score"))
   }
 
   /** PINNED postings read — snapshot isolation for long-running

@@ -353,4 +353,77 @@ class BM25Spec extends SparkSpec {
     assert(rows(live) == hidden,
       "recovery must serve the exact pre-crash answers")
   }
+
+  /** (doc, rank, score) of one query, by rank. */
+  private def ranked(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+    df.select("doc", "rank", "score").as[(Long, Long, Double)].collect().toSeq.sortBy(_._2)
+
+  /** (doc, rank, score) per qid of a multi-query serve, by rank. */
+  private def rankedMulti(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[(Long, Long, Double)]] =
+    df.select("qid", "doc", "rank", "score").as[(Long, Long, Long, Double)].collect().toSeq
+      .groupBy(_._1).map { case (q, rs) => q -> rs.map(r => (r._2, r._3, r._4)).sortBy(_._2) }
+
+  /** A query batch over the sf0.001 vocabulary: shared terms, a
+    * mixed-case term, a term no doc has, a query that matches nothing
+    * and a qid given twice (one query over both entries' terms). */
+  private val multiBatch: Seq[(Long, Seq[String])] = Seq(
+    1L -> Seq("spark", "hash", "join"),
+    2L -> Seq("Spark", "dup"),
+    3L -> Seq("dup", "zzznope"),
+    4L -> Seq("zzznope"),
+    5L -> Seq("vector"),
+    5L -> Seq("scan", "dup"))
+
+  /** `serve` run once per qid of [[multiBatch]] over the qid's
+    * concatenated terms; queries serving no rows are left out. */
+  private def perQuery(serve: Seq[String] => org.apache.spark.sql.DataFrame) =
+    multiBatch.groupBy(_._1)
+      .map { case (q, es) => q -> ranked(serve(es.flatMap(_._2))) }
+      .filter(_._2.nonEmpty)
+
+  test("searchIndexedMulti equals per-query searchIndexed on the sf0.001 postings") {
+    val post = Queries.bm25Postings(spark, sf0001)
+    val stats = Queries.bm25Stats(spark, sf0001)
+    val got = rankedMulti(BM25.searchIndexedMulti(post, stats, multiBatch, 10))
+    assert(got.keySet == Set(1L, 2L, 3L, 5L), "only the query matching nothing serves no rows")
+    assert(got == perQuery(ts => BM25.searchIndexed(post, stats, ts, 10)))
+  }
+
+  test("searchIndexedMulti: a term a query names twice scores twice") {
+    val post = BM25.postings(docs, "doc_id", "text")
+    val stats = BM25.statsFromPostings(post)
+    val got = rankedMulti(BM25.searchIndexedMulti(post, stats,
+      Seq(7L -> Seq("spark", "SPARK", "engine"), 8L -> Seq("spark", "engine")), 10))
+    assert(got(8L) == ranked(BM25.searchIndexed(post, stats, Seq("spark", "engine"), 10)))
+    // spark: df 2 (docs 1, 2); engine: df 2 (docs 1, 4)
+    val n = 4.0; val avgdl = 11.0 / 4
+    val idf = math.log(1 + (n - 2.0 + 0.5) / (2.0 + 0.5))
+    def s(tf: Double, len: Double) =
+      idf * tf * 2.5 / (tf + 1.5 * (1 - 0.75 + 0.75 * len / avgdl))
+    def r4(x: Double) = BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val want = Seq(1L -> r4(2 * s(2, 3) + s(1, 3)), 2L -> r4(2 * s(1, 3)), 4L -> r4(s(1, 2)))
+      .sortBy(-_._2)
+    assert(got(7L).map(_._1) == want.map(_._1))
+    assert(got(7L).map(_._2) == Seq(1L, 2L, 3L))
+    got(7L).zip(want).foreach { case (g, w) => assert(math.abs(g._3 - w._2) < 1e-9) }
+  }
+
+  test("searchIndexedMulti after deleteFromPostings, and searchIndexedMultiPinned, equal their per-query serves") {
+    val tbl = "bm25_multi_spec"
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    val path = java.nio.file.Files.createTempDirectory("bm25_multi").toString + "/t"
+    val corpus = spark.read.parquet(s"$sf0001/documents.parquet")
+    Queries.writePostings(spark, corpus, tbl, path, "overwrite")
+    val post = spark.table(tbl)
+    // the pre-delete stats: the sidecar-aware serves must re-derive them
+    val stats = BM25.statsFromPostings(post).localCheckpoint()
+    val del = corpus.filter(col("doc_id") % 7 === 3).select(col("doc_id").as("doc"))
+    assert(BM25.deleteFromPostings(spark, path, post, del) > 0L)
+    val got = rankedMulti(BM25.searchIndexedMulti(spark, path, post, stats, multiBatch, 10))
+    assert(got.values.flatten.forall(_._1 % 7 != 3), "a deleted doc was served")
+    assert(got == perQuery(ts => BM25.searchIndexed(spark, path, post, stats, ts, 10)))
+    val pin = Queries.postingsLivePath(spark, tbl)
+    assert(rankedMulti(BM25.searchIndexedMultiPinned(spark, pin, multiBatch, 10)) ==
+      perQuery(ts => BM25.searchIndexedPinned(spark, pin, ts, 10)))
+  }
 }

@@ -258,11 +258,14 @@ class PlanSpec extends SparkSpec {
   test("q149: ONE bucket-pruned postings scan serves every query; per-query top-k rides the heap") {
     val p = plan("q149_bm25_multi")
     // the multi-query contract: however many term-sets are scored,
-    // the bucketed postings table is scanned exactly ONCE for tf/len
-    // and once for the shared df stats — never once per query
-    val postingsScans = "Batched: .*bm25_postings".r.findAllIn(p).size
-    assert(postingsScans <= 2,
-      s"expected at most 2 postings scans (tf + df), got $postingsScans:\n$p")
+    // the bucketed postings table is scanned exactly ONCE — df, idf,
+    // scores and every query's heap come out of the one batch
+    // aggregate over that scan, with no df pass and no qid exchange
+    val postingsScans = """FileScan parquet \S*bm25_postings""".r.findAllIn(p).size
+    assert(postingsScans == 1,
+      s"expected exactly 1 postings scan, got $postingsScans:\n$p")
+    assert(!p.contains("count(distinct"), s"expected no separate df pass:\n$p")
+    assert(!p.contains("hashpartitioning(qid"), s"expected no exchange on qid:\n$p")
     assert(p.contains("SelectedBucketsCount"),
       s"expected the bucket-pruned postings scan:\n$p")
     // per-query top-k is the bounded-heap aggregate, not a window sort
@@ -283,6 +286,19 @@ class PlanSpec extends SparkSpec {
       s"expected heap top-k in the legs:\n$p")
     assert(!p.contains("CartesianProduct"),
       s"q150 degenerated to an unkeyed join:\n$p")
+  }
+
+  test("rrfFuseMulti is one aggregate grouped by qid: one exchange, no window") {
+    import spark.implicits._
+    val vec = Seq((1L, 10L, 1L), (1L, 20L, 2L), (2L, 30L, 1L)).toDF("qid", "vec_id", "rank")
+    val lex = Seq((1L, 20L, 1L), (2L, 40L, 1L)).toDF("qid", "doc", "rank")
+    val p = graft.hybrid.Hybrid.rrfFuseMulti(vec, "vec_id", lex, "doc", 60, 10)
+      .queryExecution.executedPlan.toString
+    assert(p.contains("graft_topk_sum("), s"expected the summing heap aggregate:\n$p")
+    assert(!p.contains("Window"), s"fusion grew a window:\n$p")
+    val exchanges = """\bExchange """.r.findAllIn(p).size
+    assert(exchanges == 1 && p.contains("Exchange hashpartitioning(qid"),
+      s"expected exactly one exchange, on qid, got $exchanges:\n$p")
   }
 
   test("q167: ONE routed nodes scan serves the whole query batch through the heap top-k") {

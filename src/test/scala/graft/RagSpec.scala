@@ -28,6 +28,37 @@ class RagSpec extends SparkSpec {
     assert(got.map(_._2).toSeq == Seq(1L, 2L, 3L, 4L))
   }
 
+  test("rrfFuseMulti equals rrfFuse for each qid") {
+    // qid 1: 20 in both legs, 10/30/40 in one leg each; qid 2: 10 and
+    // 20 tie on two terms, 30 and 40 on one (ties go to the lower id);
+    // qid 3: an empty lexical leg
+    val vec = Seq((1L, 10L, 1L), (1L, 20L, 2L), (1L, 30L, 3L),
+      (2L, 10L, 1L), (2L, 20L, 2L), (2L, 30L, 3L),
+      (3L, 50L, 1L), (3L, 60L, 2L)).toDF("qid", "vec_id", "rank")
+    val lex = Seq((1L, 20L, 1L), (1L, 40L, 2L),
+      (2L, 20L, 1L), (2L, 10L, 2L), (2L, 40L, 3L)).toDF("qid", "doc", "rank")
+    def fused(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), col("rank"), col("score")).as[(Long, Long, Double)]
+        .collect().toSeq.sortBy(_._2)
+    def check(vec: org.apache.spark.sql.DataFrame, lex: org.apache.spark.sql.DataFrame,
+              k: Int): Unit = {
+      val got = Hybrid.rrfFuseMulti(vec, "vec_id", lex, "doc", 60, k)
+        .select(col("qid"), col("id"), col("rank"), col("score"))
+        .as[(Long, Long, Long, Double)].collect().toSeq
+        .groupBy(_._1).map { case (q, rs) => q -> rs.map(r => (r._2, r._3, r._4)).sortBy(_._2) }
+      val want = Seq(1L, 2L, 3L).map(q => q -> fused(Hybrid.rrfFuse(
+        vec.filter(col("qid") === q), "vec_id", lex.filter(col("qid") === q), "doc", 60, k)))
+        .filter(_._2.nonEmpty).toMap
+      assert(got == want, s"k = $k")
+    }
+    check(vec, lex, 10) // k larger than every qid's fused count
+    check(vec, lex, 2)
+    check(vec, lex.limit(0), 10)
+    val ties = fused(Hybrid.rrfFuseMulti(vec, "vec_id", lex, "doc", 60, 10)
+      .filter(col("qid") === 2L))
+    assert(ties.map(_._1) == Seq(10L, 20L, 30L, 40L))
+  }
+
   test("q118: fused top-10 ⊆ union of the two candidate lists, ranks dense") {
     val df = RetrievalQueries.q118RrfFusion(spark, sf0001)
       .select(col("id"), col("rank")).as[(Long, Long)].collect()

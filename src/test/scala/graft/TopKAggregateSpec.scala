@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.graftnative.{BatchTopK, QueryBatch, TopKBuffer, TopKByScore}
+import org.apache.spark.sql.graftnative.{BatchBM25, BatchTopK, LexicalBatch, QueryBatch, SumTopK, TopKBuffer, TopKByScore}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** TopKBuffer / TopKByScore kernel semantics (the DataFrame-level
@@ -110,5 +111,58 @@ class TopKAggregateSpec extends AnyFunSuite {
       BatchTopK(id, vec, None, batch.routed(Seq((0, 1L))), 1)
     }
     intercept[IllegalArgumentException](BatchTopK(id, vec, None, batch, 0))
+  }
+
+  /** Run `agg` over `rows` as two tasks split at `at`, whose partial
+    * buffers travel serialized and merge in the given order; the
+    * evaluated output's `width`-field structs out. */
+  private def runSplit[B](agg: org.apache.spark.sql.catalyst.expressions.aggregate
+      .TypedImperativeAggregate[B], rows: Seq[InternalRow], at: Int, width: Int,
+      swap: Boolean = false): Seq[Seq[Any]] = {
+    val (a, b) = rows.splitAt(at)
+    def partial(rs: Seq[InternalRow]) =
+      agg.deserialize(agg.serialize(rs.foldLeft(agg.createAggregationBuffer())(agg.update)))
+    val (x, y) = if (swap) (partial(b), partial(a)) else (partial(a), partial(b))
+    val out = agg.eval(agg.merge(x, y)).asInstanceOf[ArrayData]
+    (0 until out.numElements()).map { i =>
+      val r = out.getStruct(i, width)
+      (0 until width).map(j => if (j == width - 1) r.getDouble(j) else r.getLong(j))
+    }
+  }
+
+  test("BatchBM25: one answer however rows split and merge; NULL and out-of-batch rows add nothing") {
+    val batch = LexicalBatch(Seq(1L -> Seq("a", "b"), 2L -> Seq("B", "b"), 3L -> Seq("zz")))
+    val agg = BatchBM25(BoundReference(0, StringType, nullable = true),
+      BoundReference(1, LongType, nullable = true), BoundReference(2, DoubleType, nullable = true),
+      BoundReference(3, DoubleType, nullable = true), BoundReference(4, DoubleType, nullable = false),
+      BoundReference(5, DoubleType, nullable = false), batch, 2)
+    def row(t: String, doc: Any, tf: Any, len: Double) =
+      InternalRow(UTF8String.fromString(t), doc, tf, len, 4.0, 3.0)
+    // doc 2 carries two "b" rows: both add, in (doc, tf, len) order
+    val rows = Seq(row("a", 1L, 2.0, 3.0), row("b", 1L, 1.0, 3.0), row("b", 2L, 1.0, 4.0),
+      row("b", 2L, 3.0, 4.0), row("a", 3L, 1.0, 2.0))
+    val noise = Seq(row("c", 4L, 1.0, 3.0), row("a", null, 1.0, 3.0), row("b", 5L, null, 3.0))
+    val want = runSplit(agg, rows, 2, 4)
+    for (at <- 0 to rows.size + noise.size; swap <- Seq(false, true))
+      assert(runSplit(agg, (rows ++ noise).reverse, at, 4, swap) == want, s"split $at swap $swap")
+    // by hand: df(a) = 2 (docs 1, 3), df(b) = 2 (docs 1, 2); N 4, avgdl 3
+    val idf = StrictMath.log(1.0 + (4.0 - 2 + 0.5) / (2 + 0.5))
+    def s(tf: Double, len: Double) = idf * tf * 2.5 / (tf + 1.5 * (0.25 + 0.75 * len / 3.0))
+    assert(want == Seq(
+      Seq(1L, 1L, 1L, 0.0 + s(2, 3) + s(1, 3)), Seq(1L, 2L, 2L, 0.0 + s(1, 4) + s(3, 4)),
+      Seq(2L, 2L, 1L, 0.0 + s(1, 4) + s(3, 4) + s(1, 4) + s(3, 4)),
+      Seq(2L, 1L, 2L, 0.0 + s(1, 3) + s(1, 3))))
+    intercept[IllegalArgumentException](agg.copy(k = 0))
+  }
+
+  test("SumTopK: per-id sums across partial buffers; NULL ids and scores add nothing") {
+    val agg = SumTopK(BoundReference(0, LongType, nullable = true),
+      BoundReference(1, DoubleType, nullable = true), 2)
+    val rows = Seq(InternalRow(10L, 0.25), InternalRow(20L, 0.5), InternalRow(30L, 0.125),
+      InternalRow(10L, 0.5), InternalRow(null, 9.0), InternalRow(30L, null))
+    for (at <- 0 to rows.size; swap <- Seq(false, true))
+      assert(runSplit(agg, rows, at, 3, swap) ==
+        Seq(Seq(10L, 1L, 0.25 + 0.5), Seq(20L, 2L, 0.5)), s"split $at swap $swap")
+    intercept[IllegalArgumentException](agg.copy(k = 0))
   }
 }
