@@ -46,8 +46,9 @@ object Gates {
     * name-agnostic resolution — an input column named `a.b` or
     * carrying backticks can never collide with a grouping reference,
     * and the reserved `__gate_*` names can never clash with input
-    * names. `private[graft]` so the plan-evidence dump
-    * (Scratch `gateplans`) plans the REAL gate instead of a copy. */
+    * names. `private[graft]` so GatesSpec (and the plan-evidence dump,
+    * Scratch `gateplans` at commit 87ba306) plans the REAL gate
+    * instead of a copy. */
   private[graft] def signedCounts(a: DataFrame, b: DataFrame): DataFrame = {
     require(b.columns.length == a.columns.length,
       s"Gates: column arity mismatch (${a.columns.length} vs ${b.columns.length})")

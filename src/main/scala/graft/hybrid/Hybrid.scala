@@ -26,29 +26,21 @@ object Hybrid {
     * default over the reference's unscored set-union
     * (`src/pipeline/pipeline_mode.py:244-258`): candidates agreeing
     * across retrievers rise deterministically instead of arriving in
-    * set order. Shape: the two k-row reciprocal-term lists UNION and
-    * hash-aggregate on id — driver-free, exchange bounded by the
-    * candidate count, corpus never touched, and (unlike a full-outer
-    * join, which Spark cannot broadcast) no sort-merge anywhere. The
-    * per-id sum has at most two terms, so IEEE commutativity makes
-    * the double result independent of merge order — bit-identical to
-    * the oracle's fixed-order (vec, lex) addition. */
+    * set order. [[rrfFuseMulti]] on a batch of one: the two k-row
+    * term lists feed one sum-and-heap aggregate — driver-free, the
+    * corpus never touched, no join. Output (id, rank, score), id in
+    * the type the two legs' ids widen to. */
   def rrfFuse(vec: DataFrame, vecIdCol: String,
               lex: DataFrame, lexIdCol: String,
               c: Int, k: Int): DataFrame = {
-    val v = vec.select(col(vecIdCol).as("id"),
-      (lit(1.0) / (lit(c) + col("rank"))).as("__t"))
-    val l = lex.select(col(lexIdCol).as("id"),
-      (lit(1.0) / (lit(c) + col("rank"))).as("__t"))
-    v.union(l)
-      .groupBy("id").agg(sum(col("__t")).as("__s"))
-      .orderBy(col("__s").desc, col("id").asc)
-      .limit(k)
-      .withColumn("rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(lit(0))
-          .orderBy(col("__s").desc, col("id").asc)).cast("long"))
-      .select(col("id"), col("rank"), round(col("__s"), 6).as("score"))
+    val idType = vec.select(col(vecIdCol)).union(lex.select(col(lexIdCol)))
+      .schema.head.dataType
+    rrfFuseMulti(vec.withColumn("qid", lit(0L)), vecIdCol,
+        lex.withColumn("qid", lit(0L)), lexIdCol, c, k)
+      .select(col("id").cast(idType).as("id"), col("rank"), col("score"))
+      // k rows: one partition, so a consumer's global aggregate or
+      // sort over the fused list needs no further exchange
+      .coalesce(1)
   }
 
   /** MULTI-QUERY [[rrfFuse]]: both legs carry (qid, id, rank) for a
@@ -58,7 +50,7 @@ object Hybrid {
     * Fusion is ONE aggregate grouped by qid, `graft_topk_sum`
     * ([[org.apache.spark.sql.graftnative.SumTopK]]): per query it sums
     * each id's reciprocal-rank terms (at most one per leg, so the sum
-    * is order-free and bit-identical to [[rrfFuse]]'s) and keeps the
+    * is order-free: IEEE addition of two terms commutes) and keeps the
     * top k by (score desc, id asc). The only exchange is the one on
     * qid, carrying the map-side partial sums — no (qid, id) exchange,
     * no sort, no window; the corpus-sized artifacts were already read

@@ -1,7 +1,6 @@
 package graft.lexical
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftnative.{LexicalBatch, TopKAggregate}
 
@@ -12,8 +11,8 @@ import org.apache.spark.sql.graftnative.{LexicalBatch, TopKAggregate}
   * (`src/pipeline/pipeline.py:166-176`). Here the corpus statistics
   * (term frequencies, document frequencies, document lengths, average
   * length) are DataFrames built once and reusable/cacheable across
-  * queries; scoring one query is a broadcast semi-join against the
-  * query's terms plus one aggregation — O(matching postings), not
+  * queries; scoring a query batch is one term-filtered postings scan
+  * into one scoring aggregate — O(matching postings), not
   * O(corpus).
   *
   * Scoring formula (Robertson/Okapi, k1=1.5 b=0.75):
@@ -85,10 +84,10 @@ object BM25 {
     search(docs, idCol, textCol, queryTerms, k, corpusStats(docs, textCol))
 
   /** Score `queryTerms` against the corpus; returns (doc, rank, score)
-    * top-k. The postings side is filtered to the query's terms BEFORE
-    * any join (predicate pushdown into the postings scan), the
-    * term-stats side is broadcast, and top-k is TakeOrderedAndProject.
-    * `corpus` is the (possibly memoized) [[corpusStats]] frame. */
+    * top-k. The token arrays are filtered to the query's terms BEFORE
+    * the explode and the resulting postings are served by
+    * [[searchIndexed]]. `corpus` is the (possibly memoized)
+    * [[corpusStats]] frame. */
   def search(docs: DataFrame, idCol: String, textCol: String,
              queryTerms: Seq[String], k: Int, corpus: DataFrame): DataFrame = {
     // postings of the QUERY TERMS only: the token array is filtered
@@ -103,7 +102,7 @@ object BM25 {
         explode(filter(col("toks"), t => t.isin(terms: _*))).as("term"))
       .groupBy("doc", "len", "term")
       .agg(count(lit(1)).cast("double").as("tf"))
-    scorePostings(post, corpus, k)
+    searchIndexed(post, corpus, terms, k)
   }
 
   /** Files per term bucket of a persisted postings table — the
@@ -121,19 +120,29 @@ object BM25 {
       .groupBy(identity).map { case (b, fs) => b -> fs.size }
 
   /** [[search]] over a PRE-BUILT postings frame (the [[postings]]
-    * output, memoized once per corpus): per-query work is a filter on
-    * the materialized (doc, term, tf) rows plus the scoring join —
-    * the corpus is never re-tokenized. With the stats memo this is
-    * the engine's full escape from the reference's
+    * output, memoized once per corpus): [[searchIndexedMulti]] on a
+    * batch of one — a term-filtered postings scan into one scoring
+    * aggregate; the corpus is never re-tokenized. With the stats memo
+    * this is the engine's full escape from the reference's
     * rebuild-BM25-per-query anti-pattern (`src/pipeline/pipeline.py:171-172`,
     * SURVEY §7.5): build once, score many. Values are identical to
     * [[search]] — tf/df/len come out the same whether the term filter
     * runs before or after the tf aggregation. */
   def searchIndexed(post: DataFrame, corpus: DataFrame,
-                    queryTerms: Seq[String], k: Int): DataFrame = {
-    val terms = queryTerms.map(_.toLowerCase)
-    scorePostings(post.filter(col("term").isin(terms: _*)), corpus, k)
-  }
+                    queryTerms: Seq[String], k: Int): DataFrame =
+    single(searchIndexedMulti(post, corpus, oneQuery(queryTerms), k), post)
+
+  /** `queryTerms` as a batch of one, lower-cased and distinct: a term
+    * the query names twice still scores once (the batch kernel scores
+    * a repeated term per mention). */
+  private def oneQuery(queryTerms: Seq[String]): Seq[(Long, Seq[String])] =
+    Seq((0L, queryTerms.map(_.toLowerCase).distinct))
+
+  /** A batch-of-one result in the single-query contract: (doc, rank,
+    * score), doc in `post`'s own id type. */
+  private def single(batch: DataFrame, post: DataFrame): DataFrame =
+    batch.select(col("doc").cast(post.schema("doc").dataType).as("doc"),
+      col("rank"), col("score"))
 
   /** The postings table's DELETE SIDECAR path — the lexical twin of
     * the IVF `tomb__<lists>` sidecar, keyed to the DATA path (the
@@ -228,11 +237,7 @@ object BM25 {
   def searchIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                     post: DataFrame, corpus: DataFrame,
                     queryTerms: Seq[String], k: Int): DataFrame =
-    if (!hasTomb(path)) searchIndexed(post, corpus, queryTerms, k)
-    else {
-      val live = livePostings(spark, path, post)
-      searchIndexed(live, statsFromPostings(live), queryTerms, k)
-    }
+    single(searchIndexedMulti(spark, path, post, corpus, oneQuery(queryTerms), k), post)
 
   /** MULTI-QUERY [[searchIndexed]] — ONE postings scan serves every
     * query (the [[graft.search.IVF.searchIndexMulti]] contract on the
@@ -250,8 +255,9 @@ object BM25 {
     * exchange is the aggregate's single merge. Entries sharing a qid
     * score as one query over their concatenated terms, and a term a
     * query names twice scores twice. Output (qid, doc, rank, score);
-    * scores equal per-query [[searchIndexed]] calls for queries
-    * without repeated terms. */
+    * the single-query serves ([[searchIndexed]] and its sidecar and
+    * pinned twins) run this kernel on a batch of one whose terms are
+    * made distinct. */
   def searchIndexedMulti(post: DataFrame, corpus: DataFrame,
                          queries: Seq[(Long, Seq[String])],
                          k: Int): DataFrame = {
@@ -304,10 +310,9 @@ object BM25 {
     * .compactPostings]] flip. */
   def searchIndexedPinned(spark: org.apache.spark.sql.SparkSession,
                           pinnedPath: String, queryTerms: Seq[String],
-                          k: Int): DataFrame = {
-    val live = livePostings(spark, pinnedPath, postingsPinned(spark, pinnedPath))
-    searchIndexed(live, statsFromPostings(live), queryTerms, k)
-  }
+                          k: Int): DataFrame =
+    searchIndexedPinnedWith(spark, pinnedPath, postingsPinned(spark, pinnedPath),
+      queryTerms, k)
 
   /** SIDECAR-AWARE [[searchIndexedMulti]] — the default multi-query
     * serve for a postings table that supports deletion (the
@@ -353,10 +358,9 @@ object BM25 {
     * answers are identical to [[searchIndexedPinned]]. */
   def searchIndexedPinnedWith(spark: org.apache.spark.sql.SparkSession,
                               pinnedPath: String, post: DataFrame,
-                              queryTerms: Seq[String], k: Int): DataFrame = {
-    val live = livePostings(spark, pinnedPath, post)
-    searchIndexed(live, statsFromPostings(live), queryTerms, k)
-  }
+                              queryTerms: Seq[String], k: Int): DataFrame =
+    single(searchIndexedMultiPinnedWith(spark, pinnedPath, post, oneQuery(queryTerms), k),
+      post)
 
   /** [[searchIndexedMultiPinned]] with a caller-supplied (bucketed)
     * postings frame — the batch server's bucket-pruned pin. */
@@ -366,28 +370,5 @@ object BM25 {
                                    k: Int): DataFrame = {
     val live = livePostings(spark, pinnedPath, post)
     searchIndexedMulti(live, statsFromPostings(live), queries, k)
-  }
-
-  private def scorePostings(post: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val stats = post.groupBy("term")
-      .agg(countDistinct(col("doc")).cast("double").as("df"))
-      .crossJoin(broadcast(corpus))
-      .withColumn("idf",
-        log(lit(1.0) + (col("__n") - col("df") + 0.5) / (col("df") + 0.5)))
-      .select(col("term"), col("idf"), col("__avgdl"))
-    val scored = post
-      .join(broadcast(stats), "term")
-      .withColumn("s",
-        col("idf") * col("tf") * (K1 + 1.0) /
-          (col("tf") + lit(K1) * (lit(1.0 - B) + lit(B) * col("len") / col("__avgdl"))))
-      .groupBy("doc")
-      .agg(sum(col("s")).as("score"))
-      .orderBy(col("score").desc, col("doc").asc)
-      .limit(k)
-    scored
-      .withColumn("rank",
-        row_number().over(Window.partitionBy(lit(0))
-          .orderBy(col("score").desc, col("doc").asc)).cast("long"))
-      .select(col("doc"), col("rank"), round(col("score"), 4).as("score"))
   }
 }

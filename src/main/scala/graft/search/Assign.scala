@@ -32,8 +32,9 @@ import org.apache.spark.sql.functions._
   *    flat fold whenever every true top-R cell has one of its 2
   *    supercells among the vector's top-S — AssignSpec pins exact
   *    equality on the 160-cell clustered fixture; the round-18
-  *    `graphbig` sweeps measure recall parity at 480/1500 cells and
-  *    SCALE.md carries the build-time rungs.
+  *    `graphbig` sweeps (Scratch, commit 87ba306) measure recall
+  *    parity at 480/1500 cells and SCALE.md carries the build-time
+  *    rungs.
   *
   * Both regimes are pure deterministic functions of (vector, cell
   * table), so append ≡ rebuild bit-identity gates (q84/q97/q99/q165

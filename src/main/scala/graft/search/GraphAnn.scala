@@ -661,9 +661,9 @@ object GraphAnn {
     * The pre-17 default probed coverage 1.5, i.e. ceil(1.5·parts/R)
     * cells: a constant FRACTION of the index, which at fleet scale
     * reads half the index per serve. The round-17 fixed-count sweep
-    * (Scratch `graphfixed`, 50 queries, recall@10 vs exact, R=3,
-    * ef ∈ {48, 96}) retired the fraction: at 10× (parts=40) recall
-    * is BIT-IDENTICAL to the full unpruned scan from P=3 upward
+    * (Scratch `graphfixed` at commit 87ba306, 50 queries, recall@10
+    * vs exact, R=3, ef ∈ {48, 96}) retired the fraction: at 10×
+    * (parts=40) recall is BIT-IDENTICAL to the full unpruned scan from P=3 upward
     * (0.944/0.978 — the same values the round-11 coverage sweep
     * measured at coverage 0.75–full), and at 30× (parts=120)
     * likewise from P=3 (0.984/0.992), with even P=2 (coverage 0.05)
@@ -680,8 +680,9 @@ object GraphAnn {
     * measured only to 120 cells, but a linear-in-N serving term all
     * the same). The round-18 `graphbig` sweeps closed the next two
     * decades: perturbed-copy clustered corpora at 240k vectors /
-    * parts = 480 and 750k vectors / parts = 1500 (Scratch `graphbig`,
-    * 50 queries, recall@10 vs the exact scan, R=3) measure recall
+    * parts = 480 and 750k vectors / parts = 1500 (Scratch `graphbig`
+    * at commit 87ba306, 50 queries, recall@10 vs the exact scan, R=3)
+    * measure recall
     * 1.0000 at CONSTANT P ∈ {3, 8, 16} × ef ∈ {48, 96} at BOTH
     * rungs — routing loss at a fixed probe count stays zero through
     * two more orders of magnitude of cell count, so the linear guard
@@ -689,8 +690,9 @@ object GraphAnn {
     * default. The remaining guard is the full-scan floor below 8
     * cells.
     *
-    * R = 2 indexes flipped the same round (`graphfixedr2`, the same
-    * grid on R=2 indexes at parts ∈ {40, 120, 480}): recall at
+    * R = 2 indexes flipped the same round (Scratch `graphfixedr2` at
+    * commit 87ba306, the same grid on R=2 indexes at parts ∈ {40,
+    * 120, 480}): recall at
     * constant P is FLAT and equal to the full unpruned scan at every
     * rung (0.916/0.960 at 40 cells — the exact round-11 full-scan
     * values, the beam is the ceiling there, not the probe —
@@ -2092,10 +2094,9 @@ object GraphAnn {
 
 /** Deterministic clustered test corpus — `nClusters` tight unit-norm
   * clusters of `perCluster` points each (LCG-seeded centers, 0.08
-  * noise) — the ONE generator GraphAnnSpec's clustered serving case
-  * and Scratch's `clustdiag` share, so the diagnostic always measures
-  * exactly the corpus the spec pins. Dev/spec fixture only; not part
-  * of the query surface. */
+  * noise) — the corpus of GraphAnnSpec's clustered serving case
+  * (Scratch `clustdiag` at commit 87ba306 diagnosed this same
+  * corpus). Dev/spec fixture only; not part of the query surface. */
 private[graft] object ClusteredFixture {
   def rows(dim: Int = 16, nClusters: Int = 16,
            perCluster: Int = 125): Seq[(Long, Seq[Double])] = {

@@ -939,23 +939,6 @@ object IVF {
     Search.batchTopK(lists, idCol, vecCol, batch.routed(pairs), Some(col("cid")), k)
   }
 
-  /** IVF search: probe the query's `nprobe` best lists, exact re-rank
-    * inside them. Output (id, rank, score) like Search.topK. */
-  def ivfTopK(docs: DataFrame, idCol: String, vecCol: String,
-              query: DataFrame, queryVecCol: String,
-              k: Int, nCentroids: Int, nprobe: Int): DataFrame =
-    ivfTopKWith(centroids(docs, idCol, vecCol, nCentroids),
-      docs, idCol, vecCol, query, queryVecCol, k, nprobe)
-
-  /** [[ivfTopK]] against a CALLER-SUPPLIED centroid table — the entry
-    * point for refined quantizers (q58 passes [[refine]]'s output) or
-    * any externally-trained codebook. */
-  def ivfTopKWith(cents: DataFrame, docs: DataFrame, idCol: String, vecCol: String,
-                  query: DataFrame, queryVecCol: String,
-                  k: Int, nprobe: Int): DataFrame =
-    ivfTopKAssigned(assign(docs, idCol, vecCol, cents), cents,
-      idCol, vecCol, query, queryVecCol, k, nprobe)
-
   /** Single-query IVF search over a PRE-ASSIGNED corpus (the memoized
     * or persisted index): per-query work is centroid ranking + the
     * probed-list scan, never a fresh assignment. */

@@ -39,9 +39,9 @@ object PQ {
     * inflation, no exchange; the plan is scan → project → top-k, the
     * same shape as Search.topK.
     *
-    * `query` must be a ONE-ROW frame (same contract as Search.topK /
-    * IVF.ivfTopK — it is broadcast and cross-joined, so a multi-row
-    * frame would interleave both queries' scores in one ranked list);
+    * `query` must be a ONE-ROW frame (same contract as Search.topK —
+    * it is broadcast and cross-joined, so a multi-row frame would
+    * interleave both queries' scores in one ranked list);
     * multi-query scoring goes through Search.multiTopK-style qid
     * plumbing instead. */
   def adcTopK(docs: DataFrame, idCol: String, vecCol: String,

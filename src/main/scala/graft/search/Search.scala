@@ -24,8 +24,8 @@ object Search {
     * is intentional and harmless. The shared spec centralizes that
     * intent; note the literal partition key is CONSTANT-FOLDED AWAY
     * by Spark 4's optimizer (verified empirically), so it does NOT
-    * suppress WindowExec's "No Partition Defined" warning — the
-    * harness mains mute that logger instead (see Bench.scala). */
+    * suppress WindowExec's "No Partition Defined" warning —
+    * `graft.Sessions.local` mutes that logger instead. */
   private[search] val wAll = Window.partitionBy(lit(0))
 
   /** The bounded-heap top-k aggregate carries ids as long; a

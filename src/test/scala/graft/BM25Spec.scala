@@ -34,6 +34,41 @@ class BM25Spec extends SparkSpec {
       .orderBy("rank").select("doc").as[Long].collect().toSeq
     assert(got.size == 2)
     assert(got.head == 1L) // doc 1 matches both terms
+    // a term named twice, or in another case, still scores once
+    def served(terms: Seq[String]) = BM25.search(docs, "doc_id", "text", terms, 10)
+      .select("doc", "rank", "score").as[(Long, Long, Double)].collect().toSeq.sortBy(_._2)
+    assert(served(Seq("spark", "SPARK", "engine", "Spark")) == served(Seq("spark", "engine")))
+  }
+
+  test("single-query serves keep the doc id type of the corpus or postings") {
+    val intDocs = docs.select(col("doc_id").cast("int").as("doc_id"), col("text"))
+    val post = BM25.postings(intDocs, "doc_id", "text")
+    val stats = BM25.statsFromPostings(post)
+    val path = java.nio.file.Files.createTempDirectory("bm25_int").toString + "/p"
+    post.write.parquet(path)
+    val contract = Seq("doc" -> "int", "rank" -> "bigint", "score" -> "double")
+    val want = Seq(1 -> 1L, 4 -> 2L, 2 -> 3L) // doc 4 is shorter than doc 2
+    Seq(
+      "search" -> BM25.search(intDocs, "doc_id", "text", Seq("spark", "engine"), 10),
+      "search(corpus)" -> BM25.search(intDocs, "doc_id", "text", Seq("spark", "engine"), 10,
+        BM25.corpusStats(intDocs, "text")),
+      "searchIndexed" -> BM25.searchIndexed(post, stats, Seq("spark", "engine"), 10),
+      "searchIndexed(path)" -> BM25.searchIndexed(spark, path, post, stats,
+        Seq("spark", "engine"), 10),
+      "searchIndexedPinned" -> BM25.searchIndexedPinned(spark, path,
+        Seq("spark", "engine"), 10),
+      "searchIndexedPinnedWith" -> BM25.searchIndexedPinnedWith(spark, path,
+        spark.read.parquet(path), Seq("spark", "engine"), 10)
+    ).foreach { case (what, df) =>
+      assert(df.schema.map(f => f.name -> f.dataType.simpleString) == contract, what)
+      assert(df.select("doc", "rank").as[(Int, Long)].collect().toSeq.sortBy(_._2) == want,
+        what)
+    }
+    // a postings row without a doc id is never served
+    val nullDoc = post.unionByName(
+      Seq((Option.empty[Int], 3.0, "spark", 1.0)).toDF("doc", "len", "term", "tf"))
+    assert(BM25.searchIndexed(nullDoc, stats, Seq("spark", "engine"), 10)
+      .select("doc", "rank").as[(Int, Long)].collect().toSeq.sortBy(_._2) == want)
   }
 
   test("statsFromPostings recovers corpusStats exactly (incl. empty AND null text)") {

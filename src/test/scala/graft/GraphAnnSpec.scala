@@ -53,7 +53,8 @@ class GraphAnnSpec extends SparkSpec {
     // IVF at nprobe=2 of 8 lists reads ~1/4 of the corpus — a probe
     // budget comparable to ef=48 beams per partition on this corpus
     val ivfRecall = recallOf(q =>
-      IVF.ivfTopK(emb, "vec_id", "v", query(q), "qv", 10, 8, 2)
+      IVF.ivfMultiTopK(emb, "vec_id", "v", query(q).withColumn("qid", lit(q)),
+          "qid", "qv", 10, 8, 2)
         .select("vec_id").as[Long].collect().toSeq)
     assert(graphRecall >= 0.9, s"graph recall $graphRecall below floor")
     assert(graphRecall >= ivfRecall,
@@ -101,6 +102,17 @@ class GraphAnnSpec extends SparkSpec {
     got.foreach { case (id, _, s) => assert(exact(id) == s) }
     // serving is deterministic: the graph is at rest, not rebuilt
     assert(run() == run())
+    assert(GraphAnn.searchIndex(spark, path, "vec_id", query(0), "qv", 10, ef = 48)
+      .schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("vec_id" -> "bigint", "rank" -> "bigint", "score" -> "double"))
+    // every vector lives in several cells; a full-probe serve finds
+    // the replicas in their cells and still serves each id once
+    assert(GraphAnn.DefaultReplicas > 1)
+    val wide = GraphAnn.searchIndex(spark, path, "vec_id", query(0), "qv", 60, ef = 64,
+        probeParts = Int.MaxValue)
+      .select("vec_id").as[Long].collect().toSeq
+    assert(wide.size == 60 && wide.distinct.size == wide.size,
+      s"a replicated id was served twice: ${wide.diff(wide.distinct)}")
   }
 
   test("searchIndexMulti matches per-query searchIndex over the same index") {

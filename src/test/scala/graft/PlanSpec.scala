@@ -95,8 +95,10 @@ class PlanSpec extends SparkSpec {
     val p = plan("q118_rrf_fusion")
     assert(!p.contains("SortMergeJoin"), s"q118 sort-merged the fusion:\n$p")
     // the fusion is a hash aggregate over the ≤2k unioned term rows:
-    // both legs end in a bounded heap before the union
-    assert(p.contains("TakeOrderedAndProject"), s"expected heap top-k legs:\n$p")
+    // both legs end in a bounded heap before the union: the vector
+    // leg's TakeOrderedAndProject, the lexical leg's BM25 kernel
+    assert(p.contains("TakeOrderedAndProject") && p.contains("graft_topk_bm25("),
+      s"expected heap top-k legs:\n$p")
     assert(p.contains("HashAggregate"), s"expected the fused-sum aggregate:\n$p")
   }
 
@@ -230,9 +232,11 @@ class PlanSpec extends SparkSpec {
   test("q20: BM25 scores from the materialized postings index, never re-tokenizing") {
     val p = plan("q20_bm25")
     // the declared path reads the memoized postings (Memo.cached
-    // checkpoint) with a term filter — a Generate would mean the
-    // corpus is being exploded per query again
-    assert(!p.contains("Generate explode"))
+    // checkpoint) with a term filter — a token Generate (or the
+    // tokenizer's split) would mean the corpus is being exploded per
+    // query again; the one Generate explodes the kernel's top-k array
+    assert("Generate explode\\((?!__tk)".r.findFirstIn(p).isEmpty && !p.contains("split("),
+      s"the postings must not be re-tokenized:\n$p")
     // the term filter must actually appear (INSET for the 3-term
     // list, or an IN/equality form if the term count changes)
     assert(p.contains("INSET") || p.contains("term#") && p.contains(" IN "),

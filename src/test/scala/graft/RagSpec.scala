@@ -26,6 +26,21 @@ class RagSpec extends SparkSpec {
       30L -> r6(1.0 / 63))
     assert(got.map(g => (g._1, g._3)).toSeq == want)
     assert(got.map(_._2).toSeq == Seq(1L, 2L, 3L, 4L))
+    // the fused id keeps the type the two legs' ids widen to
+    val intVec = vec.select(col("vec_id").cast("int").as("vec_id"), col("rank"))
+    val intLex = lex.select(col("doc").cast("int").as("doc"), col("rank"))
+    Seq((intVec, intLex, "int"), (intVec, lex, "bigint")).foreach { case (v, l, t) =>
+      val fused = Hybrid.rrfFuse(v, "vec_id", l, "doc", 60, 10)
+      assert(fused.schema.map(f => f.name -> f.dataType.simpleString) ==
+        Seq("id" -> t, "rank" -> "bigint", "score" -> "double"), t)
+      assert(fused.select(col("id").cast("long"), col("rank"), col("score"))
+        .as[(Long, Long, Double)].collect().sortBy(_._2).toSeq == got.toSeq, t)
+    }
+    // a NULL id in a leg fuses with nothing and is never served
+    val nullVec = vec.union(Seq((Option.empty[Long], 1L)).toDF("vec_id", "rank"))
+    assert(Hybrid.rrfFuse(nullVec, "vec_id", lex, "doc", 60, 10)
+      .select(col("id"), col("rank"), col("score"))
+      .as[(Long, Long, Double)].collect().sortBy(_._2).toSeq == got.toSeq)
   }
 
   test("rrfFuseMulti equals rrfFuse for each qid") {

@@ -183,8 +183,9 @@ class SearchSpec extends SparkSpec {
     assert(cents.count() == 8)
     val assigned = IVF.assign(emb, "vec_id", "v", cents)
     assert(assigned.count() == emb.count()) // every vector lands in exactly one list
-    val got = IVF.ivfTopK(emb, "vec_id", "v",
-      emb.filter(col("vec_id") === 1).select(col("v").as("qv")), "qv", 10, 8, 2)
+    val got = IVF.ivfMultiTopK(emb, "vec_id", "v",
+      emb.filter(col("vec_id") === 1).select(col("vec_id").as("qid"), col("v").as("qv")),
+      "qid", "qv", 10, 8, 2)
       .select("vec_id", "rank").as[(Long, Long)].collect()
     assert(got.length == 10)
     assert(got.map(_._2).sorted.toSeq == (1L to 10L))
@@ -409,7 +410,8 @@ class SearchSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 1).select(col("v").as("qv"))
     val fromIndex = IVF.searchIndex(spark, path, "vec_id", "v", q, "qv", 10, 2)
       .select("vec_id", "rank").as[(Long, Long)].collect().toSeq
-    val inMemory = IVF.ivfTopK(emb, "vec_id", "v", q, "qv", 10, 8, 2)
+    val inMemory = IVF.ivfMultiTopK(emb, "vec_id", "v", q.withColumn("qid", lit(1L)),
+        "qid", "qv", 10, 8, 2)
       .select("vec_id", "rank").as[(Long, Long)].collect().toSeq
     assert(fromIndex == inMemory)
     // the probe is a genuine partition filter on the lists scan
