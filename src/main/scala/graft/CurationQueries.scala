@@ -582,8 +582,8 @@ object CurationQueries {
     import s.implicits._
     val d = docs(s, dir)
     val mut = PipelineQueries.roundtripPath(dir, "q188_bands")
-    // clear the register AND its siblings (__applied ledger, __tomb,
-    // __genN) from a prior run — the maintenance copy starts fresh
+    // clear the register AND its siblings (__applied ledger, delete
+    // sidecar, __genN) from a prior run — the maintenance copy starts fresh
     Option(new java.io.File(mut).getParentFile.listFiles()).toSeq.flatten
       .filter(_.getName.startsWith("q188_bands"))
       .foreach(graft.FileTree.delete)
@@ -936,7 +936,7 @@ object CurationQueries {
       .join(broadcast(req), Seq("id"), "left_semi").count()
     val live = Dedup.compactRegister(s, mut, q98SigBuckets)
     require(live != mut, "q169: compaction must return a fresh generation")
-    require(!new java.io.File(Dedup.registerTombPath(live)).isDirectory,
+    require(!Tombstones.exists(Tombstones.beside(live)),
       "q169: the compacted generation must start with a clean sidecar")
     require(s.read.parquet(live).count() == rawRows - forgottenRows,
       "q169: compaction must drop exactly the forgotten docs' band rows")
@@ -1068,7 +1068,7 @@ object CurationQueries {
     require(s.read.parquet(live)
         .join(broadcast(req), Seq("id"), "left_semi").isEmpty,
       "q170: a forgotten doc's bands survived the rewrite")
-    require(!new java.io.File(Dedup.registerTombPath(live)).isDirectory,
+    require(!Tombstones.exists(Tombstones.beside(live)),
       "q170: the compacted generation must start with a clean sidecar")
     s.read.parquet(out).orderBy("id1", "id2")
   }
@@ -1158,7 +1158,7 @@ object CurationQueries {
     val live = Dedup.appendToRegister(s, mut, revBands, q98SigBuckets)
     require(live != mut,
       "q177: the revive append must pull the deferred compaction forward")
-    require(!new java.io.File(Dedup.registerTombPath(live)).isDirectory,
+    require(!Tombstones.exists(Tombstones.beside(live)),
       "q177: the post-revive generation must start with a clean sidecar")
     require(s.read.parquet(live)
         .join(broadcast(d.filter(stayPred).select(col("doc_id").as("id"))),
@@ -1287,7 +1287,7 @@ object CurationQueries {
     require(s.read.parquet(live)
         .join(broadcast(reqAll), Seq("id"), "left_semi").isEmpty,
       "q180: a forgotten doc's bands survived the valve compaction")
-    require(!new java.io.File(Dedup.registerTombPath(live)).isDirectory,
+    require(!Tombstones.exists(Tombstones.beside(live)),
       "q180: the flipped generation must start with a clean sidecar")
     // registration ≡ batch, minus the forgotten — on the FLIPPED path
     val full = gateBandsKept(s, dir)

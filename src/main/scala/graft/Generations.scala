@@ -21,7 +21,7 @@ import java.nio.file.{Files, StandardCopyOption}
   *      rename), then the post-commit marker sweep, then GC of every
   *      generation outside the keep set: the new generation and the
   *      one it superseded — the in-flight readers' one-cycle grace
-  *      window — each with its tomb sidecar.
+  *      window — each with its delete sidecar.
   *
   * SINGLE-MAINTENANCE-WRITER fence: the version derives from a
   * directory listing, so two concurrent writers — two compactions,
@@ -52,7 +52,13 @@ import java.nio.file.{Files, StandardCopyOption}
   * Each family supplies only its names ([[Family]]): IVF's
   * `lists__vN centroids__vN` pointer pair, the graph's `gen__vN`
   * (its base layout is generation ""), and the sibling families'
-  * `<base>__genN` paths ([[siblings]]). */
+  * `<base>__genN` paths ([[siblings]]).
+  *
+  * The sidecar half of every keep set — which delete sidecar belongs
+  * to which generation, and what it is called — comes from
+  * [[graft.Tombstones]], the one module that records, hides, counts
+  * and probes deletes; this module only keeps and collects the
+  * sidecar entries it names. */
 object Generations {
 
   /** The one-line pointer file naming a pointer family's live
@@ -72,8 +78,9 @@ object Generations {
     *    (`lists__v`, `gen__v`, `<base>__gen`);
     *  - `member`: whether an entry of `dir` belongs to some
     *    generation — the GC's candidates;
-    *  - `entries`: a generation name's entries, itself plus its tomb
-    *    sidecar — what keeping that generation keeps. */
+    *  - `entries`: a generation name's entries, itself plus its
+    *    delete sidecar ([[Tombstones]]) — what keeping that generation
+    *    keeps. */
   final case class Family(dir: File, fence: String, versioned: Seq[String],
                           member: File => Boolean,
                           entries: String => Seq[String])
@@ -91,17 +98,17 @@ object Generations {
     path.stripSuffix("/").replaceAll("__gen\\d+$", "")
 
   /** A sibling family (postings, register): generation `N` of base
-    * `<dir>/<base>` is the sibling path `<base>__genN`, its tomb
-    * sidecar is `<gen>__tomb`, and the markers sit beside them as
-    * `<base>__WRITER__vN`. `path` is the base or any of its
-    * generations. */
+    * `<dir>/<base>` is the sibling path `<base>__genN`, its delete
+    * sidecar sits beside it ([[Tombstones.beside]]), and the markers
+    * sit beside them as `<base>__WRITER__vN`. `path` is the base or
+    * any of its generations. */
   def siblings(path: String): Family = {
     val base = new File(baseOf(path))
     val name = base.getName
     Family(base.getParentFile, s"${name}__$Fence", Seq(s"${name}__gen"),
       f => f.isDirectory && (f.getName == name ||
-        f.getName.startsWith(s"${name}__gen") || f.getName == s"${name}__tomb"),
-      g => Seq(g, s"${g}__tomb"))
+        f.getName.startsWith(s"${name}__gen") || f.getName == Tombstones.beside(name)),
+      g => Seq(g, Tombstones.beside(g)))
   }
 
   /** Generation `v`'s path in the sibling family of `path`. */

@@ -1006,8 +1006,7 @@ object RetrievalQueries {
       "q158: the drain must finish inside the mid-drain-flipped generation")
     require(listFileSnap(frozenPath) == frozenSnap,
       "q158: post-flip appends must never leak into the superseded generation")
-    require(!new java.io.File(new java.io.File(lp).getParentFile,
-        s"tomb__${new java.io.File(lp).getName}").isDirectory,
+    require(!Tombstones.exists(Tombstones.ofLists(lp)),
       "q158: the flipped generation must end the drain with a clean sidecar")
     val nAll = Memo.cachedCount(s, dir, "emb_n")(e.count())
     require(s.read.parquet(lp).count() == nAll - nReq,
@@ -1123,8 +1122,7 @@ object RetrievalQueries {
       "q160: the drain must finish inside the second flip's generation")
     require(!new java.io.File(gen0).exists(),
       "q160: the twice-superseded generation must be GC'd under ingest")
-    require(!new java.io.File(new java.io.File(lp).getParentFile,
-        s"tomb__${new java.io.File(lp).getName}").isDirectory,
+    require(!Tombstones.exists(Tombstones.ofLists(lp)),
       "q160: the final generation must be sidecarless")
     val nAll = Memo.cachedCount(s, dir, "emb_n")(e.count())
     require(s.read.parquet(lp).count() == nAll - nDel1 - nDel3,
@@ -1196,8 +1194,7 @@ object RetrievalQueries {
     require(byBatch(0L) == byBatch(2L) && byBatch(2L) != byBatch(3L),
       "q161: the generation must flip at exactly the revive batch")
     val lp = graft.search.IVF.listsPath(path)
-    require(!new java.io.File(new java.io.File(lp).getParentFile,
-        s"tomb__${new java.io.File(lp).getName}").isDirectory,
+    require(!Tombstones.exists(Tombstones.ofLists(lp)),
       "q161: the post-revive generation must be sidecarless")
     // single-copy semantics: each revived id holds exactly one row
     val copies = s.read.parquet(lp).select(col("vec_id"))
@@ -1310,8 +1307,7 @@ object RetrievalQueries {
     require(byBatch(0L) == byBatch(2L) && byBatch(2L) != byBatch(3L),
       "q163: the generation must flip at exactly the revive batch")
     val lp = graft.search.IVF.listsPath(path)
-    require(!new java.io.File(new java.io.File(lp).getParentFile,
-        s"tomb__${new java.io.File(lp).getName}").isDirectory,
+    require(!Tombstones.exists(Tombstones.ofLists(lp)),
       "q163: the post-revive generation must be sidecarless")
     // single-copy semantics: each revived id holds exactly one code row
     val copies = s.read.parquet(lp).select(col("id"))
@@ -1481,8 +1477,7 @@ object RetrievalQueries {
     require(!new java.io.File(gen0).exists(),
       "q173: the twice-superseded base generation must be GC'd under ingest")
     val lp = graft.search.IVF.listsPath(path)
-    require(!new java.io.File(new java.io.File(lp).getParentFile,
-        s"tomb__${new java.io.File(lp).getName}").isDirectory,
+    require(!Tombstones.exists(Tombstones.ofLists(lp)),
       "q173: the final generation must be sidecarless")
     // single-copy semantics: each revived id holds exactly one code row
     val copies = s.read.parquet(lp).select(col("id"))
@@ -6326,8 +6321,7 @@ $sqRows)
     require(lp2 != lp, "q144: compaction must flip to a fresh generation")
     require(s.read.parquet(lp2).count() == before - nDel,
       "q144: compaction must physically drop exactly the deleted count")
-    require(!new java.io.File(new java.io.File(lp2).getParentFile,
-        s"tomb__${new java.io.File(lp2).getName}").isDirectory,
+    require(!Tombstones.exists(Tombstones.ofLists(lp2)),
       "q144: the compacted generation must start with a clean sidecar")
     val served = serve()
     require(served.collect().toSeq == hidden,
@@ -6418,8 +6412,7 @@ $sqRows)
     require(lp2 != lp, "q155: compaction must flip to a fresh generation")
     require(s.read.parquet(lp2).count() == before - nDel,
       "q155: compaction must physically drop exactly the deleted codes")
-    require(!new java.io.File(new java.io.File(lp2).getParentFile,
-        s"tomb__${new java.io.File(lp2).getName}").isDirectory,
+    require(!Tombstones.exists(Tombstones.ofLists(lp2)),
       "q155: the compacted generation must start with a clean sidecar")
     val served = serve()
     require(served.collect().toSeq == hidden,
@@ -6524,8 +6517,7 @@ $sqRows)
     GraphAnn.compactTombstones(s, path)
     require(GraphAnn.currentGeneration(path) != genBefore,
       "q145: compaction must commit a new generation through the CURRENT flip")
-    require(!new java.io.File(GraphAnn.tablePath(path, "tombstones"))
-        .isDirectory,
+    require(!Tombstones.exists(GraphAnn.tablePath(path, Tombstones.RootEntry)),
       "q145: the new generation must start with a clean tombstone sidecar")
     require(GraphAnn.nodesDf(s, path).count()
         == massBefore - delCopies,
@@ -6604,8 +6596,7 @@ $sqRows)
     GraphAnn.refreshRouting(s, path, parts)
     require(GraphAnn.currentGeneration(path) != genBefore,
       "q151: refresh must commit a new generation through the CURRENT flip")
-    require(!new java.io.File(GraphAnn.tablePath(path, "tombstones"))
-        .isDirectory,
+    require(!Tombstones.exists(GraphAnn.tablePath(path, Tombstones.RootEntry)),
       "q151: the refreshed generation must start with a clean sidecar")
     require(GraphAnn.nodesDf(s, path).count()
         == massBefore - delCopies,
@@ -6715,8 +6706,7 @@ $sqRows)
     GraphAnn.compactTombstones(s, path)
     require(GraphAnn.currentGeneration(path) != genBefore,
       "q157: compaction must commit a new generation through the CURRENT flip")
-    require(!new java.io.File(GraphAnn.tablePath(path, "tombstones"))
-        .isDirectory,
+    require(!Tombstones.exists(GraphAnn.tablePath(path, Tombstones.RootEntry)),
       "q157: the new generation must start with a clean tombstone sidecar")
     require(GraphAnn.nodesDf(s, path).count()
         == massBefore - delCopies,
@@ -6817,8 +6807,8 @@ $sqRows)
       "q179: the valve batch must commit a fresh generation mid-drain")
     require(byBatch(1L) == byBatch(2L) && byBatch(2L) == byBatch(3L),
       "q179: the post-flip batches must append into the flipped generation")
-    require(!new java.io.File(GraphAnn.tablePath(path, "tombstones"))
-        .isDirectory && GraphAnn.tombstoneRows(s, path) == 0L,
+    require(!Tombstones.exists(GraphAnn.tablePath(path, Tombstones.RootEntry)) &&
+        GraphAnn.tombstoneRows(s, path) == 0L,
       "q179: the post-drain generation must be sidecarless")
     require(cellSignature(s, path) == cellSignature(s, q179TargetPath(s, dir)),
       "q179: drain + valve flip + post-flip appends must equal the " +
@@ -6922,8 +6912,8 @@ $sqRows)
     GraphAnn.reviveToIndex(s, path, revive, "vec_id", "v")
     require(GraphAnn.currentGeneration(path) != genBefore,
       "q165: the revive must commit through the CURRENT flip")
-    require(!new java.io.File(GraphAnn.tablePath(path, "tombstones"))
-        .isDirectory && GraphAnn.tombstoneRows(s, path) == 0L,
+    require(!Tombstones.exists(GraphAnn.tablePath(path, Tombstones.RootEntry)) &&
+        GraphAnn.tombstoneRows(s, path) == 0L,
       "q165: the post-revive generation must be sidecarless")
     require(cellSignature(s, path) == cellSignature(s, q165TargetPath(s, dir)),
       "q165: the revived cells must equal the rebuild over union minus stay-deleted")
@@ -7013,8 +7003,8 @@ $sqRows)
     val byBatch = gens.reverse.toMap
     require(byBatch(0L) == byBatch(2L) && byBatch(2L) != byBatch(3L),
       "q168: the generation must flip at exactly the upsert batch")
-    require(!new java.io.File(GraphAnn.tablePath(path, "tombstones"))
-        .isDirectory && GraphAnn.tombstoneRows(s, path) == 0L,
+    require(!Tombstones.exists(GraphAnn.tablePath(path, Tombstones.RootEntry)) &&
+        GraphAnn.tombstoneRows(s, path) == 0L,
       "q168: the post-drain generation must be sidecarless")
     require(cellSignature(s, path) == cellSignature(s, q165TargetPath(s, dir)),
       "q168: the drained cells must equal the rebuild over union minus stay-deleted")

@@ -525,13 +525,13 @@ object Queries {
     val target = if (mode == "append") postingsLivePath(s, tbl) else path
     // CREATE semantics must not inherit a dead index's delete set:
     // the postings sidecar is a SIBLING of the data path
-    // (BM25.tombPath = path + "__tomb"), so overwriting the data
-    // alone would leave a stale sidecar silently hiding legitimate
-    // docs from the fresh index — the leftover-sidecar class
-    // GraphAnn.writeIndexWith clears on its in-path `tombstones`
-    // table and IVF/SQ clear by deleting the whole index path
+    // (Tombstones.beside), so overwriting the data alone would leave
+    // a stale sidecar silently hiding legitimate docs from the fresh
+    // index — the leftover-sidecar class GraphAnn.writeIndexWith
+    // clears in its generation root and IVF/SQ clear by deleting the
+    // whole index path
     if (mode != "append") {
-      graft.FileTree.delete(new java.io.File(BM25.tombPath(target)))
+      Tombstones.clear(Tombstones.beside(target))
       // ...and the exactly-once LEDGER sibling, the same class: a
       // fresh index inheriting a dead stream's applied set would
       // silently SKIP legitimate batches whose ids a previous
@@ -569,7 +569,7 @@ object Queries {
       s.sql(s"DROP TABLE IF EXISTS $tbl")
       val p = PipelineQueries.roundtripPath(dir, s"src_$tag")
       graft.FileTree.delete(new java.io.File(p))
-      graft.FileTree.delete(new java.io.File(BM25.tombPath(p)))
+      Tombstones.clear(Tombstones.beside(p))
       graft.FileTree.delete(Generations.ledger(p))
       writePostings(s, docsOf, tbl, p, "overwrite")
       tbl
@@ -595,7 +595,7 @@ object Queries {
                                      tbl: String, path: String): Unit = {
     val srcPath = postingsLivePath(s, srcTbl)
     s.sql(s"DROP TABLE IF EXISTS $tbl")
-    graft.FileTree.delete(new java.io.File(BM25.tombPath(path)))
+    Tombstones.clear(Tombstones.beside(path))
     graft.FileTree.delete(Generations.ledger(path))
     graft.FileTree.delete(new java.io.File(path))
     graft.FileTree.copy(new java.io.File(srcPath), new java.io.File(path))
@@ -874,8 +874,8 @@ object Queries {
     * delete lifecycle (q144 tombstones the IVF/SQ8 lists, q145 the
     * graph): a bucketed table's files are immutable too, so deletion
     * is two-phase, and the tombstone set is a PERSISTED SIDECAR
-    * ([[graft.lexical.BM25.deleteFromPostings]] — the `tomb__` twin
-    * on the lexical index), not per-query plumbing: EVERY
+    * ([[graft.lexical.BM25.deleteFromPostings]] — the IVF sidecar's
+    * twin on the lexical index), not per-query plumbing: EVERY
     * sidecar-aware serve ([[graft.lexical.BM25.searchIndexed]]'s
     * path-taking overload — q20 and the hybrid q142's lexical leg go
     * through it) hides the docs from then on, with BOTH stats legs
@@ -913,15 +913,8 @@ object Queries {
     // lexical family)
     graft.streaming.ExactlyOnce.sweepStages(new java.io.File(livePath),
       Generations.ledger(livePath), failOnInflight = true, s"rebuildPostings($tbl)")
-    val td = new java.io.File(BM25.tombPath(livePath))
-    val src =
-      if (!td.isDirectory) docs
-      else {
-        val tomb = s.read.parquet(td.getPath)
-          .select(col("doc").as("__tombdoc")).localCheckpoint()
-        docs.join(tomb, col("doc_id").cast("long") === col("__tombdoc"),
-          "left_anti")
-      }
+    val src = Tombstones.hide(s, Tombstones.beside(livePath), docs,
+      on = Some("doc_id"), materialize = true)
     // maintenance CARRIES the creation-time bucket count (the
     // compaction/pin invariance): a rebuild that re-derived from the
     // new corpus mass could land a different count while a pinned
@@ -962,7 +955,7 @@ object Queries {
     rebuildPostings(s,
       d.select(col("doc_id"), concat(lit("v2 "), col("text")).as("text")),
       tbl, path)
-    require(!new java.io.File(BM25.tombPath(path)).isDirectory,
+    require(!Tombstones.exists(Tombstones.beside(path)),
       "q184: the upgraded table must start with a clean sidecar")
     require(s.table(tbl).join(broadcast(del), Seq("doc"), "left_semi").isEmpty,
       "q184: the upgrade resurrected tombstoned docs")
@@ -1062,8 +1055,8 @@ object Queries {
     val path = PipelineQueries.roundtripPath(dir, "bm25delete")
     graft.FileTree.delete(new java.io.File(path))
     graft.FileTree.delete(new java.io.File(path + "__compact"))
-    graft.FileTree.delete(new java.io.File(BM25.tombPath(path)))
-    graft.FileTree.delete(new java.io.File(BM25.tombPath(path + "__compact")))
+    Tombstones.clear(Tombstones.beside(path))
+    Tombstones.clear(Tombstones.beside(path + "__compact"))
     val d = t(s, dir, "documents")
     clonePostingsTo(s, postingsSrcFull(s, dir), tbl, path)
     val del = d.filter(col("doc_id") % 9 === 4)
@@ -1098,7 +1091,7 @@ object Queries {
     val live = compactPostings(s, tbl, path)
     require(BM25.bucketFileCounts(live).values.forall(_ == 1),
       "q146: the delete rewrite must restore one file per bucket")
-    require(!new java.io.File(BM25.tombPath(live)).isDirectory,
+    require(!Tombstones.exists(Tombstones.beside(live)),
       "q146: the compacted generation must start with a clean sidecar")
     val post = s.table(tbl)
     require(post.count() == before - delRows,
@@ -1464,7 +1457,7 @@ object Queries {
     s.sql(s"DROP TABLE IF EXISTS $tbl")
     val path = PipelineQueries.roundtripPath(dir, "bm25sdelete")
     graft.FileTree.delete(new java.io.File(path))
-    graft.FileTree.delete(new java.io.File(BM25.tombPath(path)))
+    Tombstones.clear(Tombstones.beside(path))
     val d = t(s, dir, "documents")
     clonePostingsTo(s, postingsSrcB100(s, dir), tbl, path)
     val stage = q102Stage(s, dir)
@@ -1535,7 +1528,7 @@ object Queries {
     s.sql(s"DROP TABLE IF EXISTS $tbl")
     val path = PipelineQueries.roundtripPath(dir, "bm25valve")
     graft.FileTree.delete(new java.io.File(path))
-    graft.FileTree.delete(new java.io.File(BM25.tombPath(path)))
+    Tombstones.clear(Tombstones.beside(path))
     val d = t(s, dir, "documents")
     clonePostingsTo(s, postingsSrcB100(s, dir), tbl, path)
     val stage = q102Stage(s, dir)
@@ -1577,7 +1570,7 @@ object Queries {
       "q159: the drain must finish inside the mid-drain-flipped generation")
     require(fileSnap(frozen) == frozenSnap,
       "q159: post-flip appends must never leak into the superseded generation")
-    require(!new java.io.File(BM25.tombPath(lp)).isDirectory,
+    require(!Tombstones.exists(Tombstones.beside(lp)),
       "q159: the flipped generation must end the drain with a clean sidecar")
     // two post-flip batches, each ≤ one new file per touched bucket
     // on top of the compaction's one-per-bucket restoration
@@ -1621,7 +1614,7 @@ object Queries {
     s.sql(s"DROP TABLE IF EXISTS $tbl")
     val path = PipelineQueries.roundtripPath(dir, "bm25cdc")
     graft.FileTree.delete(new java.io.File(path))
-    graft.FileTree.delete(new java.io.File(BM25.tombPath(path)))
+    Tombstones.clear(Tombstones.beside(path))
     val d = t(s, dir, "documents")
     clonePostingsTo(s, postingsSrcB100(s, dir), tbl, path)
     // del1 is bounded by an ABSOLUTE id window: the request must stay
@@ -1686,7 +1679,7 @@ object Queries {
     require(byBatch(3L) != byBatch(4L),
       "q164: the valve batch must commit a second generation (flip 2)")
     val lp = postingsLivePath(s, tbl)
-    require(!new java.io.File(BM25.tombPath(lp)).isDirectory,
+    require(!Tombstones.exists(Tombstones.beside(lp)),
       "q164: the final generation must be sidecarless")
     // each revived doc's postings are exactly a fresh tokenize of its
     // text — request-sized frames on both sides

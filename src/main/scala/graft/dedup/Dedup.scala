@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.Tombstones
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -131,29 +132,15 @@ object Dedup {
         array_join(transform(col("pv"), x => x.getField("v").cast("string")), "|")
           .as("bandsig"))
 
-  /** The band register's delete sidecar path — the dedup index's
-    * `tomb__` twin, keyed to the register's DATA path: a compaction
-    * that returns a fresh generation path starts with no sidecar by
-    * construction. The register is DERIVED data (fingerprints of
-    * document content), so right-to-be-forgotten reaches it like any
-    * other artifact — and a register that keeps a forgotten doc's
-    * bands both retains derived content AND keeps suppressing future
-    * near-dups of it (ghost suppression: the forgotten doc still
-    * shapes what the pipeline admits). */
-  def registerTombPath(path: String): String = path + "__tomb"
-
-  private def hasRegisterTomb(path: String): Boolean =
-    new java.io.File(registerTombPath(path)).isDirectory
-
   /** CREATE a banded-signature register at `path` — the bucketed
     * write every register build must go through: one file per
     * sigbucket (the postings-write discipline), and CREATE semantics
     * that clear the path AND its sidecar/generation SIBLINGS
-    * (`__tomb`, `__genN`). The sidecar lives NEXT TO the data path,
-    * so overwriting the data alone would leave a dead register's
-    * delete set silently hiding legitimate ids from the fresh one —
-    * the leftover-sidecar class [[graft.search.GraphAnn
-    * .writeIndexWith]] clears on its in-path tombstones table. */
+    * (delete sidecar, `__genN`). The sidecar lives NEXT TO the data
+    * path, so overwriting the data alone would leave a dead
+    * register's delete set silently hiding legitimate ids from the
+    * fresh one — the leftover-sidecar class [[graft.search.GraphAnn
+    * .writeIndexWith]] clears on its in-root sidecar. */
   def writeRegister(bands: DataFrame, path: String, buckets: Int): Unit = {
     // CREATE clears the exactly-once ledger too (a fresh register
     // inheriting a dead stream's applied set would silently skip
@@ -202,37 +189,33 @@ object Dedup {
     graft.streaming.ExactlyOnce.sweepStages(new java.io.File(livePath),
       graft.Generations.ledger(livePath), failOnInflight = true,
       "Dedup.rebuildRegister")
-    val src =
-      if (!hasRegisterTomb(livePath)) bands
-      else {
-        val tomb = spark.read.parquet(registerTombPath(livePath))
-          .select(col("id")).localCheckpoint()
-        bands.join(tomb, Seq("id"), "left_anti")
-      }
-    writeRegisterData(src, livePath, buckets)
+    writeRegisterData(
+      Tombstones.hide(spark, Tombstones.beside(livePath), bands, materialize = true),
+      livePath, buckets)
   }
 
   /** PHASE-1 deletion from a banded-signature register stored at
     * `path` (rows (id, band, bandsig, sigbucket)): record
-    * request ∩ register ids in the sidecar — an O(request) write
-    * that opens no bucket file — and every register read goes
-    * through [[liveRegister]]'s anti-join from then on. Ids absent
-    * from the live register are never recorded (repeat deletes count
-    * zero). PHASE 2 rides [[compactRegister]]. Returns the number of
-    * DOCS the request hides. */
+    * request ∩ register ids in the sidecar beside the register's DATA
+    * path ([[graft.Tombstones.beside]]; a compaction that returns a
+    * fresh generation path starts with no sidecar by construction) —
+    * an O(request) write that opens no bucket file — and every
+    * register read goes through [[liveRegister]]'s anti-join from
+    * then on. Ids absent from the live register are never recorded
+    * (repeat deletes count zero). PHASE 2 rides [[compactRegister]].
+    * Returns the number of DOCS the request hides.
+    *
+    * The register is DERIVED data (fingerprints of document content),
+    * so right-to-be-forgotten reaches it like any other artifact — and
+    * a register that keeps a forgotten doc's bands both retains
+    * derived content AND keeps suppressing future near-dups of it
+    * (ghost suppression: the forgotten doc still shapes what the
+    * pipeline admits). */
   def deleteFromRegister(spark: org.apache.spark.sql.SparkSession,
-                         path: String, ids: DataFrame): Long = {
-    val hit = liveRegister(spark, path,
-        spark.read.parquet(path).select(col("id")))
-      .join(broadcast(ids.select(col(ids.columns.head).cast("long").as("id"))),
-        Seq("id"), "left_semi")
-      .distinct()
-      .localCheckpoint() // request-sized by contract: count + write share it
-    val n = hit.count()
-    if (n > 0L)
-      hit.coalesce(1).write.mode("append").parquet(registerTombPath(path))
-    n
-  }
+                         path: String, ids: DataFrame): Long =
+    Tombstones.recordPresent(spark, Tombstones.beside(path),
+      spark.read.parquet(path).select(col("id")),
+      ids.select(col(ids.columns.head).cast("long").as("id")), distinct = true)
 
   /** Append one batch's banded signatures (id, band, bandsig,
     * sigbucket) into the register at `path`, running the REVIVE
@@ -263,7 +246,7 @@ object Dedup {
     // Materialize once (batch-sized by contract); the never-deleted
     // common case stays zero-cost — one directory probe, no
     // checkpoint.
-    val staged = if (hasRegisterTomb(path)) bands.localCheckpoint() else bands
+    val staged = if (Tombstones.exists(Tombstones.beside(path))) bands.localCheckpoint() else bands
     val target = resolveAppendTarget(spark, path, staged, buckets)
     staged
       .repartition(col("sigbucket"))
@@ -280,11 +263,8 @@ object Dedup {
   private def resolveAppendTarget(spark: org.apache.spark.sql.SparkSession,
                                   path: String, staged: DataFrame,
                                   buckets: Int): String =
-    if (!hasRegisterTomb(path)) path
-    else if (staged.select(col("id")).distinct()
-        .join(spark.read.parquet(registerTombPath(path)).select(col("id")),
-          Seq("id"), "left_semi")
-        .isEmpty) path
+    if (!Tombstones.revives(spark, Tombstones.beside(path),
+        staged.select(col("id")).distinct(), "id")) path
     else compactRegister(spark, path, buckets)
 
   /** [[appendToRegister]] with EXACTLY-ONCE semantics under streaming
@@ -345,7 +325,7 @@ object Dedup {
         graft.FileTree.delete(debris)
       }
     }
-    val staged = if (hasRegisterTomb(path)) bands.localCheckpoint() else bands
+    val staged = if (Tombstones.exists(Tombstones.beside(path))) bands.localCheckpoint() else bands
     val target = resolveAppendTarget(spark, path, staged, buckets)
     val stage = ExactlyOnce.stageDir(new java.io.File(target), batchId)
     staged
@@ -357,23 +337,17 @@ object Dedup {
     target
   }
 
-  /** The LIVE view of a register frame stored at `path`: tombstoned
-    * ids hidden by an anti-join on the sidecar — AQE-governed, never
-    * a forced broadcast (the IVF/BM25 discipline: an over-grown
-    * sidecar degrades to a shuffle join, not a driver OOM). No
-    * sidecar → passthrough, a never-deleted register pays nothing. */
+  /** The LIVE view of a register frame stored at `path`: deleted ids
+    * hidden ([[graft.Tombstones.hide]]; no sidecar → passthrough, a
+    * never-deleted register pays nothing). */
   def liveRegister(spark: org.apache.spark.sql.SparkSession,
                    path: String, df: DataFrame): DataFrame =
-    if (!hasRegisterTomb(path)) df
-    else df.join(spark.read.parquet(registerTombPath(path)).select(col("id")),
-      Seq("id"), "left_anti")
+    Tombstones.hide(spark, Tombstones.beside(path), df)
 
   /** Distinct docs in the register's sidecar (0 when none). */
   def registerTombstoneRows(spark: org.apache.spark.sql.SparkSession,
                             path: String): Long =
-    if (!hasRegisterTomb(path)) 0L
-    else spark.read.parquet(registerTombPath(path))
-      .select(col("id")).distinct().count()
+    Tombstones.count(spark, Tombstones.beside(path), distinct = true)
 
   /** Compaction trigger on delete accumulation — the register twin
     * of [[graft.search.IVF.needsCompact]]. */

@@ -1,5 +1,6 @@
 package graft.lexical
 
+import graft.Tombstones
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftnative.{LexicalBatch, TopKAggregate}
@@ -43,14 +44,6 @@ object BM25 {
       .select(col("doc"), col("len"), explode(col("toks")).as("term"))
       .groupBy("doc", "len", "term")
       .agg(count(lit(1)).cast("double").as("tf"))
-
-  /** Per-term document frequency + corpus stats. Small output
-    * (vocabulary-sized) — broadcastable to the scoring join. */
-  def termStats(post: DataFrame, nDocs: Long): DataFrame =
-    post.groupBy("term")
-      .agg(countDistinct(col("doc")).cast("double").as("df"))
-      .withColumn("idf",
-        log(lit(1.0) + (lit(nDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5)))
 
   /** Corpus scalars (N, avgdl) as a one-row frame. This is the part
     * of the BM25 "index" that costs a full corpus tokenize pass and
@@ -144,63 +137,37 @@ object BM25 {
     batch.select(col("doc").cast(post.schema("doc").dataType).as("doc"),
       col("rank"), col("score"))
 
-  /** The postings table's DELETE SIDECAR path — the lexical twin of
-    * the IVF `tomb__<lists>` sidecar, keyed to the DATA path (the
-    * postings generation): a compaction that swaps in a fresh data
-    * path starts with no sidecar by construction, so a staged rewrite
-    * can never resurrect hidden docs for the new generation's
-    * readers. */
-  def tombPath(path: String): String = path + "__tomb"
-
-  private def hasTomb(path: String): Boolean =
-    new java.io.File(tombPath(path)).isDirectory
-
   /** PHASE-1 deletion from the postings index: record request∩index
-    * doc ids in the sidecar — an O(request) write that opens no
-    * posting file — and every sidecar-aware serve hides them before
-    * scoring. Ids absent from the live (already-filtered) postings
-    * are never recorded, so a repeated delete of the same docs counts
-    * zero. PHASE 2 rides the compaction rewrite (it reads every byte
-    * anyway), which swaps in a clean-sidecar generation. Returns the
-    * number of DOCS the request hides. */
+    * doc ids in the postings generation's delete sidecar
+    * ([[graft.Tombstones.beside]] the DATA path, so a compaction that
+    * swaps in a fresh data path starts with no sidecar) — an
+    * O(request) write that opens no posting file — and every
+    * sidecar-aware serve hides them before scoring. Ids absent from
+    * the live (already-filtered) postings are never recorded, so a
+    * repeated delete of the same docs counts zero. PHASE 2 rides the
+    * compaction rewrite (it reads every byte anyway), which swaps in a
+    * clean-sidecar generation. Returns the number of DOCS the request
+    * hides. */
   def deleteFromPostings(spark: org.apache.spark.sql.SparkSession,
                          path: String, post: DataFrame,
-                         ids: DataFrame): Long = {
-    val hit = livePostings(spark, path, post.select(col("doc")))
-      .join(broadcast(ids.select(col(ids.columns.head).as("doc"))),
-        Seq("doc"), "left_semi")
-      .distinct()
-      .localCheckpoint() // request-sized by contract: count + write share it
-    val n = hit.count()
-    if (n > 0L) hit.coalesce(1).write.mode("append").parquet(tombPath(path))
-    n
-  }
+                         ids: DataFrame): Long =
+    Tombstones.recordPresent(spark, Tombstones.beside(path), post.select(col("doc")),
+      ids.select(col(ids.columns.head).as("doc")), distinct = true)
 
-  /** The LIVE view of a postings frame stored at `path`: tombstoned
-    * docs hidden by an anti-join on the sidecar. No sidecar → the
-    * frame passes through untouched (a never-deleted index pays
-    * nothing). Every maintenance read that rebuilds FROM the postings
-    * must also go through this (the resurrection discipline).
-    *
-    * The join strategy is AQE-GOVERNED, not a forced `broadcast()`:
-    * each request is small, but the sidecar ACCUMULATES requests
-    * between compactions, and an over-grown one must degrade to a
-    * shuffle anti-join instead of a driver OOM (the IVF
-    * `dropTombstoned` discipline). AQE still broadcasts the sidecar
-    * whenever its file stats say it is actually small — the common
-    * case costs what the hint did. [[needsCompact]] is the trigger
-    * that keeps it from living long at the degraded size. */
+  /** The LIVE view of a postings frame stored at `path`: deleted docs
+    * hidden ([[graft.Tombstones.hide]]). Every maintenance read that
+    * rebuilds FROM the postings must also go through this (the
+    * resurrection discipline). */
   def livePostings(spark: org.apache.spark.sql.SparkSession,
                    path: String, post: DataFrame): DataFrame =
-    if (!hasTomb(path)) post
-    else post.join(spark.read.parquet(tombPath(path)),
-      Seq("doc"), "left_anti")
+    Tombstones.hide(spark, Tombstones.beside(path), post)
 
-  /** Docs in the sidecar at `path` (0 when none) — sidecar-only. */
+  /** Docs in the sidecar at `path` (0 when none) — sidecar-only. Raw
+    * rows: [[deleteFromPostings]] records distinct docs absent from
+    * the sidecar, so the rows are already distinct. */
   def tombstoneRows(spark: org.apache.spark.sql.SparkSession,
                     path: String): Long =
-    if (!hasTomb(path)) 0L
-    else spark.read.parquet(tombPath(path)).count()
+    Tombstones.count(spark, Tombstones.beside(path), distinct = false)
 
   /** Compaction trigger on delete accumulation — the lexical twin of
     * [[graft.search.IVF.needsCompact]] next to [[bucketFileCounts]]
@@ -213,19 +180,13 @@ object BM25 {
     tombstoneRows(spark, path) > maxTombRows
 
   /** True when any of `ids` (doc ids, any column name) sit in
-    * `path`'s sidecar — the REVIVE probe the append writer runs:
-    * re-ingesting a tombstoned doc must first run the deferred
-    * compaction (deletion's phase 2), because clearing the sidecar
-    * entry alone would resurrect the old posting rows alongside the
-    * new ones (doubled tf, wrong scores) and leaving it would
-    * anti-join the new rows away. A directory probe on the
-    * never-deleted common case, a request-sized semi-join
-    * otherwise. */
+    * `path`'s sidecar — the REVIVE probe the append writer runs
+    * ([[graft.Tombstones.revives]]): re-ingesting a deleted doc must
+    * first run the deferred compaction, or its old posting rows would
+    * come back beside the new ones (doubled tf, wrong scores). */
   def hasRevives(spark: org.apache.spark.sql.SparkSession,
                  path: String, ids: DataFrame): Boolean =
-    hasTomb(path) && !spark.read.parquet(tombPath(path))
-      .join(ids.select(col(ids.columns.head).as("doc")), Seq("doc"), "left_semi")
-      .isEmpty
+    Tombstones.revives(spark, Tombstones.beside(path), ids, ids.columns.head)
 
   /** SIDECAR-AWARE [[searchIndexed]] — the default serve for a
     * postings table that supports deletion: with no sidecar it is
@@ -324,7 +285,7 @@ object BM25 {
                          path: String, post: DataFrame, corpus: DataFrame,
                          queries: Seq[(Long, Seq[String])],
                          k: Int): DataFrame =
-    if (!hasTomb(path)) searchIndexedMulti(post, corpus, queries, k)
+    if (!Tombstones.exists(Tombstones.beside(path))) searchIndexedMulti(post, corpus, queries, k)
     else {
       val live = livePostings(spark, path, post)
       searchIndexedMulti(live, statsFromPostings(live), queries, k)

@@ -1,5 +1,6 @@
 package graft.search
 
+import graft.Tombstones
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -329,7 +330,7 @@ object GraphAnn {
   //                               meta table read
   //   path/<genroot>/CELLS        one line: the generation's cell
   //                               VISIBILITY VERSION V_c
-  //   path/<genroot>/routing, params, tombstones   as before
+  //   path/<genroot>/routing, params, delete sidecar   as before
   //
   // A generation resolves part P to the HIGHEST version ≤ its V_c —
   // so a maintenance rewrite that claims version V and rebuilds only
@@ -836,10 +837,10 @@ object GraphAnn {
     // memoized path would otherwise carry forever
     graft.FileTree.delete(new java.io.File(s"$path/nodes"))
     graft.FileTree.delete(new java.io.File(s"$path/meta"))
-    // a leftover phase-1 tombstones sidecar from a prior index at
-    // this path would silently hide legitimate ids from the fresh
-    // index — CREATE semantics clear it unconditionally
-    graft.FileTree.delete(new java.io.File(s"$path/tombstones"))
+    // a leftover phase-1 delete sidecar from a prior index at this
+    // path would silently hide legitimate ids from the fresh index —
+    // CREATE semantics clear it unconditionally
+    Tombstones.clear(Tombstones.inRoot(path))
     // ...and a prior incarnation's exactly-once append ledger: stale
     // committed-batch markers would make the fresh index silently
     // SKIP legitimate re-used batch ids (the ledger twin of the
@@ -1044,14 +1045,10 @@ object GraphAnn {
     // of the graph's content), so the CDC apply contract routes
     // tombstoned-id upserts through [[reviveToIndex]]. Directory probe
     // when clean, request-sized semi-join otherwise.
-    if (new java.io.File(s"$path/tombstones").isDirectory) {
-      val tomb = spark.read.parquet(s"$path/tombstones").select(col("id"))
-      require(tomb.join(delta.select(col(idCol).cast("long").as("id")),
-          Seq("id"), "left_semi").isEmpty,
-        "GraphAnn.appendToIndex: delta re-ingests tombstoned ids — " +
-          "append cannot revive (insertion order is graph content); " +
-          "route the upsert through GraphAnn.reviveToIndex")
-    }
+    require(!Tombstones.revives(spark, Tombstones.inRoot(path), delta, idCol),
+      "GraphAnn.appendToIndex: delta re-ingests tombstoned ids — " +
+        "append cannot revive (insertion order is graph content); " +
+        "route the upsert through GraphAnn.reviveToIndex")
     val (parts, m, efC, replicas) = paramsOf(spark, path)
     // delta vectors route through the index's OWN standing routing —
     // at two-level scale through its PERSISTED sidecars (re-deriving
@@ -1338,11 +1335,11 @@ object GraphAnn {
   def tablePath(path: String, table: String): String =
     s"${resolveRoot(path)}/$table"
 
-  // tombstones rides along so a GC'd base layout cannot leak a stale
-  // sidecar into a later index at the same path; CELLS so a dead
-  // base's visibility version cannot linger
+  // the delete sidecar rides along so a GC'd base layout cannot leak
+  // a stale sidecar into a later index at the same path; CELLS so a
+  // dead base's visibility version cannot linger
   private val IndexTables =
-    Seq("routing", "routing2", "routing2c", "params", "tombstones", "CELLS")
+    Seq("routing", "routing2", "routing2c", "params", Tombstones.RootEntry, "CELLS")
 
   /** The index's generation family ([[graft.Generations]]): every
     * `gen__vN` root, plus the base layout as generation "" — its
@@ -1474,12 +1471,7 @@ object GraphAnn {
     requireRouted(root, "upgradeIndex")
     val vc = cellsVersion(root)
     val (_, m, efC, replicas) = paramsOf(spark, root)
-    val td = s"$root/tombstones"
-    val src =
-      if (!new java.io.File(td).isDirectory) docs
-      else docs.join(
-        broadcast(spark.read.parquet(td).select(col("id").as("__tid"))),
-        docs(idCol).cast("long") === col("__tid"), "left_anti")
+    val src = Tombstones.hide(spark, Tombstones.inRoot(root), docs, on = Some(idCol))
     val (newGen, fenceV) = claimNextGen(path, "GraphAnn.upgradeIndex")
     sweepOrphanCells(path, vc)
     writeIndexInto(routingFor(src, idCol, vecCol, parts), src, idCol,
@@ -1493,7 +1485,7 @@ object GraphAnn {
     * graph node's neighbors POINT AT IT, so removing the row breaks
     * the adjacency of every node that linked to it. The production
     * pattern (FAISS IDMap remove / HNSW soft delete) is two-phase:
-    * (1) here, the request-sized id set lands in a `tombstones`
+    * (1) here, the request-sized id set lands in the delete
     * sidecar of the LIVE generation — served beams exclude
     * tombstoned ids (the k-filling is absorbed by ef ≫ k, the q129
     * over-retrieval argument), while the nodes still participate in
@@ -1515,7 +1507,7 @@ object GraphAnn {
     val root = resolveRoot(path)
     requireRouted(root, "deleteFromIndex")
     val tomb = ids.select(col(idCol).cast("long").as("id")).distinct()
-    tomb.coalesce(1).write.mode("append").parquet(s"$root/tombstones")
+    Tombstones.record(tomb, Tombstones.inRoot(root))
     if (!countPresent) -1L
     else nodesAt(spark, indexPathOf(path, root), root, None)._1
       .select(col("id")).distinct()
@@ -1539,9 +1531,10 @@ object GraphAnn {
     import spark.implicits._
     val prevGen = currentGeneration(path)
     val root = genRoot(path, prevGen)
-    if (!new java.io.File(s"$root/tombstones").isDirectory) return
-    val tomb = spark.read.parquet(s"$root/tombstones")
-      .select(col("id")).distinct().localCheckpoint()
+    val tomb = Tombstones.materialized(spark, Tombstones.inRoot(root)) match {
+      case Some(t) => t
+      case None => return
+    }
     val (_, m, efC, _) = paramsOf(spark, root)
     val vc = cellsVersion(root)
     val nodes = nodesAt(spark, path, root, None)._1
@@ -1622,11 +1615,11 @@ object GraphAnn {
     val prevGen = currentGeneration(path)
     val root = genRoot(path, prevGen)
     requireRouted(root, "reviveToIndex")
-    require(new java.io.File(s"$root/tombstones").isDirectory,
+    val standing = Tombstones.materialized(spark, Tombstones.inRoot(root))
+    require(standing.isDefined,
       "GraphAnn.reviveToIndex: index has no tombstones — nothing to " +
         "revive; fresh ids append through GraphAnn.appendToIndex")
-    val tomb = spark.read.parquet(s"$root/tombstones")
-      .select(col("id")).distinct().localCheckpoint()
+    val tomb = standing.get
     // request-sized by contract: the count gate and the routing below
     // share one materialization
     val d0 = delta.select(col(idCol).cast("long").as("id"),
@@ -1690,18 +1683,14 @@ object GraphAnn {
     * revive flipped to (never the superseded one). */
   def applyUpserts(spark: SparkSession, path: String,
                    batch: DataFrame, idCol: String, vecCol: String): Unit = {
-    val root = resolveRoot(path)
-    val td = s"$root/tombstones"
-    if (!new java.io.File(td).isDirectory) {
+    val side = Tombstones.inRoot(resolveRoot(path))
+    if (!Tombstones.exists(side)) {
       appendToIndex(spark, path, batch, idCol, vecCol)
       return
     }
-    val tomb = spark.read.parquet(td)
-      .select(col("id").as(idCol))
     val b = batch.select(col(idCol).cast("long").as(idCol), col(vecCol))
       .localCheckpoint() // batch-sized: the split reads it twice
-    val rev = b.join(tomb, Seq(idCol), "left_semi")
-    val fresh = b.join(tomb, Seq(idCol), "left_anti")
+    val (rev, fresh) = Tombstones.split(spark, side, b, Some(idCol))
     if (!rev.isEmpty) reviveToIndex(spark, path, rev, idCol, vecCol)
     if (!fresh.isEmpty) appendToIndex(spark, path, fresh, idCol, vecCol)
   }
@@ -1721,12 +1710,7 @@ object GraphAnn {
     val (_, m, efC, replicas) = paramsOf(spark, root)
     val src0 = nodesAt(spark, idxPath, root, None)._1
       .select(col("id"), col("vec")).dropDuplicates("id")
-    val src =
-      if (!new java.io.File(s"$root/tombstones").isDirectory) src0
-      else src0.join(
-        broadcast(spark.read.parquet(s"$root/tombstones").select(col("id"))),
-        Seq("id"), "left_anti")
-    (src, m, efC, replicas)
+    (Tombstones.hide(spark, Tombstones.inRoot(root), src0), m, efC, replicas)
   }
 
   /** The shared index-scan kernel: one pass over the at-rest node
@@ -1964,39 +1948,21 @@ object GraphAnn {
         // identical exact score; the aggregate runs over
         // O(parts × queries × ef) candidate rows (bounded by design)
         // and is SKIPPED for replicas = 1 indexes, where no duplicate
-        // can exist
-        case beams if replicas == 1 => dropTombstoned(spark, path, beams)
-        case beams => dropTombstoned(spark, path,
+        // can exist. Deleted ids are hidden from the candidates BEFORE
+        // the top-k (ef ≫ k absorbs them); the nodes still navigate
+        // until [[compactTombstones]].
+        case beams if replicas == 1 => Tombstones.hide(spark, Tombstones.inRoot(path), beams)
+        case beams => Tombstones.hide(spark, Tombstones.inRoot(path),
           beams.groupBy("qid", "id").agg(max("score").as("score")))
       }
   }
-
-  /** Tombstoned ids are HIDDEN from every serve ([[deleteFromIndex]]'s
-    * phase 1): the sidecar anti-joins the candidate rows BEFORE the
-    * top-k, so ef ≫ k absorbs the dropped candidates; the nodes still
-    * navigate until [[compactTombstones]]. The join strategy is
-    * AQE-GOVERNED, not hint-forced (the IVF/BM25 round-14 valve):
-    * the sidecar accumulates requests between compactions, and an
-    * over-grown one must degrade to a shuffle anti-join against the
-    * beam rows, never a driver OOM; AQE still broadcasts it while
-    * its file stats say it is small. [[needsCompact]] is the
-    * scheduling valve. */
-  private def dropTombstoned(spark: SparkSession, root: String,
-                             beams: DataFrame): DataFrame =
-    if (!new java.io.File(s"$root/tombstones").isDirectory) beams
-    else beams.join(
-      spark.read.parquet(s"$root/tombstones").select(col("id")),
-      Seq("id"), "left_anti")
 
   /** Distinct ids in the LIVE generation's tombstone sidecar (0 when
     * none) — sidecar-only, no node bytes. (Distinct, not raw rows:
     * [[deleteFromIndex]] appends each request verbatim, so repeated
     * requests would inflate a raw count.) */
-  def tombstoneRows(spark: SparkSession, path: String): Long = {
-    val td = s"${resolveRoot(path)}/tombstones"
-    if (!new java.io.File(td).isDirectory) 0L
-    else spark.read.parquet(td).select(col("id")).distinct().count()
-  }
+  def tombstoneRows(spark: SparkSession, path: String): Long =
+    Tombstones.count(spark, Tombstones.inRoot(resolveRoot(path)), distinct = true)
 
   /** Compaction trigger on delete accumulation — the graph twin of
     * [[IVF.needsCompact]], read beside [[needsReroute]] (routing

@@ -1,5 +1,6 @@
 package graft.search
 
+import graft.Tombstones
 import graft.functions.VectorF._
 import graft.ingest.Ingest
 import org.apache.spark.sql.{DataFrame}
@@ -199,85 +200,25 @@ object IVF {
 
   /** The index's generation family ([[graft.Generations]]): the
     * base `lists` / `centroids` plus every versioned `lists__vN` /
-    * `centroids__vN`, each lists generation with its `tomb__` sidecar
-    * (kept and collected together). */
+    * `centroids__vN`, each lists generation with its delete sidecar
+    * ([[Tombstones.ofLists]]; kept and collected together). */
   private def generations(path: String): graft.Generations.Family =
     graft.Generations.pointerFamily(path, Seq("lists__v", "centroids__v"),
       f => f.isDirectory && (f.getName == "lists" ||
         f.getName.startsWith("lists__v") || f.getName == "centroids" ||
-        f.getName.startsWith("centroids__v") || f.getName.startsWith("tomb__")),
-      g => Seq(g, tombName(g)))
+        f.getName.startsWith("centroids__v") ||
+        Tombstones.isListsSidecar(f.getName)),
+      g => Seq(g, Tombstones.ofListsName(g)))
 
-  /** A lists generation's tombstone sidecar name: the sidecar is
-    * VERSIONED WITH the lists (`tomb__<listsName>`), so a pinned
-    * reader pairs its generation's lists with that generation's
-    * delete set — and a compacted generation, which starts with no
-    * sidecar, cannot resurrect a grace-window pin's hidden rows. */
-  private def tombName(listsName: String): String = s"tomb__$listsName"
-  private def tombDirFor(listsDir: String): String = {
-    val f = new java.io.File(listsDir)
-    new java.io.File(f.getParentFile, tombName(f.getName)).getPath
-  }
-
-  /** Hide tombstoned ids from a frame read out of `listsDir`'s
-    * generation — the anti-join every serve and every maintenance
-    * read of the live lists applies (the graph index's
-    * `dropTombstoned` shape). The sidecar's single column carries the
-    * index's own id column name, so the join key needs no metadata
-    * beyond the sidecar schema. No sidecar → the frame passes through
-    * untouched (a never-deleted index pays nothing).
-    *
-    * The join strategy is deliberately AQE-GOVERNED, not a forced
-    * `broadcast()`: each delete request is request-sized, but between
-    * compactions the sidecar ACCUMULATES requests, and months of
-    * right-to-be-forgotten traffic on a 100 TB index can push the
-    * union past the broadcast ceiling — an over-grown sidecar must
-    * degrade to a shuffle anti-join, never a driver OOM (the SCALE.md
-    * lesson from the dedup candidate sets). The sidecar is a parquet
-    * read with file-level size stats, so AQE broadcasts it whenever
-    * it actually is small — the common case costs exactly what the
-    * forced hint did. [[needsCompact]] is the scheduling valve that
-    * keeps the sidecar from living long at that size. */
-  private[search] def dropTombstoned(spark: org.apache.spark.sql.SparkSession,
-                                     listsDir: String, df: DataFrame): DataFrame = {
-    val td = tombDirFor(listsDir)
-    if (!new java.io.File(td).isDirectory) df
-    else {
-      val tomb = spark.read.parquet(td)
-      df.join(tomb.select(tomb.columns.head),
-        Seq(tomb.columns.head), "left_anti")
-    }
-  }
-
-  /** The LIVE generation's standing tombstone sidecar, MATERIALIZED
-    * (localCheckpoint — request-sized by the delete contract), or
-    * None when the index has never been deleted from. Materialization
-    * matters: the one caller class that needs this ([[graft.search.SQ
-    * .rebuildIndex]]'s requant, a CREATE that destroys the path
-    * before writing the new geometry) must hold the delete set AFTER
-    * the files it was read from are gone — a lazy plan would fail at
-    * the scan, or worse, silently read nothing. */
-  private[search] def standingTombIds(spark: org.apache.spark.sql.SparkSession,
-                                      path: String): Option[DataFrame] = {
-    val td = tombDirFor(listsPath(path))
-    if (!new java.io.File(td).isDirectory) None
-    else Some(spark.read.parquet(td).localCheckpoint())
-  }
-
-  /** Distinct ids in the LIVE generation's tombstone sidecar (0 when
+  /** Distinct ids in the LIVE generation's delete sidecar (0 when
     * none) — a sidecar-only count, no list bytes. Distinct, not raw
     * rows (round 18, the [[GraphAnn.tombstoneRows]] rule): the
     * default O(request) delete appends each request verbatim, so a
     * repeated forget list would inflate a raw count and fire
     * [[needsCompact]] on duplicates rather than on hidden ids. */
-  def tombstoneRows(spark: org.apache.spark.sql.SparkSession, path: String): Long = {
-    val td = tombDirFor(listsPath(path))
-    if (!new java.io.File(td).isDirectory) 0L
-    else {
-      val t = spark.read.parquet(td)
-      t.select(col(t.columns.head)).distinct().count()
-    }
-  }
+  def tombstoneRows(spark: org.apache.spark.sql.SparkSession, path: String): Long =
+    Tombstones.count(spark, Tombstones.ofLists(listsPath(path)),
+      distinct = true)
 
   /** Compaction trigger on DELETE ACCUMULATION — the twin of
     * [[needsRefine]] (list skew) and [[listFileCounts]] (append
@@ -300,7 +241,7 @@ object IVF {
     * `refreshRouting` anti-join exists to prevent). */
   def listsRows(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     val lp = listsPath(path)
-    dropTombstoned(spark, lp, spark.read.parquet(lp))
+    Tombstones.hide(spark, Tombstones.ofLists(lp), spark.read.parquet(lp))
   }
 
   /** Persist CALLER-SUPPLIED index artifacts (e.g. the session-memoized
@@ -363,8 +304,8 @@ object IVF {
       // re-delivery a double-write
       graft.streaming.ExactlyOnce.sweepStages(new java.io.File(path),
         appendLedger(path), failOnInflight = true, "IVF.writeIndexFrom")
-      val staged = dropTombstoned(assigned.sparkSession,
-        s"$path/$prevLists", assigned)
+      val staged = Tombstones.hide(assigned.sparkSession,
+        Tombstones.ofLists(s"$path/$prevLists"), assigned)
       // claim (derive + fence) BEFORE any staged bytes: the loser of
       // a same-version race fails loudly instead of overwriting the
       // winner's staged generation and racing the CURRENT flip
@@ -493,33 +434,21 @@ object IVF {
   }
 
   /** True when any of `delta`'s ids sit in the LIVE generation's
-    * tombstone sidecar — the REVIVE probe every append writer into
-    * the shared cid-partitioned list layout must run ([[IVF
-    * .appendToIndex]] and [[SQ.appendToIndex]] both do): re-ingesting
-    * a tombstoned id must force deletion's phase 2 first, because
-    * clearing the sidecar entry alone would resurrect the old
-    * physical copy next to the new row and leaving it would anti-join
-    * the new row away — a delete silently outliving the data it
-    * names. A directory probe on the never-deleted common case, a
-    * request-sized semi-join otherwise. */
+    * delete sidecar — the REVIVE probe ([[graft.Tombstones.revives]])
+    * every append writer into the shared cid-partitioned list layout
+    * must run ([[IVF.appendToIndex]] and [[SQ.appendToIndex]] both
+    * do). */
   private[search] def hasRevives(spark: org.apache.spark.sql.SparkSession,
                                  path: String, delta: DataFrame,
-                                 idCol: String): Boolean = {
-    val td = tombDirFor(listsPath(path))
-    if (!new java.io.File(td).isDirectory) false
-    else {
-      val tomb = spark.read.parquet(td)
-      !tomb.join(
-        delta.select(col(idCol).cast("long").as(tomb.columns.head)),
-        Seq(tomb.columns.head), "left_semi").isEmpty
-    }
-  }
+                                 idCol: String): Boolean =
+    Tombstones.revives(spark, Tombstones.ofLists(listsPath(path)), delta, idCol)
 
   /** DELETE ids from the index — the right-to-be-forgotten lifecycle
     * op, TWO-PHASE like the graph index's (tombstone → compaction),
     * so deletion composes with the generation/pin contract every
     * other mutation honors. PHASE 1 (here): the request-sized id set
-    * lands in the live generation's `tomb__<lists>` sidecar — an
+    * lands in the live generation's delete sidecar
+    * ([[graft.Tombstones.ofLists]]) — an
     * O(request) append that opens NO list file — and every serve
     * ([[searchIndex]], [[searchIndexPinned]], [[searchIndexMulti]],
     * SQ8's reads) anti-joins it before the top-k, so deleted content
@@ -572,9 +501,9 @@ object IVF {
                       ids: DataFrame, idCol: String,
                       countPresent: Boolean = false): Long = {
     val lp = listsPath(path)
+    val side = Tombstones.ofLists(lp)
     if (!countPresent) {
-      ids.select(col(idCol).cast("long").as(idCol)).distinct()
-        .coalesce(1).write.mode("append").parquet(tombDirFor(lp))
+      Tombstones.record(ids.select(col(idCol).cast("long").as(idCol)).distinct(), side)
       return -1L
     }
     // the sidecar rows are request ∩ LIVE index (the semi-join runs
@@ -584,22 +513,16 @@ object IVF {
     // id-only scan (cid is the partition column — directory names,
     // zero extra bytes); the hide itself never reads vector bytes.
     //
-    // The sidecar records (id, cid), id FIRST: every consumer joins
-    // on `columns.head`, and the cid rides along so COMPACTION can
+    // The sidecar records (id, cid), id FIRST: every consumer keys
+    // on the first column, and the cid rides along so COMPACTION can
     // derive its touched-list set from the request-sized sidecar
     // alone instead of re-scanning every list's ids — at 100 TB the
     // difference between an O(request) read and an O(index-ids) pass
     // per delete-triggered compaction.
-    val hit = dropTombstoned(spark, lp,
-        spark.read.parquet(lp).select(col(idCol).cast("long").as(idCol),
-          col("cid").cast("long").as("cid")))
-      .join(broadcast(ids.select(col(idCol).cast("long").as(idCol))),
-        Seq(idCol), "left_semi")
-      .localCheckpoint() // request-sized by contract: count + write share it
-    val present = hit.count()
-    if (present > 0L)
-      hit.coalesce(1).write.mode("append").parquet(tombDirFor(lp))
-    present
+    Tombstones.recordPresent(spark, side,
+      spark.read.parquet(lp).select(col(idCol).cast("long").as(idCol),
+        col("cid").cast("long").as("cid")),
+      ids.select(col(idCol).cast("long").as(idCol)), distinct = false)
   }
 
   /** The LIVE generation pair: maintenance ops write each new
@@ -716,11 +639,9 @@ object IVF {
     // compaction over a mostly-clean index pays its request's lists,
     // not the index.
     val lp = s"$path/$liveLists"
-    val td = tombDirFor(lp)
+    val side = Tombstones.ofLists(lp)
     val touchedByDelete: Set[Long] =
-      if (!new java.io.File(td).isDirectory) Set.empty
-      else {
-        val tomb = spark.read.parquet(td)
+      Tombstones.recorded(spark, side).fold(Set.empty[Long]) { tomb =>
         // null-guard: a sidecar mixing id-only files (older writers)
         // with (id, cid) files reads null cids for the old rows —
         // trusting it would CARRY a list that still holds hidden
@@ -734,11 +655,9 @@ object IVF {
           tomb.select(col("cid").cast("long").as("cid")).distinct()
             .collect().map(_.getLong(0)).toSet
         else
-          // legacy id-only sidecar (pre-round-16): K-bounded fallback
+          // id-only sidecar (the default delete): K-bounded fallback
           // via a column-pruned semi-join over the list ids
-          spark.read.parquet(lp)
-            .join(tomb.select(tomb.columns.head),
-              Seq(tomb.columns.head), "left_semi")
+          Tombstones.hidden(spark.read.parquet(lp), tomb)
             .select(col("cid").cast("long").as("cid")).distinct()
             .collect().map(_.getLong(0)).toSet
       }
@@ -747,7 +666,7 @@ object IVF {
     val carry = counts.keySet -- rebuild
     if (rebuild.nonEmpty) {
       val rebuildSeq = rebuild.toSeq.map(java.lang.Long.valueOf)
-      dropTombstoned(spark, lp,
+      Tombstones.hide(spark, side,
           spark.read.parquet(lp).filter(col("cid").isin(rebuildSeq: _*)))
         .repartition(col("cid"))
         .write.mode("overwrite").partitionBy("cid").parquet(s"$path/$nextName")
@@ -833,7 +752,8 @@ object IVF {
     // top-k (a request-sized broadcast anti-join; no sidecar → free):
     // a deleted row must never be served, whatever the at-rest bytes
     // still hold between delete and compaction
-    val lists = dropTombstoned(spark, listsDir, spark.read.parquet(listsDir))
+    val lists = Tombstones.hide(spark, Tombstones.ofLists(listsDir),
+      spark.read.parquet(listsDir))
     val scored = lists
       .join(broadcast(probes), "cid") // becomes a partition filter on cid
       .select(col(idCol), dot(col(vecCol), col("__qv")).as("score"))
@@ -933,7 +853,7 @@ object IVF {
     val batch = Search.queryBatch(queries, qidCol, qvecCol)
     val pairs = probePairs(spark.read.parquet(s"$path/${gen._2}"), batch, nprobe)
     val cids = pairs.map(_._2).distinct.sorted
-    val lists = dropTombstoned(spark, s"$path/${gen._1}",
+    val lists = Tombstones.hide(spark, Tombstones.ofLists(s"$path/${gen._1}"),
       spark.read.parquet(s"$path/${gen._1}")
         .filter(col("cid").isin(cids: _*))) // union of probed cells
     Search.batchTopK(lists, idCol, vecCol, batch.routed(pairs), Some(col("cid")), k)

@@ -1,5 +1,6 @@
 package graft.search
 
+import graft.Tombstones
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
@@ -179,11 +180,8 @@ object SQ {
         IVF.appendLedger(path), failOnInflight = true, "SQ.rebuildIndex")
     val src =
       if (!live) docs
-      else IVF.standingTombIds(spark, path).fold(docs) { tomb =>
-        docs.join(
-          tomb.select(col(tomb.columns.head).cast("long").as("__tombid")),
-          col(idCol).cast("long") === col("__tombid"), "left_anti")
-      }
+      else Tombstones.hide(spark, Tombstones.ofLists(IVF.listsPath(path)), docs,
+        on = Some(idCol), materialize = true)
     // MAINTENANCE on a live index, not a new index: the sibling
     // exactly-once ledger is PRESERVED by never touching it — wiping
     // the committed-batch markers with the lists would turn the next
@@ -213,7 +211,7 @@ object SQ {
     * never a query's.
     *
     * RE-INGEST REVIVES — the [[IVF.appendToIndex]] discipline on the
-    * shared sidecar: the SQ lists live under the SAME `tomb__`
+    * shared sidecar: the SQ lists live under the SAME delete
     * sidecar IVF's delete writes, so a delta id that was tombstoned
     * earlier must force the deferred [[IVF.compactIndex]] FIRST
     * (clearing the entry alone would resurrect the old code next to
@@ -369,7 +367,7 @@ object SQ {
     // tombstoned ids are hidden from the candidate scan (IVF's delete
     // sidecar — shared layout, shared hide), so a deleted code can
     // never reach the re-rank between delete and compaction
-    IVF.dropTombstoned(spark, lp, spark.read.parquet(lp))
+    Tombstones.hide(spark, Tombstones.ofLists(lp), spark.read.parquet(lp))
       .join(broadcast(probes), "cid") // becomes a partition filter on cid
       .crossJoin(broadcast(ba))
       .select(col("id"),
@@ -410,7 +408,7 @@ object SQ {
         StructField("__qv", ArrayType(DoubleType, containsNull = false)),
         StructField("cid", LongType, nullable = false))))
     val lp = IVF.listsPath(path) // one pointer read
-    val cand = IVF.dropTombstoned(spark, lp, // delete sidecar hidden here too
+    val cand = Tombstones.hide(spark, Tombstones.ofLists(lp), // deletes hidden here too
         spark.read.parquet(lp)
           .filter(col("cid").isin(cids: _*))) // union of probed cells
       .join(broadcast(probes), "cid")

@@ -128,9 +128,10 @@ class BM25Spec extends SparkSpec {
   }
 
   test("CREATE clears a leftover sibling sidecar: an overwrite rebuild never inherits a dead index's delete set") {
-    // the postings sidecar lives NEXT TO the data path (tombPath =
-    // path + "__tomb"), so a fresh writePostings(overwrite) at a path
-    // a previous index was deleted from would otherwise silently hide
+    // the postings sidecar lives NEXT TO the data path
+    // (Tombstones.beside = path + "__tomb"), so a fresh
+    // writePostings(overwrite) at a path a previous index was
+    // deleted from would otherwise silently hide
     // legitimate docs — the leftover-sidecar class GraphAnn's CREATE
     // clears on its in-path tombstones table
     val tbl = "bm25_stale_tomb_spec"
@@ -151,7 +152,7 @@ class BM25Spec extends SparkSpec {
     // semantics; content authority is the caller's input, so the old
     // delete set must not survive
     Queries.writePostings(spark, docs, tbl, path, "overwrite")
-    assert(!new java.io.File(BM25.tombPath(path)).isDirectory,
+    assert(!new java.io.File(Tombstones.beside(path)).isDirectory,
       "CREATE must clear the sibling sidecar")
     assert(serve().contains(victim),
       "a fresh index inherited a dead index's delete set")
@@ -191,7 +192,7 @@ class BM25Spec extends SparkSpec {
     // compaction folds the sidecar into the rewrite; the new data
     // path starts clean and serves identically
     val live = Queries.compactPostings(spark, tbl, path)
-    assert(!new java.io.File(BM25.tombPath(live)).isDirectory)
+    assert(!new java.io.File(Tombstones.beside(live)).isDirectory)
     assert(spark.table(tbl).filter(col("doc") === victim).isEmpty,
       "deleted doc's postings survived compaction")
     val post = spark.table(tbl)

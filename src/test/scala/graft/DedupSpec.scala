@@ -136,7 +136,7 @@ class DedupSpec extends SparkSpec {
     // the fresh CREATE at the BASE path: sidecars and generations of
     // the dead register must all go
     Dedup.writeRegister(bands, path, 4)
-    assert(!new java.io.File(Dedup.registerTombPath(path)).isDirectory,
+    assert(!new java.io.File(Tombstones.beside(path)).isDirectory,
       "CREATE must clear the sibling sidecar")
     assert(!new java.io.File(gen2).exists(),
       "CREATE must clear stale sibling generations")
@@ -162,7 +162,7 @@ class DedupSpec extends SparkSpec {
     val atRest = spark.read.parquet(path)
     assert(atRest.filter(col("id") === 1L).isEmpty,
       "the re-fingerprint resurrected a forgotten doc's bands")
-    assert(!new java.io.File(Dedup.registerTombPath(path)).isDirectory,
+    assert(!new java.io.File(Tombstones.beside(path)).isDirectory,
       "the rebuilt register must start with a clean sidecar")
     // the surviving docs carry the NEW banding (8 bands at rpb=2)
     assert(atRest.filter(col("id") === 3L).select("band").distinct().count() == 8,
@@ -201,7 +201,7 @@ class DedupSpec extends SparkSpec {
     // phase 2: fresh generation, clean sidecar, survivors only
     val gen2 = Dedup.compactRegister(spark, path, 4)
     assert(gen2 != path)
-    assert(!new java.io.File(Dedup.registerTombPath(gen2)).isDirectory)
+    assert(!new java.io.File(Tombstones.beside(gen2)).isDirectory)
     val atRest = spark.read.parquet(gen2)
     assert(atRest.count() == total - doc1Rows)
     assert(atRest.filter(col("id") === 1L).isEmpty)
@@ -255,7 +255,7 @@ class DedupSpec extends SparkSpec {
     val live = Dedup.appendToRegister(spark, path,
       bands(docs.filter(col("doc_id") === 1L)), 4)
     assert(live != path, "a revive append must pull the compaction forward")
-    assert(!new java.io.File(Dedup.registerTombPath(live)).isDirectory,
+    assert(!new java.io.File(Tombstones.beside(live)).isDirectory,
       "the flipped generation must start with a clean sidecar")
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.select(col("id"), col("band"), col("bandsig"),

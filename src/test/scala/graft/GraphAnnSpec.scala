@@ -263,6 +263,49 @@ class GraphAnnSpec extends SparkSpec {
     assert(top(pathA) == top(pathB))
   }
 
+  test("refresh over a deleted-from index never forces a broadcast of the delete sidecar") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val path = java.nio.file.Files.createTempDirectory("graphann_nobc").toString
+    GraphAnn.writeIndex(emb, "vec_id", "v", m = 8, efC = 48, parts = 4, path)
+    GraphAnn.deleteFromIndex(spark, path,
+      emb.filter(col("vec_id") % 9 === 4).select(col("vec_id")), "vec_id")
+    object Plans extends AdaptiveSparkPlanHelper
+    def sidecarScans(p: SparkPlan) = Plans.collect(p) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == Tombstones.RootEntry) => s
+    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.listenerManager.register(listener)
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      GraphAnn.refreshRouting(spark, path, 4)
+      // the listener bus delivers in order: once a sentinel action is
+      // seen, every plan of the refresh has been seen too
+      spark.range(1).toDF("refresh_sentinel").collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!plans.toArray.exists(_.toString.contains("refresh_sentinel")) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    }
+    val all = plans.toArray(Array.empty[SparkPlan]).toSeq
+    assert(all.exists(_.toString.contains("refresh_sentinel")), "listener never caught up")
+    assert(all.exists(p => sidecarScans(p).nonEmpty), "the refresh never read the sidecar")
+    val forced = all.flatMap(p => Plans.collect(p) { case j: BroadcastHashJoinExec => j })
+      .filter(j => sidecarScans(if (j.buildSide == BuildLeft) j.left else j.right).nonEmpty)
+    assert(forced.isEmpty, s"the sidecar was broadcast with broadcasts disabled: $forced")
+  }
+
   test("tombstone delete hides ids now; compaction equals rebuild-without-them bit for bit") {
     val path = java.nio.file.Files.createTempDirectory("graphann_del").toString
     GraphAnn.writeIndex(emb, "vec_id", "v", m = 8, efC = 48, parts = 4, path)

@@ -151,16 +151,13 @@ class RagSpec extends SparkSpec {
     val postPath = PipelineQueries.roundtripPath(sf0001, "q162_post")
     val tbl = "bm25_cascade_" + PipelineQueries.sanitizeTag(sf0001)
     val chunksBefore = spark.read.parquet(IVF.listsPath(ivfPath)).count()
-    val tombChunks = spark.read.parquet(
-      IVF.listsPath(ivfPath) match { case lp =>
-        new java.io.File(new java.io.File(lp).getParentFile,
-          s"tomb__${new java.io.File(lp).getName}").toString }).count()
+    val tombChunks = spark.read.parquet(Tombstones.ofLists(IVF.listsPath(ivfPath))).count()
     IVF.compactIndex(spark, ivfPath)
     assert(spark.read.parquet(IVF.listsPath(ivfPath)).count()
       == chunksBefore - tombChunks,
       "index compaction must drop exactly the cascaded chunk rows")
     val postBefore = spark.table(tbl).count()
-    val tombDocs = spark.read.parquet(BM25.tombPath(postPath))
+    val tombDocs = spark.read.parquet(Tombstones.beside(postPath))
     val deadPost = spark.table(tbl)
       .join(tombDocs, Seq("doc"), "left_semi").count()
     val live = Queries.compactPostings(spark, tbl, postPath)

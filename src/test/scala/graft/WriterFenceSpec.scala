@@ -187,9 +187,10 @@ class WriterFenceSpec extends SparkSpec {
 
   /** One step of an on-disk layout pin: the action, then the exact
     * sorted top-level listing expected after it and the `CURRENT`
-    * text (None: no pointer file). */
+    * text (None: no pointer file), then `check`'s further pins. */
   private case class Step(name: String, run: () => Unit,
-                          listing: Seq[String], current: Option[String])
+                          listing: Seq[String], current: Option[String],
+                          check: () => Unit = () => ())
 
   /** Drive `steps` in order; after each, the entries of `dir` that
     * `member` selects must list exactly as pinned. */
@@ -204,24 +205,50 @@ class WriterFenceSpec extends SparkSpec {
       val text = if (cur.isFile) Some(new String(
         java.nio.file.Files.readAllBytes(cur.toPath), "UTF-8")) else None
       assert(text == st.current, s"$family/${st.name}: CURRENT $text")
+      st.check()
     }
+
+  /** The delete sidecar directory `dir` holds exactly `rows` (as
+    * longs, in any order) under the columns `cols`. */
+  private def pinSidecar(dir: String, cols: Seq[String], rows: Seq[Seq[Long]]): Unit = {
+    val t = spark.read.parquet(dir)
+    assert(t.columns.toSeq == cols, s"$dir: columns ${t.columns.toSeq}")
+    val got = t.collect().toSeq.map(r => cols.indices.map(r.getLong))
+    assert(got.map(_.mkString(",")).sorted == rows.map(_.mkString(",")).sorted,
+      s"$dir: rows $got")
+  }
 
   test("on-disk layout: every family's generation names, keep sets and CURRENT text through a lifecycle") {
     import graft.dedup.Dedup
     import graft.lexical.BM25
     import graft.search.{GraphAnn, IVF}
     val del = (m: Int) => emb.filter(col("vec_id") % 9 === m).select(col("vec_id"))
+    val doomed = del(2).select(col("vec_id").cast("long")).as[Long].collect().toSeq
+    val n = doomed.size.toLong
+    assert(n > 0L)
+    val once = doomed.map(Seq(_))
 
+    // IVF default delete: the distinct request ids, id-only, return -1;
+    // a repeat appends them again and the valve counts distinct ids
     val ivf = java.nio.file.Files.createTempDirectory("layout_ivf").toFile
     val ip = ivf.getPath
     pinLayout("ivf", ivf, _ => true, Seq(
       Step("build", () => IVF.writeIndex(emb, "vec_id", "v", 8, refineIters = 0, ip),
         Seq("centroids", "lists"), None),
-      Step("delete", () => IVF.deleteFromIndex(spark, ip, del(2), "vec_id"),
-        Seq("centroids", "lists", "tomb__lists"), None),
+      Step("delete", () => assert(IVF.deleteFromIndex(spark, ip, del(2), "vec_id") == -1L),
+        Seq("centroids", "lists", "tomb__lists"), None, () => {
+          pinSidecar(s"$ip/tomb__lists", Seq("vec_id"), once)
+          assert(IVF.tombstoneRows(spark, ip) == n)
+        }),
+      Step("redelete", () => assert(IVF.deleteFromIndex(spark, ip, del(2), "vec_id") == -1L),
+        Seq("centroids", "lists", "tomb__lists"), None, () => {
+          pinSidecar(s"$ip/tomb__lists", Seq("vec_id"), once ++ once)
+          assert(IVF.tombstoneRows(spark, ip) == n)
+          assert(IVF.needsCompact(spark, ip, n - 1) && !IVF.needsCompact(spark, ip, n))
+        }),
       Step("compact", () => IVF.compactIndex(spark, ip),
         Seq("CURRENT", "centroids", "lists", "lists__v2", "tomb__lists"),
-        Some("lists__v2 centroids")),
+        Some("lists__v2 centroids"), () => assert(IVF.tombstoneRows(spark, ip) == 0L)),
       Step("rebuild", () => {
         val cents = IVF.centroids(emb, "vec_id", "v", 8).localCheckpoint()
         IVF.writeIndexFrom(cents, IVF.assign(emb, "vec_id", "v", cents), ip)
@@ -231,47 +258,106 @@ class WriterFenceSpec extends SparkSpec {
         Seq("CURRENT", "centroids__v3", "lists__v3", "lists__v4"),
         Some("lists__v4 centroids__v3"))))
 
+    // IVF countPresent delete: request ∩ live as (id, cid), return
+    // the count; a repeat records nothing and returns 0
+    val ivfc = java.nio.file.Files.createTempDirectory("layout_ivf_counted").toFile
+    val cp = ivfc.getPath
+    lazy val pairs = spark.read.parquet(s"$cp/lists")
+      .filter(col("vec_id") % 9 === 2)
+      .select(col("vec_id").cast("long"), col("cid").cast("long")).as[(Long, Long)]
+      .collect().toSeq.map { case (i, c) => Seq(i, c) }
+    pinLayout("ivf-counted", ivfc, _ => true, Seq(
+      Step("build", () => IVF.writeIndex(emb, "vec_id", "v", 8, refineIters = 0, cp),
+        Seq("centroids", "lists"), None),
+      Step("delete", () => assert(IVF.deleteFromIndex(spark, cp, del(2), "vec_id",
+          countPresent = true) == n),
+        Seq("centroids", "lists", "tomb__lists"), None, () => {
+          pinSidecar(s"$cp/tomb__lists", Seq("vec_id", "cid"), pairs)
+          assert(IVF.tombstoneRows(spark, cp) == n)
+        }),
+      Step("redelete", () => assert(IVF.deleteFromIndex(spark, cp, del(2), "vec_id",
+          countPresent = true) == 0L),
+        Seq("centroids", "lists", "tomb__lists"), None, () => {
+          pinSidecar(s"$cp/tomb__lists", Seq("vec_id", "cid"), pairs)
+          assert(IVF.tombstoneRows(spark, cp) == n)
+        }),
+      Step("compact", () => IVF.compactIndex(spark, cp),
+        Seq("CURRENT", "centroids", "lists", "lists__v2", "tomb__lists"),
+        Some("lists__v2 centroids"), () => assert(IVF.tombstoneRows(spark, cp) == 0L))))
+
+    // graph delete: always appends the distinct request ids (id-only),
+    // return -1; the valve counts distinct ids
     val graph = java.nio.file.Files.createTempDirectory("layout_graph").toFile
     val gp = graph.getPath
     pinLayout("graph", graph, _ => true, Seq(
       Step("build", () => GraphAnn.writeIndex(emb, "vec_id", "v", m = 8,
         efC = 48, parts = 4, gp), Seq("CELLS", "cells", "params", "routing"), None),
-      Step("delete", () => GraphAnn.deleteFromIndex(spark, gp, del(2), "vec_id"),
-        Seq("CELLS", "cells", "params", "routing", "tombstones"), None),
+      Step("delete", () => assert(GraphAnn.deleteFromIndex(spark, gp, del(2), "vec_id") == -1L),
+        Seq("CELLS", "cells", "params", "routing", "tombstones"), None, () => {
+          pinSidecar(s"$gp/tombstones", Seq("id"), once)
+          assert(GraphAnn.tombstoneRows(spark, gp) == n)
+        }),
+      Step("redelete", () => assert(GraphAnn.deleteFromIndex(spark, gp, del(2), "vec_id") == -1L),
+        Seq("CELLS", "cells", "params", "routing", "tombstones"), None, () => {
+          pinSidecar(s"$gp/tombstones", Seq("id"), once ++ once)
+          assert(GraphAnn.tombstoneRows(spark, gp) == n)
+          assert(GraphAnn.needsCompact(spark, gp, n - 1) && !GraphAnn.needsCompact(spark, gp, n))
+        }),
       Step("compact", () => GraphAnn.compactTombstones(spark, gp),
         Seq("CELLS", "CURRENT", "cells", "gen__v2", "params", "routing", "tombstones"),
-        Some("gen__v2")),
+        Some("gen__v2"), () => assert(GraphAnn.tombstoneRows(spark, gp) == 0L)),
       Step("refresh", () => GraphAnn.refreshRouting(spark, gp, 4),
         Seq("CURRENT", "cells", "gen__v2", "gen__v3"), Some("gen__v3"))))
 
+    // register delete: request ∩ live ids (id), return the count; a
+    // repeat returns 0; the valve counts distinct ids
     val regDir = java.nio.file.Files.createTempDirectory("layout_reg").toFile
     var reg = regDir.getPath + "/reg"
     Dedup.writeRegister(Dedup.bandedSignatures(docs, "doc_id", "text", 3, 16, 4)
       .withColumn("sigbucket", pmod(hash(col("band"), col("bandsig")), lit(4))),
       reg, 4)
+    def regDeleted(id: Long): () => Unit = () => {
+      pinSidecar(s"${reg}__tomb", Seq("id"), Seq(Seq(id)))
+      assert(Dedup.registerTombstoneRows(spark, reg) == 1L)
+      assert(Dedup.deleteFromRegister(spark, reg, Seq(id).toDF("id")) == 0L)
+      pinSidecar(s"${reg}__tomb", Seq("id"), Seq(Seq(id)))
+      assert(Dedup.needsCompactRegister(spark, reg, 0L) &&
+        !Dedup.needsCompactRegister(spark, reg, 1L))
+    }
     pinLayout("register", regDir, _.startsWith("reg"), Seq(
-      Step("delete", () => Dedup.deleteFromRegister(spark, reg, Seq(1L).toDF("id")),
-        Seq("reg", "reg__tomb"), None),
+      Step("delete", () => assert(Dedup.deleteFromRegister(spark, reg, Seq(1L).toDF("id")) == 1L),
+        Seq("reg", "reg__tomb"), None, regDeleted(1L)),
       Step("compact", () => reg = Dedup.compactRegister(spark, reg, 4),
-        Seq("reg", "reg__gen2", "reg__tomb"), None),
-      Step("delete2", () => Dedup.deleteFromRegister(spark, reg, Seq(4L).toDF("id")),
-        Seq("reg", "reg__gen2", "reg__gen2__tomb", "reg__tomb"), None),
+        Seq("reg", "reg__gen2", "reg__tomb"), None,
+        () => assert(Dedup.registerTombstoneRows(spark, reg) == 0L)),
+      Step("delete2", () => assert(Dedup.deleteFromRegister(spark, reg, Seq(4L).toDF("id")) == 1L),
+        Seq("reg", "reg__gen2", "reg__gen2__tomb", "reg__tomb"), None, regDeleted(4L)),
       Step("compact2", () => reg = Dedup.compactRegister(spark, reg, 4),
         Seq("reg__gen2", "reg__gen2__tomb", "reg__gen3"), None)))
 
+    // postings delete: request ∩ live docs (doc), return the count; a
+    // repeat returns 0; the valve counts the sidecar's rows
     val tbl = "bm25_layout_spec"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     val postDir = java.nio.file.Files.createTempDirectory("layout_post").toFile
     var post = postDir.getPath + "/t"
     Queries.writePostings(spark, docs, tbl, post, "overwrite")
+    def postDelete(doc: Long): () => Unit = () =>
+      assert(BM25.deleteFromPostings(spark, post, spark.table(tbl), Seq(doc).toDF("doc")) == 1L)
+    def postDeleted(doc: Long): () => Unit = () => {
+      pinSidecar(s"${post}__tomb", Seq("doc"), Seq(Seq(doc)))
+      assert(BM25.tombstoneRows(spark, post) == 1L)
+      assert(BM25.deleteFromPostings(spark, post, spark.table(tbl), Seq(doc).toDF("doc")) == 0L)
+      pinSidecar(s"${post}__tomb", Seq("doc"), Seq(Seq(doc)))
+      assert(BM25.needsCompact(spark, post, 0L) && !BM25.needsCompact(spark, post, 1L))
+    }
     pinLayout("postings", postDir, _.startsWith("t"), Seq(
-      Step("delete", () => BM25.deleteFromPostings(spark, post, spark.table(tbl),
-        Seq(1L).toDF("doc")), Seq("t", "t__tomb"), None),
+      Step("delete", postDelete(1L), Seq("t", "t__tomb"), None, postDeleted(1L)),
       Step("compact", () => post = Queries.compactPostings(spark, tbl, post),
-        Seq("t", "t__gen2", "t__tomb"), None),
-      Step("delete2", () => BM25.deleteFromPostings(spark, post, spark.table(tbl),
-        Seq(4L).toDF("doc")), Seq("t", "t__gen2", "t__gen2__tomb", "t__tomb"),
-        None),
+        Seq("t", "t__gen2", "t__tomb"), None,
+        () => assert(BM25.tombstoneRows(spark, post) == 0L)),
+      Step("delete2", postDelete(4L), Seq("t", "t__gen2", "t__gen2__tomb", "t__tomb"),
+        None, postDeleted(4L)),
       Step("compact2", () => post = Queries.compactPostings(spark, tbl, post),
         Seq("t__gen2", "t__gen2__tomb", "t__gen3"), None)))
   }
