@@ -591,15 +591,11 @@ object CurationQueries {
       new java.io.File(mut))
     val stage = q130Stage(s, dir)
     val out = PipelineQueries.roundtripPath(dir, "q188_out")
-    val ckpt = PipelineQueries.roundtripPath(dir, "q188_ckpt")
     graft.FileTree.delete(new java.io.File(out))
-    graft.FileTree.delete(new java.io.File(ckpt))
-    val schema = s.read.parquet(stage).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
-    graft.streaming.Streaming.runForeachBatchResumable(s, src, ckpt, (batch, bid) => {
+    Drains.exactlyOnce(s, "q188", stage, PipelineQueries.roundtripPath(dir, "q188_ckpt"),
+        Generations.ledger(mut), Some(() => new java.io.File(mut))) { (batch, bid) =>
       val b = batch.localCheckpoint()
-      def deliver(): Unit = {
+      _ => {
         // idempotence needs DETERMINISTIC READS, not just idempotent
         // writes: a re-delivery vets against a register that already
         // holds the batch's own first-delivery bands, so the batch
@@ -617,29 +613,6 @@ object CurationQueries {
         require(landed == mut,
           s"q188: batch $bid landed in $landed instead of $mut")
       }
-      if (bid == 1L) // a "crashed" earlier attempt left its stage dir
-        graft.streaming.ExactlyOnce.stageDir(new java.io.File(mut), bid).mkdirs()
-      deliver()
-      if (bid == 2L) { // crash AFTER the promote, BEFORE the marker
-        val m = new java.io.File(Generations.ledger(mut), s"b$bid")
-        require(m.delete(), s"q188: batch $bid must have committed a marker")
-      }
-      deliver() // the at-least-once re-delivery, every batch
-      require(graft.streaming.ExactlyOnce.isApplied(
-          Generations.ledger(mut), bid),
-        s"q188: batch $bid must end committed in the ledger")
-    }, sweepLedgers = Seq(Generations.ledger(mut)))
-    // ledger RETIREMENT (round 18, the q193 discipline): the durable
-    // checkpoint's watermark sweep retired every committed marker;
-    // the one-shot-build gate below proves it re-applied nothing
-    val q188Markers = Option(Generations.ledger(mut).listFiles())
-      .toSeq.flatten.map(_.getName)
-    require(q188Markers.isEmpty,
-      s"q188: the post-drain sweep must retire every marker, got $q188Markers")
-    (0L until 4L).foreach { bid =>
-      require(!graft.streaming.ExactlyOnce.stageDir(
-          new java.io.File(mut), bid).exists(),
-        s"q188: batch $bid must leave no stage debris")
     }
     // q130's gate: registration ≡ one-shot build over the whole
     // corpus, row for row — a single band doubled by any of the

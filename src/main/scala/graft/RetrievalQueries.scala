@@ -592,42 +592,13 @@ object RetrievalQueries {
   def q185IvfExactlyOnce(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val path = PipelineQueries.roundtripPath(dir, "q185")
-    val ckpt = PipelineQueries.roundtripPath(dir, "q185_ckpt")
-    graft.FileTree.delete(new java.io.File(ckpt))
     cloneIndexTo(ivfBase100Src(s, dir), path)
-    val stage = embDeltaStage(s, dir)
-    val schema = s.read.parquet(stage).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
-    graft.streaming.Streaming.runForeachBatchResumable(s, src, ckpt, (batch, bid) => {
+    Drains.exactlyOnce(s, "q185", embDeltaStage(s, dir),
+        PipelineQueries.roundtripPath(dir, "q185_ckpt"),
+        graft.search.IVF.appendLedger(path),
+        Some(() => new java.io.File(path))) { (batch, bid) =>
       val b = batch.select(col("vec_id"), col("v")).localCheckpoint()
-      if (bid == 1L) // a "crashed" earlier attempt left its stage dir
-        graft.streaming.ExactlyOnce.stageDir(new java.io.File(path), bid).mkdirs()
-      graft.search.IVF.appendToIndexIdempotent(s, path, b, "vec_id", "v", bid)
-      if (bid == 2L) { // crash AFTER the promote, BEFORE the marker
-        val m = new java.io.File(graft.search.IVF.appendLedger(path), s"b$bid")
-        require(m.delete(), s"q185: batch $bid must have committed a marker")
-      }
-      // the at-least-once re-delivery, every batch (bid 2's marker
-      // was just deleted — the replayed promote must converge; every
-      // other bid short-circuits on its committed marker)
-      graft.search.IVF.appendToIndexIdempotent(s, path, b, "vec_id", "v", bid)
-      require(graft.streaming.ExactlyOnce.isApplied(
-          graft.search.IVF.appendLedger(path), bid),
-        s"q185: batch $bid must end committed in the ledger")
-    }, sweepLedgers = Seq(graft.search.IVF.appendLedger(path)))
-    // ledger RETIREMENT (round 18): the drain's checkpoint watermark
-    // swept every committed marker and no intent survives — the
-    // ledger is O(live window); the row-for-row gate below proves the
-    // sweep re-applied nothing
-    val q185Markers = Option(graft.search.IVF.appendLedger(path).listFiles())
-      .toSeq.flatten.map(_.getName)
-    require(q185Markers.isEmpty,
-      s"q185: the post-drain sweep must retire every marker, got $q185Markers")
-    (0L until 4L).foreach { bid =>
-      require(!graft.streaming.ExactlyOnce.stageDir(
-          new java.io.File(path), bid).exists(),
-        s"q185: batch $bid must leave no stage debris")
+      _ => graft.search.IVF.appendToIndexIdempotent(s, path, b, "vec_id", "v", bid)
     }
     val cents = s.read.parquet(graft.search.IVF.centroidsPath(path))
     val streamed = s.read.parquet(graft.search.IVF.listsPath(path))
@@ -3564,42 +3535,24 @@ object RetrievalQueries {
   def q189SqExactlyOnce(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val path = PipelineQueries.roundtripPath(dir, "q189")
-    val ckpt = PipelineQueries.roundtripPath(dir, "q189_ckpt")
-    graft.FileTree.delete(new java.io.File(ckpt))
     cloneIndexTo(sqBase100Src(s, dir), path)
-    val stage = embDeltaStage(s, dir)
-    val schema = s.read.parquet(stage).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
-    graft.streaming.Streaming.runForeachBatchResumable(s, src, ckpt, (batch, bid) => {
+    Drains.exactlyOnce(s, "q189", embDeltaStage(s, dir),
+        PipelineQueries.roundtripPath(dir, "q189_ckpt"),
+        graft.search.IVF.appendLedger(path),
+        Some(() => new java.io.File(path))) { (batch, bid) =>
       val b = batch.select(col("vec_id"), col("v")).localCheckpoint()
-      if (bid == 1L) // a "crashed" earlier attempt left its stage dir
-        graft.streaming.ExactlyOnce.stageDir(new java.io.File(path), bid).mkdirs()
-      val f1 = graft.search.SQ.appendToIndexIdempotent(
-        s, path, b, "vec_id", "v", bid)
-      require(f1 <= sqClampThreshold,
-        s"q189: in-distribution batch must not trip requant (clamped $f1)")
-      if (bid == 2L) { // crash AFTER the promote, BEFORE the marker
-        val m = new java.io.File(graft.search.IVF.appendLedger(path), s"b$bid")
-        require(m.delete(), s"q189: batch $bid must have committed a marker")
+      redelivery => {
+        val f = graft.search.SQ.appendToIndexIdempotent(
+          s, path, b, "vec_id", "v", bid)
+        if (!redelivery) require(f <= sqClampThreshold,
+          s"q189: in-distribution batch must not trip requant (clamped $f)")
+        // the marker-hit duplicate must not re-charge the drift
+        // signal; batch 2's replay re-runs fully and reports its real
+        // fraction
+        else if (bid != 2L) require(f == 0.0,
+          s"q189: a committed duplicate must report clamp 0.0, got $f")
       }
-      val f2 = graft.search.SQ.appendToIndexIdempotent(
-        s, path, b, "vec_id", "v", bid)
-      // the marker-hit duplicate must not re-charge the drift signal;
-      // batch 2's replay re-runs fully and reports its real fraction
-      if (bid != 2L) require(f2 == 0.0,
-        s"q189: a committed duplicate must report clamp 0.0, got $f2")
-      require(graft.streaming.ExactlyOnce.isApplied(
-          graft.search.IVF.appendLedger(path), bid),
-        s"q189: batch $bid must end committed in the ledger")
-    }, sweepLedgers = Seq(graft.search.IVF.appendLedger(path)))
-    // ledger RETIREMENT (round 18, the q193 discipline): the durable
-    // checkpoint's watermark sweep retired every committed marker;
-    // the byte-for-byte gate below proves it re-applied nothing
-    val q189Markers = Option(graft.search.IVF.appendLedger(path).listFiles())
-      .toSeq.flatten.map(_.getName)
-    require(q189Markers.isEmpty,
-      s"q189: the post-drain sweep must retire every marker, got $q189Markers")
+    }
     val cents = s.read.parquet(s"$path/centroids")
     val ba = graft.search.SQ.boundsArrays(s.read.parquet(s"$path/bounds"))
     val streamed = s.read.parquet(s"$path/lists")
@@ -3863,7 +3816,7 @@ object RetrievalQueries {
     GraphAnn.writeIndex(feats(base), "doc_id", "v", graphM, graphEf,
       parts, path)
     val genBefore = GraphAnn.currentGeneration(path)
-    val ledger = new java.io.File(path, "applied__appends")
+    val ledger = GraphAnn.appendLedger(path)
     val stage = q193Stage(s, dir)
     val schema = s.read.parquet(stage).schema
     val src = s.readStream.schema(schema)
@@ -4412,40 +4365,19 @@ object RetrievalQueries {
         PipelineQueries.roundtripPath(dir, "q99_stream"))
     }
     val path = PipelineQueries.roundtripPath(dir, "q190")
-    val ckpt = PipelineQueries.roundtripPath(dir, "q190_ckpt")
     cloneTree(graphBase80Path(s, dir), path)
-    graft.FileTree.delete(new java.io.File(path, "applied__appends"))
-    graft.FileTree.delete(new java.io.File(ckpt))
-    val schema = s.read.parquet(stage).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
-    graft.streaming.Streaming.runForeachBatchResumable(s, src, ckpt, (batch, bid) => {
+    graft.FileTree.delete(graft.search.GraphAnn.appendLedger(path))
+    // batch 2's crash lands AFTER the cell rewrites, BEFORE the ledger
+    // commit: the harness restores the intent the crashed attempt
+    // would have left
+    Drains.exactlyOnce(s, "q190", stage,
+        PipelineQueries.roundtripPath(dir, "q190_ckpt"),
+        graft.search.GraphAnn.appendLedger(path), None,
+        restoreIntent = true) { (batch, bid) =>
       val b = batch.select(col("vec_id"), col("v")).localCheckpoint()
-      graft.search.GraphAnn.appendToIndexIdempotent(s, path, b,
+      _ => graft.search.GraphAnn.appendToIndexIdempotent(s, path, b,
         "vec_id", "v", bid)
-      if (bid == 2L) {
-        // crash AFTER the cell rewrites, BEFORE the ledger commit:
-        // restore the intent the crashed attempt would have left
-        val ledger = new java.io.File(path, "applied__appends")
-        require(new java.io.File(ledger, s"b$bid").delete(),
-          s"q190: batch $bid must have committed a marker")
-        java.nio.file.Files.createFile(
-          new java.io.File(ledger, s"i$bid").toPath)
-      }
-      graft.search.GraphAnn.appendToIndexIdempotent(s, path, b,
-        "vec_id", "v", bid) // the at-least-once re-delivery
-      require(graft.streaming.ExactlyOnce.isApplied(
-          new java.io.File(path, "applied__appends"), bid),
-        s"q190: batch $bid must end committed in the ledger")
-    }, sweepLedgers = Seq(new java.io.File(path, "applied__appends")))
-    // ledger RETIREMENT (round 18, the q193 discipline): the durable
-    // checkpoint's watermark sweep retired every committed marker and
-    // no intent survives; the cell-signature gate below proves the
-    // sweep re-applied nothing
-    val q190Markers = Option(new java.io.File(path, "applied__appends")
-      .listFiles()).toSeq.flatten.map(_.getName)
-    require(q190Markers.isEmpty,
-      s"q190: the post-drain sweep must retire every marker, got $q190Markers")
+    }
     require(cellSignature(s, path) == cellSignature(s, graphRebuildPath(s, dir)),
       "q190: the exactly-once drain's per-cell content signature must " +
         "equal the same-routing full rebuild's — a duplicated node row " +

@@ -628,53 +628,45 @@ object Queries {
   }
 
   /** [[writePostings]](append) with EXACTLY-ONCE semantics under
-    * streaming re-delivery — the
-    * [[graft.search.IVF.appendToIndexIdempotent]] contract on the
-    * lexical family, with the bucketed twist: staged files carry
-    * Spark's `_NNNNN` bucket suffix in their names, and
-    * [[graft.streaming.ExactlyOnce.promote]] PRESERVES it as the
-    * trailing `_<digits>` of the deterministic promoted name, so the
-    * bucketed scan still reads each promoted file's bucket id off the
-    * file name and `SelectedBucketsCount` pruning survives the
-    * idempotent path byte for byte (BM25Spec pins it). The stage is a
-    * per-batch EXTERNAL table (versioned name, like compactPostings'
-    * per-version stage names) whose metadata is dropped after the
-    * promote — the files have already moved. */
+    * streaming re-delivery — [[graft.streaming.ExactlyOnce.append]] on
+    * the lexical family, with the bucketed twist: staged files carry
+    * Spark's `_NNNNN` bucket suffix in their names, and the promote
+    * PRESERVES it as the trailing `_<digits>` of the deterministic
+    * promoted name, so the bucketed scan still reads each promoted
+    * file's bucket id off the file name and `SelectedBucketsCount`
+    * pruning survives the idempotent path byte for byte (BM25Spec pins
+    * it). The landing step re-resolves the live path after the revive
+    * compaction and stages through a per-batch EXTERNAL bucketed table
+    * (versioned name, like compactPostings' per-version stage names)
+    * whose metadata is dropped right after the write — the table is
+    * external, so its files stay for the promote, and no metadata is
+    * left for a crash after the marker (whose re-delivery never lands
+    * again) to strand. The table refreshes only when the batch
+    * landed. */
   private[graft] def writePostingsIdempotent(s: SparkSession, docs: DataFrame,
                                              tbl: String, batchId: Long): Unit = {
-    import graft.streaming.ExactlyOnce
     val live0 = postingsLivePath(s, tbl)
-    val ledger = Generations.ledger(live0)
-    if (ExactlyOnce.isApplied(ledger, batchId)) return
-    val debris = ExactlyOnce.stageDir(new java.io.File(live0), batchId)
-    if (debris.isDirectory) {
-      ExactlyOnce.scrub(new java.io.File(live0), batchId)
-      graft.FileTree.delete(debris)
+    val root0 = new java.io.File(live0)
+    val landed = graft.streaming.ExactlyOnce.append(Generations.ledger(live0),
+        batchId, Seq(root0 -> root0))(_ => false) { stageIn =>
+      if (BM25.hasRevives(s, live0, docs.select(col("doc_id"))))
+        compactPostings(s, tbl, live0)
+      val live = new java.io.File(postingsLivePath(s, tbl)) // re-resolve: the revive flips
+      val stage = stageIn(live)
+      val stageTbl = s"${tbl}__bstage$batchId"
+      s.sql(s"DROP TABLE IF EXISTS $stageTbl")
+      // the stage MUST carry the live table's creation-time bucket
+      // count — promoted files join the standing layout
+      val buckets = bucketCountOf(s, tbl)
+      bucketedPostingsFrame(s, docs, buckets)
+        .write.mode("overwrite")
+        .option("path", stage.getPath)
+        .bucketBy(buckets, "term").sortBy("term")
+        .saveAsTable(stageTbl)
+      s.sql(s"DROP TABLE IF EXISTS $stageTbl")
+      graft.streaming.ExactlyOnce.Landing(stage, live, true)
     }
-    if (BM25.hasRevives(s, live0, docs.select(col("doc_id"))))
-      compactPostings(s, tbl, live0)
-    val live = postingsLivePath(s, tbl) // re-resolve: the revive flips
-    val stage = ExactlyOnce.stageDir(new java.io.File(live), batchId)
-    val stageTbl = s"${tbl}__bstage$batchId"
-    s.sql(s"DROP TABLE IF EXISTS $stageTbl")
-    // the stage MUST carry the live table's creation-time bucket
-    // count — promoted files join the standing layout
-    val buckets = bucketCountOf(s, tbl)
-    bucketedPostingsFrame(s, docs, buckets)
-      .write.mode("overwrite")
-      .option("path", stage.getPath)
-      .bucketBy(buckets, "term").sortBy("term")
-      .saveAsTable(stageTbl)
-    ExactlyOnce.promote(stage, new java.io.File(live), batchId)
-    // drop the stage table's metadata (external — files already
-    // promoted) BEFORE the marker: a crash after the commit would
-    // leave metadata nothing ever cleans, because the re-delivery
-    // returns at the isApplied probe (a crash before the commit
-    // re-runs the whole body, whose leading DROP sweeps it)
-    s.sql(s"DROP TABLE IF EXISTS $stageTbl")
-    ExactlyOnce.commit(ledger, batchId)
-    graft.FileTree.delete(stage)
-    s.catalog.refreshTable(tbl)
+    if (landed) s.catalog.refreshTable(tbl)
   }
 
   /** BUCKET-PRUNED PIN on a postings generation — closes the
@@ -749,8 +741,7 @@ object Queries {
     // the IVF.compactIndex in-flight-append guard: an uncommitted
     // idempotent-append stage under this path is a half-landed ingest
     // batch whose re-delivery would double whatever a rewrite folds
-    graft.streaming.ExactlyOnce.sweepStages(new java.io.File(path),
-      Generations.ledger(path), failOnInflight = true, s"compactPostings($tbl)")
+    graft.streaming.ExactlyOnce.refuseInflight(path, s"compactPostings($tbl)")
     // claim (derive + fence, [[Generations.claim]]): two compactions
     // racing from the same listing derive the same v — the loser
     // fails loudly before any staged bytes or metastore DDL; a crashed
@@ -911,8 +902,7 @@ object Queries {
     // batch, and PRESERVE the exactly-once ledger across the rebuild
     // (the SQ.rebuildIndex / Dedup.rebuildRegister discipline on the
     // lexical family)
-    graft.streaming.ExactlyOnce.sweepStages(new java.io.File(livePath),
-      Generations.ledger(livePath), failOnInflight = true, s"rebuildPostings($tbl)")
+    graft.streaming.ExactlyOnce.refuseInflight(livePath, s"rebuildPostings($tbl)")
     val src = Tombstones.hide(s, Tombstones.beside(livePath), docs,
       on = Some("doc_id"), materialize = true)
     // maintenance CARRIES the creation-time bucket count (the
@@ -1387,42 +1377,16 @@ object Queries {
     val tbl = "bm25_eo_" + PipelineQueries.sanitizeTag(dir)
     s.sql(s"DROP TABLE IF EXISTS $tbl")
     val path = PipelineQueries.roundtripPath(dir, "bm25eo")
-    val ckpt = PipelineQueries.roundtripPath(dir, "bm25eo_ckpt")
-    graft.FileTree.delete(new java.io.File(ckpt))
     val d = t(s, dir, "documents")
     clonePostingsTo(s, postingsSrcB100(s, dir), tbl, path)
-    val stage = q102Stage(s, dir)
-    val schema = s.read.parquet(stage).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
-    graft.streaming.Streaming.runForeachBatchResumable(s, src, ckpt, (batch, bid) => {
+    // the ledger sits beside the base path; the stage dir under the
+    // live generation, re-resolved when the debris is injected and
+    // when the drain is done
+    Drains.exactlyOnce(s, "q186", q102Stage(s, dir),
+        PipelineQueries.roundtripPath(dir, "bm25eo_ckpt"), Generations.ledger(path),
+        Some(() => new java.io.File(postingsLivePath(s, tbl)))) { (batch, bid) =>
       val b = batch.localCheckpoint()
-      if (bid == 1L) // a "crashed" earlier attempt left its stage dir
-        graft.streaming.ExactlyOnce.stageDir(
-          new java.io.File(postingsLivePath(s, tbl)), bid).mkdirs()
-      writePostingsIdempotent(s, b, tbl, bid)
-      if (bid == 2L) { // crash AFTER the promote, BEFORE the marker
-        val m = new java.io.File(
-          Generations.ledger(postingsLivePath(s, tbl)), s"b$bid")
-        require(m.delete(), s"q186: batch $bid must have committed a marker")
-      }
-      writePostingsIdempotent(s, b, tbl, bid) // the re-delivery
-      require(graft.streaming.ExactlyOnce.isApplied(
-          Generations.ledger(postingsLivePath(s, tbl)), bid),
-        s"q186: batch $bid must end committed in the ledger")
-    }, sweepLedgers = Seq(Generations.ledger(postingsLivePath(s, tbl))))
-    val live = postingsLivePath(s, tbl)
-    // ledger RETIREMENT (round 18): the watermark sweep retired every
-    // committed marker; the row-for-row gate below proves it
-    // re-applied nothing
-    val q186Markers = Option(Generations.ledger(live).listFiles())
-      .toSeq.flatten.map(_.getName)
-    require(q186Markers.isEmpty,
-      s"q186: the post-drain sweep must retire every marker, got $q186Markers")
-    (0L until 4L).foreach { bid =>
-      require(!graft.streaming.ExactlyOnce.stageDir(
-          new java.io.File(live), bid).exists(),
-        s"q186: batch $bid must leave no stage debris")
+      _ => writePostingsIdempotent(s, b, tbl, bid)
     }
     val post = s.table(tbl)
     val rebuilt = bm25Postings(s, dir)

@@ -186,9 +186,7 @@ object Dedup {
     // discipline on the register (a rebuild that wiped the markers
     // would turn the next crash's re-delivery of a committed batch
     // into doubled bands on a rebuild that already re-derived them)
-    graft.streaming.ExactlyOnce.sweepStages(new java.io.File(livePath),
-      graft.Generations.ledger(livePath), failOnInflight = true,
-      "Dedup.rebuildRegister")
+    graft.streaming.ExactlyOnce.refuseInflight(livePath, "Dedup.rebuildRegister")
     writeRegisterData(
       Tombstones.hide(spark, Tombstones.beside(livePath), bands, materialize = true),
       livePath, buckets)
@@ -268,27 +266,31 @@ object Dedup {
     else compactRegister(spark, path, buckets)
 
   /** [[appendToRegister]] with EXACTLY-ONCE semantics under streaming
-    * re-delivery — [[graft.search.IVF.appendToIndexIdempotent]]'s
-    * contract on the dedup artifact ([[graft.streaming.ExactlyOnce]]
-    * holds the protocol): committed batchId → no-op returning `path`;
-    * crash-recovery scrubs the batch's own deterministic `b<id>-p*`
-    * debris before the revive probe can compact it into a fresh
-    * generation; stage → promote → marker-last otherwise. Returns the
-    * path the batch landed in, exactly like the raw append — the
-    * caller threads it. A re-delivery that raced a revive flip
-    * converges too: the half-promoted generation was never threaded
-    * (the crash happened before the return), so the re-run simply
-    * compacts again and the orphan is GC'd by a later cycle. */
+    * re-delivery — [[graft.streaming.ExactlyOnce.append]] on the dedup
+    * artifact. The crash-debris probe covers the base path and every
+    * sibling generation (one parent-dir listing): the revive probe
+    * compacts to a flipped generation BEFORE staging, so a
+    * flip-then-crash attempt leaves its stage dir and promoted
+    * `b<id>-p*` files inside a generation the re-delivery never
+    * threads. The landing step is [[appendToRegister]]'s (checkpoint
+    * under a standing sidecar, [[resolveAppendTarget]]); the marker
+    * records the landed path. Returns the path the batch landed in,
+    * exactly like the raw append — the caller threads it. A
+    * re-delivery that raced a revive flip converges too: the
+    * half-promoted generation was never threaded (the crash happened
+    * before the return), so the re-run simply compacts again and the
+    * orphan is GC'd by a later cycle. */
   def appendToRegisterIdempotent(spark: org.apache.spark.sql.SparkSession,
                                  path: String, bands: DataFrame,
                                  buckets: Int, batchId: Long): String = {
-    import graft.streaming.ExactlyOnce
-    val ledger = graft.Generations.ledger(path)
     val gens = graft.Generations.siblings(path)
-    if (ExactlyOnce.isApplied(ledger, batchId)) {
-      // return the path the batch LANDED in (recorded with the
-      // marker), NOT the caller's threaded path: the register has no
-      // pointer, so a crash after a revive flip restarts the drain
+    val debris = (new java.io.File(graft.Generations.baseOf(path)) +:
+      graft.Generations.generationDirs(gens)).map(d => d -> d)
+    graft.streaming.ExactlyOnce.append(graft.Generations.ledger(path), batchId,
+        debris) { recorded =>
+      // a skip returns the path the batch LANDED in (recorded with
+      // the marker), NOT the caller's threaded path: the register has
+      // no pointer, so a crash after a revive flip restarts the drain
       // with the stale pre-flip path — echoing it would abandon the
       // flipped generation holding the committed batch (and a later
       // compaction's GC would destroy it). A recorded path superseded
@@ -298,43 +300,21 @@ object Dedup {
       // the content lives on in its descendants, so fall back to the
       // newest generation that actually exists (what a restarted
       // operator would re-derive as the pointer).
-      val recorded = ExactlyOnce.appliedPayload(ledger, batchId)
-        .filter(p => new java.io.File(p).isDirectory)
-      return recorded.getOrElse {
+      recorded.filter(p => new java.io.File(p).isDirectory).getOrElse {
         if (new java.io.File(path).isDirectory) path
         else graft.Generations.versions(gens).maxOption
           .fold(graft.Generations.baseOf(path))(graft.Generations.siblingPath(path, _))
       }
+    } { stageIn =>
+      val staged = if (Tombstones.exists(Tombstones.beside(path))) bands.localCheckpoint() else bands
+      val target = resolveAppendTarget(spark, path, staged, buckets)
+      val stage = stageIn(new java.io.File(target))
+      staged
+        .repartition(col("sigbucket"))
+        .write.mode("overwrite").partitionBy("sigbucket").parquet(stage.getPath)
+      graft.streaming.ExactlyOnce.Landing(stage, new java.io.File(target), target,
+        payload = target)
     }
-    // crash-debris probe across the WHOLE register family: a prior
-    // attempt may have resolved a DIFFERENT target — the revive probe
-    // compacts to a flipped generation BEFORE staging, so a
-    // flip-then-crash attempt leaves its stage dir (and any promoted
-    // b<id>-p* files) inside a generation the re-delivery never
-    // threads (its own resolution claims a FRESH generation, so the
-    // debris sits in an orphan). Probe the base path and every
-    // sibling generation — one parent-dir listing, request-sized —
-    // so the debris is scrubbed on re-delivery (the no-stage-debris
-    // discipline the other families gate on) rather than deferred to
-    // generation GC.
-    (new java.io.File(graft.Generations.baseOf(path)) +:
-        graft.Generations.generationDirs(gens)).foreach { dir =>
-      val debris = ExactlyOnce.stageDir(dir, batchId)
-      if (debris.isDirectory) {
-        ExactlyOnce.scrub(dir, batchId)
-        graft.FileTree.delete(debris)
-      }
-    }
-    val staged = if (Tombstones.exists(Tombstones.beside(path))) bands.localCheckpoint() else bands
-    val target = resolveAppendTarget(spark, path, staged, buckets)
-    val stage = ExactlyOnce.stageDir(new java.io.File(target), batchId)
-    staged
-      .repartition(col("sigbucket"))
-      .write.mode("overwrite").partitionBy("sigbucket").parquet(stage.getPath)
-    ExactlyOnce.promote(stage, new java.io.File(target), batchId)
-    ExactlyOnce.commit(ledger, batchId, payload = target)
-    graft.FileTree.delete(stage)
-    target
   }
 
   /** The LIVE view of a register frame stored at `path`: deleted ids
@@ -373,9 +353,7 @@ object Dedup {
     // the IVF.compactIndex in-flight-append guard: an uncommitted
     // idempotent-append stage under this path is a half-landed ingest
     // batch whose re-delivery would double whatever a rewrite folds
-    graft.streaming.ExactlyOnce.sweepStages(new java.io.File(path),
-      graft.Generations.ledger(path), failOnInflight = true,
-      "Dedup.compactRegister")
+    graft.streaming.ExactlyOnce.refuseInflight(path, "Dedup.compactRegister")
     // claim (derive + fence): the loser of a same-version race fails
     // loudly before staging
     val gens = graft.Generations.siblings(path)

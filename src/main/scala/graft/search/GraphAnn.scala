@@ -845,7 +845,7 @@ object GraphAnn {
     // committed-batch markers would make the fresh index silently
     // SKIP legitimate re-used batch ids (the ledger twin of the
     // stale-sidecar class — the ghost hides NEW data)
-    graft.FileTree.delete(new java.io.File(s"$path/applied__appends"))
+    graft.FileTree.delete(appendLedger(path))
     writeIndexInto(routing, docs, idCol, vecCol, m, efC,
       idxPath = path, genRoot = path, version = 1, replicas = replicas)
   }
@@ -1177,6 +1177,15 @@ object GraphAnn {
       }
   }
 
+  /** The graph family's exactly-once append ledger: committed-batch
+    * markers and intents ([[graft.streaming.ExactlyOnce]]) under
+    * `<path>/applied__appends`. It lives at the INDEX path, not the
+    * generation root: whether a batch was applied must survive
+    * generation flips (reviveToIndex/compactTombstones swap gen__vN
+    * subdirs under the same index path). */
+  def appendLedger(path: String): java.io.File =
+    new java.io.File(path, "applied__appends")
+
   /** [[appendToIndex]] with EXACTLY-ONCE semantics under streaming
     * re-delivery — the [[graft.search.IVF.appendToIndexIdempotent]]
     * contract on the graph family. Round 17's staged cell commit
@@ -1217,12 +1226,8 @@ object GraphAnn {
     import spark.implicits._
     import graft.streaming.ExactlyOnce
     val root = resolveRoot(path0)
-    // the ledger lives at the INDEX path, not the generation root:
-    // whether a batch was applied must survive generation flips
-    // (reviveToIndex/compactTombstones swap gen__vN subdirs under the
-    // same index path)
-    val ledger = new java.io.File(path0, "applied__appends")
-    val intent = new java.io.File(ledger, s"i$batchId")
+    val ledger = appendLedger(path0)
+    val intent = ExactlyOnce.intent(ledger, batchId)
     if (ExactlyOnce.isApplied(ledger, batchId)) {
       // a crash BETWEEN the commit and the intent delete leaves the
       // intent behind; clear it here so committed batches' intents

@@ -302,8 +302,7 @@ object IVF {
       // the compactIndex in-flight-append guard, for the same reason:
       // a rebuild folding a half-promoted ingest batch would hand its
       // re-delivery a double-write
-      graft.streaming.ExactlyOnce.sweepStages(new java.io.File(path),
-        appendLedger(path), failOnInflight = true, "IVF.writeIndexFrom")
+      graft.streaming.ExactlyOnce.refuseInflight(path, "IVF.writeIndexFrom")
       val staged = Tombstones.hide(assigned.sparkSession,
         Tombstones.ofLists(s"$path/$prevLists"), assigned)
       // claim (derive + fence) BEFORE any staged bytes: the loser of
@@ -390,48 +389,35 @@ object IVF {
     * re-delivery — the sink-side contract
     * [[graft.streaming.Streaming.runForeachBatchResumable]] names:
     * foreachBatch re-runs a batch whose checkpoint commit did not
-    * land, and a raw append would then write its vectors twice. The
-    * [[graft.streaming.ExactlyOnce]] protocol: committed batchId →
-    * no-op before any plan runs; otherwise stage the assigned batch
-    * to a scratch dir, PROMOTE each staged file into the live lists
-    * under a deterministic (batchId, partition) name with
-    * REPLACE_EXISTING renames, and write the ledger marker LAST — a
-    * crash at any point makes the re-delivery converge on the same
-    * file set instead of doubling rows. The revive probe runs exactly
-    * as in [[appendToIndex]] (a re-delivered batch re-probes; if its
-    * first attempt already compacted, the cleared sidecar makes the
-    * probe a directory stat). Same per-batch cost as the raw append
-    * plus one rename per touched list. */
+    * land, and a raw append would then write its vectors twice.
+    * [[graft.streaming.ExactlyOnce.append]] runs the protocol; the
+    * landing step is [[appendToIndex]]'s revive probe and assignment,
+    * staged under `path` and promoted into the live lists. A skipped
+    * batch returns `Unit`. Same per-batch cost as the raw append plus
+    * one rename per touched list. */
   def appendToIndexIdempotent(spark: org.apache.spark.sql.SparkSession,
                               path: String, delta: DataFrame,
                               idCol: String, vecCol: String,
-                              batchId: Long): Unit = {
-    import graft.streaming.ExactlyOnce
-    val ledger = appendLedger(path)
-    if (ExactlyOnce.isApplied(ledger, batchId)) return
-    val stage = ExactlyOnce.stageDir(new java.io.File(path), batchId)
-    if (stage.isDirectory) {
-      // our own earlier delivery crashed before its marker (the stage
-      // dir is deleted only after commit). Scrub the partial
-      // promotion FIRST: the live generation is still the crash-time
-      // one (maintenance refuses while this stage exists), so the
-      // batch's own `b<id>-p*` files are exactly the debris — then
-      // the revive compaction below cannot fold rows the re-promote
-      // would double, and a conf change between runs cannot strand
-      // old deterministic keys.
-      ExactlyOnce.scrub(new java.io.File(listsPath(path)), batchId)
-      graft.FileTree.delete(stage)
+                              batchId: Long): Unit =
+    appendOnce(path, batchId)(()) { stageIn =>
+      if (hasRevives(spark, path, delta, idCol)) compactIndex(spark, path)
+      val (ln, cn) = generationPair(path)
+      val cents = spark.read.parquet(s"$path/$cn")
+      val stage = stageIn(new java.io.File(path))
+      assignAuto(delta, idCol, vecCol, cents, cents.count().toInt)
+        .repartition(col("cid"))
+        .write.mode("overwrite").partitionBy("cid").parquet(stage.getPath)
+      graft.streaming.ExactlyOnce.Landing(stage, new java.io.File(s"$path/$ln"), ())
     }
-    if (hasRevives(spark, path, delta, idCol)) compactIndex(spark, path)
-    val (ln, cn) = generationPair(path)
-    val cents = spark.read.parquet(s"$path/$cn")
-    assignAuto(delta, idCol, vecCol, cents, cents.count().toInt)
-      .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(stage.getPath)
-    ExactlyOnce.promote(stage, new java.io.File(s"$path/$ln"), batchId)
-    ExactlyOnce.commit(ledger, batchId)
-    graft.FileTree.delete(stage)
-  }
+
+  /** [[graft.streaming.ExactlyOnce.append]] for the list families
+    * (IVF and SQ8 share the layout): the ledger is [[appendLedger]],
+    * the stage root is `path` and the live dir the current lists;
+    * `skip` is what a committed batch returns. */
+  private[search] def appendOnce[A](path: String, batchId: Long)(skip: A)(
+      land: (java.io.File => java.io.File) => graft.streaming.ExactlyOnce.Landing[A]): A =
+    graft.streaming.ExactlyOnce.append(appendLedger(path), batchId,
+      Seq(new java.io.File(path) -> new java.io.File(listsPath(path))))(_ => skip)(land)
 
   /** True when any of `delta`'s ids sit in the LIVE generation's
     * delete sidecar — the REVIVE probe ([[graft.Tombstones.revives]])
@@ -615,8 +601,7 @@ object IVF {
     // re-delivery would then double them — the one window file-level
     // replacement can't close alone. Refuse loudly; committed stage
     // debris is swept here instead.
-    graft.streaming.ExactlyOnce.sweepStages(new java.io.File(path),
-      appendLedger(path), failOnInflight = true, "IVF.compactIndex")
+    graft.streaming.ExactlyOnce.refuseInflight(path, "IVF.compactIndex")
     val (liveLists, liveCents) = generationPair(path)
     // claim (derive + fence): two compactions racing (e.g. a
     // scheduled one and a valve-fired one from another session)

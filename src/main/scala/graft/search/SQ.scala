@@ -175,9 +175,7 @@ object SQ {
     // folds a half-promoted ingest batch (the rebuild re-embeds the
     // corpus, which already holds the batch's docs) would hand its
     // re-delivery a double-write
-    if (live)
-      graft.streaming.ExactlyOnce.sweepStages(new java.io.File(path),
-        IVF.appendLedger(path), failOnInflight = true, "SQ.rebuildIndex")
+    if (live) graft.streaming.ExactlyOnce.refuseInflight(path, "SQ.rebuildIndex")
     val src =
       if (!live) docs
       else Tombstones.hide(spark, Tombstones.ofLists(IVF.listsPath(path)), docs,
@@ -254,38 +252,30 @@ object SQ {
   }
 
   /** [[appendToIndex]] with EXACTLY-ONCE semantics under streaming
-    * re-delivery — [[graft.search.IVF.appendToIndexIdempotent]]'s
-    * contract on the quantized family (same ledger at the index root,
-    * same stage → deterministic promote → marker-last protocol, same
-    * crash-recovery scrub; [[graft.streaming.ExactlyOnce]] holds the
-    * full argument). Returns the clamp fraction like the raw append;
-    * a skipped duplicate returns 0.0 — its first delivery already
-    * fed the requant trigger, and re-counting a re-delivered batch's
-    * clamps would double-charge the drift signal. */
+    * re-delivery — [[graft.streaming.ExactlyOnce.append]] over the
+    * IVF list layout (same ledger, stage root and live lists as
+    * [[graft.search.IVF.appendToIndexIdempotent]]). The landing step
+    * computes the clamp fraction before the staged write and returns
+    * it like the raw append; a skipped duplicate returns 0.0 — its
+    * first delivery already fed the requant trigger, and re-counting
+    * a re-delivered batch's clamps would double-charge the drift
+    * signal. */
   def appendToIndexIdempotent(spark: SparkSession, path: String,
                               delta: DataFrame, idCol: String,
-                              vecCol: String, batchId: Long): Double = {
-    import graft.streaming.ExactlyOnce
-    val ledger = IVF.appendLedger(path)
-    if (ExactlyOnce.isApplied(ledger, batchId)) return 0.0
-    val stage = ExactlyOnce.stageDir(new java.io.File(path), batchId)
-    if (stage.isDirectory) {
-      ExactlyOnce.scrub(new java.io.File(IVF.listsPath(path)), batchId)
-      graft.FileTree.delete(stage)
+                              vecCol: String, batchId: Long): Double =
+    IVF.appendOnce(path, batchId)(0.0) { stageIn =>
+      if (IVF.hasRevives(spark, path, delta, idCol))
+        IVF.compactIndex(spark, path)
+      val cents = spark.read.parquet(s"$path/centroids")
+      val ba = boundsArrays(spark.read.parquet(s"$path/bounds"))
+      val oobFrac = clampFraction(delta, vecCol, ba)
+      val stage = stageIn(new java.io.File(path))
+      quantized(delta, idCol, vecCol, cents, ba)
+        .repartition(col("cid"))
+        .write.mode("overwrite").partitionBy("cid").parquet(stage.getPath)
+      graft.streaming.ExactlyOnce.Landing(stage,
+        new java.io.File(IVF.listsPath(path)), oobFrac)
     }
-    if (IVF.hasRevives(spark, path, delta, idCol))
-      IVF.compactIndex(spark, path)
-    val cents = spark.read.parquet(s"$path/centroids")
-    val ba = boundsArrays(spark.read.parquet(s"$path/bounds"))
-    val oobFrac = clampFraction(delta, vecCol, ba)
-    quantized(delta, idCol, vecCol, cents, ba)
-      .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(stage.getPath)
-    ExactlyOnce.promote(stage, new java.io.File(IVF.listsPath(path)), batchId)
-    ExactlyOnce.commit(ledger, batchId)
-    graft.FileTree.delete(stage)
-    oobFrac
-  }
 
   /** Multi-query SQ8 search WITHOUT the coarse IVF structure (full
     * quantized scan) — the form q48's recall surface probes, because

@@ -21,10 +21,13 @@ package graft.streaming
   *     batch, `b<id>`, next to the index) — a delivery whose marker
   *     exists is a duplicate and becomes a no-op before any plan
   *     runs.
-  *  2. The batch's rows are STAGED to a scratch dir with Spark's
+  *  2. A delivery that finds its own stage dir standing (an earlier
+  *     attempt crashed before its marker) SCRUBS that attempt's
+  *     promoted `b<id>-p*` files and the stage dir first.
+  *  3. The batch's rows are STAGED to a scratch dir with Spark's
   *     normal writer (`part-NNNNN-<uuid>…` names under the same
   *     partition-dir structure as the live layout).
-  *  3. [[promote]] renames each staged file into the live layout
+  *  4. [[promote]] renames each staged file into the live layout
   *     under a DETERMINISTIC name derived from (batchId, writing
   *     shuffle partition, bucket suffix): `b<id>-p<NNNNN>[_<bucket>]
   *     .parquet`. Hash repartitioning is deterministic for the same
@@ -34,9 +37,14 @@ package graft.streaming
   *     instead of appending a second copy. Per-file moves are atomic
   *     on a filesystem; on an object store each becomes an
   *     idempotent PUT to the same key.
-  *  4. The marker is written LAST. Crash anywhere before it and the
+  *  5. The marker is written LAST. Crash anywhere before it and the
   *     re-delivery re-stages and re-promotes over its own debris;
   *     crash after it and the re-delivery is skipped by (1).
+  *
+  * [[append]] runs these steps in this order for every stage-and-
+  * promote family (IVF and SQ8 lists, BM25 postings, the dedup
+  * register); each family supplies only its landing step (revive
+  * probe, target resolution, the staged write).
   *
   * The one window file-level replacement cannot close alone: a crash
   * mid-append followed by a MAINTENANCE REWRITE (compaction folds the
@@ -44,11 +52,11 @@ package graft.streaming
   * only then the re-delivery, which would re-append rows the rewrite
   * already absorbed. The machineries close it on their side:
   * maintenance refuses to run while an UNCOMMITTED stage dir exists
-  * ([[sweepStages]] with `failOnInflight = true`) — an in-flight
-  * append is the ingest loop's to finish (just re-run the drain), in
-  * the same spirit as [[graft.Generations]]'s loud loser. Committed
-  * stage debris (crash between marker and cleanup) is garbage and is
-  * swept, not fatal.
+  * ([[refuseInflight]]) — an in-flight append is the ingest loop's to
+  * finish (just re-run the drain), in the same spirit as
+  * [[graft.Generations]]'s loud loser. Committed stage debris (crash
+  * between marker and cleanup) is garbage: the committed batch's
+  * re-delivery deletes it, and maintenance sweeps it, never fatal.
   *
   * CONTRACT — ONE INGEST STREAM PER INDEX (the ingest twin of the
   * single-maintenance-writer contract [[graft.Generations]] states
@@ -75,14 +83,69 @@ package graft.streaming
   * (the same bytes a raw append would write) plus one rename per
   * file; nothing index-sized moves. */
 object ExactlyOnce {
+  import java.io.File
+
+  /** What a family's landing step hands [[append]]: the batch's stage
+    * dir (written through the stage handle `append` passes in), the
+    * live dir it promotes into, the family's result and the payload
+    * the marker records ([[commit]]). */
+  final case class Landing[A](stage: File, live: File, result: A,
+                              payload: String = "")
+
+  /** Append streaming batch `batchId` exactly once — the whole
+    * protocol, in its fixed order:
+    *
+    *  1. LEDGER PROBE, before any plan: a committed batch returns
+    *     `skip` of the marker's payload. Its own stage dir in every
+    *     `debris` root is deleted first — debris of a crash between
+    *     the marker and the cleanup, which maintenance would otherwise
+    *     have to sweep against a marker [[sweepLedger]] may retire
+    *     first. The committed batch's promoted files stay.
+    *  2. DEBRIS SCRUB: for each `(stage root, live dir)` pair, a
+    *     standing stage dir means an earlier attempt crashed before
+    *     its marker — its `b<id>-p*` files in the live dir and the
+    *     stage dir are removed BEFORE `land` can run a revive
+    *     compaction that would fold them.
+    *  3. LANDING: the family's `land` (revive probe, target
+    *     resolution, the write into the stage dir it names through
+    *     the handle it is given).
+    *  4. [[promote]] into the live dir, [[commit]] the marker with the
+    *     payload, delete the stage dir; returns the landing's result.
+    */
+  def append[A](ledger: File, batchId: Long, debris: Seq[(File, File)])(
+      skip: Option[String] => A)(land: (File => File) => Landing[A]): A = {
+    if (isApplied(ledger, batchId)) {
+      debris.foreach { case (root, _) => graft.FileTree.delete(stageDir(root, batchId)) }
+      skip(appliedPayload(ledger, batchId))
+    } else {
+      debris.foreach { case (root, live) =>
+        val crashed = stageDir(root, batchId)
+        if (crashed.isDirectory) {
+          scrub(live, batchId)
+          graft.FileTree.delete(crashed)
+        }
+      }
+      val landed = land(stageDir(_, batchId))
+      promote(landed.stage, landed.live, batchId)
+      commit(ledger, batchId, landed.payload)
+      graft.FileTree.delete(landed.stage)
+      landed.result
+    }
+  }
 
   /** Marker-file handle for `batchId` under `ledger`. */
-  private def marker(ledger: java.io.File, batchId: Long): java.io.File =
-    new java.io.File(ledger, s"b$batchId")
+  private[graft] def marker(ledger: File, batchId: Long): File =
+    new File(ledger, s"b$batchId")
+
+  /** Intent-marker handle for `batchId` under `ledger` — the graph
+    * family's in-flight recovery signal (written before its append,
+    * cleared after the commit; [[sweepLedger]] never retires it). */
+  private[graft] def intent(ledger: File, batchId: Long): File =
+    new File(ledger, s"i$batchId")
 
   /** True when `batchId` has already been committed under `ledger` —
     * the re-delivery probe, one file stat. */
-  def isApplied(ledger: java.io.File, batchId: Long): Boolean =
+  def isApplied(ledger: File, batchId: Long): Boolean =
     marker(ledger, batchId).isFile
 
   /** Record `batchId` as committed. Idempotent (a marker that
@@ -95,7 +158,7 @@ object ExactlyOnce {
     * flipped generation instead of echoing the caller's stale
     * pre-crash path (which a later compaction's GC would destroy
     * with the committed batch inside). */
-  def commit(ledger: java.io.File, batchId: Long,
+  def commit(ledger: File, batchId: Long,
              payload: String = ""): Unit = {
     ledger.mkdirs()
     val m = marker(ledger, batchId)
@@ -107,7 +170,7 @@ object ExactlyOnce {
     // stolen and throw on a batch that is in fact committed; with
     // per-attempt temps, last-rename-wins and both attempts wrote
     // equivalent content)
-    val tmp = new java.io.File(ledger,
+    val tmp = new File(ledger,
       s".b$batchId.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     java.nio.file.Files.write(tmp.toPath,
       payload.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -118,7 +181,7 @@ object ExactlyOnce {
 
   /** The payload recorded with a committed marker (None when the
     * batch is not committed, or committed with no payload). */
-  def appliedPayload(ledger: java.io.File, batchId: Long): Option[String] = {
+  def appliedPayload(ledger: File, batchId: Long): Option[String] = {
     val m = marker(ledger, batchId)
     if (!m.isFile) None
     else Some(new String(java.nio.file.Files.readAllBytes(m.toPath),
@@ -150,18 +213,20 @@ object ExactlyOnce {
           if (i >= 0 && i + 1 < base.length && base.drop(i + 1).forall(_.isDigit))
             Some(base.drop(i + 1))
           else None
-        // the counter's position depends on the writer: UNBUCKETED
-        // files carry it in the base (part-00000-<uuid>-c003.snappy
-        // .parquet), BUCKETED files as the first extension segment
-        // (part-00000-<uuid>_00003.c001.snappy.parquet) — parse both
+        // the counter's position depends on the writer: the first
+        // extension segment (part-00000-<uuid>_00003.c001.snappy
+        // .parquet), or the base's last segment (part-00000-<uuid>
+        // -c003.snappy.parquet). The extension is read first: a base
+        // whose uuid tail happens to be `c` + digits would otherwise
+        // key the name on the run's random uuid
         val baseTail = base.drop(base.lastIndexOf('-') + 1)
-        val counter = (
-          if (base.lastIndexOf('-') >= 0 && baseTail.length > 1 &&
-              baseTail.head == 'c' && baseTail.tail.forall(_.isDigit))
-            Some(baseTail)
-          else None
-        ).orElse(name.drop(base.length).split('.')
-          .find(s => s.length > 1 && s.head == 'c' && s.tail.forall(_.isDigit)))
+        val counter = name.drop(base.length).split('.')
+          .find(s => s.length > 1 && s.head == 'c' && s.tail.forall(_.isDigit))
+          .orElse(
+            if (base.lastIndexOf('-') >= 0 && baseTail.length > 1 &&
+                baseTail.head == 'c' && baseTail.tail.forall(_.isDigit))
+              Some(baseTail)
+            else None)
         Some((task.toInt, bucket, counter))
       }
     }
@@ -189,8 +254,8 @@ object ExactlyOnce {
     * `sigbucket=3/`) are mirrored; `_SUCCESS`/hidden files are not
     * promoted. Idempotent: a re-run after a crash at ANY point
     * re-promotes over its own earlier moves. */
-  def promote(stage: java.io.File, live: java.io.File, batchId: Long): Unit = {
-    def walk(src: java.io.File, dst: java.io.File): Unit = {
+  private[graft] def promote(stage: File, live: File, batchId: Long): Unit = {
+    def walk(src: File, dst: File): Unit = {
       // belt-and-braces against silent row loss: two staged files in
       // ONE promotion mapping to the same deterministic target (a
       // writer naming scheme this parser doesn't fully key) must fail
@@ -200,7 +265,7 @@ object ExactlyOnce {
       Option(src.listFiles()).toSeq.flatten.foreach { f =>
         if (f.isDirectory) {
           if (!f.getName.startsWith(".") && !f.getName.startsWith("_"))
-            walk(f, new java.io.File(dst, f.getName))
+            walk(f, new File(dst, f.getName))
         } else partKey(f.getName).foreach { case (task, bucket, counter) =>
           val target = promotedName(batchId, task, bucket, counter)
           claimed.put(target, f.getName).foreach { prior =>
@@ -213,7 +278,7 @@ object ExactlyOnce {
           }
           dst.mkdirs()
           java.nio.file.Files.move(f.toPath,
-            new java.io.File(dst, target).toPath,
+            new File(dst, target).toPath,
             java.nio.file.StandardCopyOption.REPLACE_EXISTING,
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         }
@@ -235,9 +300,9 @@ object ExactlyOnce {
     * partition dirs) file stats; only correct BEFORE the batch's
     * marker exists and only for the caller's own batchId — both
     * guaranteed by the single-stream-per-ledger contract. */
-  def scrub(live: java.io.File, batchId: Long): Unit = {
+  private def scrub(live: File, batchId: Long): Unit = {
     val prefix = s"b$batchId-p"
-    def walk(d: java.io.File): Unit =
+    def walk(d: File): Unit =
       Option(d.listFiles()).toSeq.flatten.foreach { f =>
         if (f.isDirectory) { if (!f.getName.startsWith(".")) walk(f) }
         else if (f.getName.startsWith(prefix))
@@ -249,32 +314,41 @@ object ExactlyOnce {
   /** Stage-dir handle for `batchId` under the machinery root `dir` —
     * dot-prefixed so no Spark reader over the machinery's data dirs
     * ever lists it. */
-  def stageDir(dir: java.io.File, batchId: Long): java.io.File =
-    new java.io.File(dir, s".stage_append_b$batchId")
+  private[graft] def stageDir(dir: File, batchId: Long): File =
+    new File(dir, s".stage_append_b$batchId")
 
-  /** Sweep stage debris under `dir`. A stage whose batch is COMMITTED
-    * in `ledger` is garbage from a crash between marker and cleanup —
-    * deleted. An UNCOMMITTED stage is an IN-FLIGHT append: with
-    * `failOnInflight` (the maintenance writers) this throws loudly
-    * instead of letting a rewrite fold a partial batch that a later
-    * re-delivery would then double; without it (the appender itself,
-    * about to re-stage its own batch) it is left for the overwrite. */
-  def sweepStages(dir: java.io.File, ledger: java.io.File,
-                  failOnInflight: Boolean, what: String): Unit = {
+  /** The stage dirs standing under `dir` (any batch). */
+  private[graft] def stages(dir: File): Seq[File] =
     Option(dir.listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith(".stage_append_b"))
-      .foreach { f =>
-        val bid = scala.util.Try(
-          f.getName.stripPrefix(".stage_append_b").toLong).toOption
-        if (bid.exists(isApplied(ledger, _))) graft.FileTree.delete(f)
-        else if (failOnInflight)
-          throw new IllegalStateException(
-            s"$what: in-flight idempotent append ${f.getName} is staged " +
-              "but not committed — a rewrite now would fold a partial " +
-              "batch that its re-delivery would then double. Finish the " +
-              "ingest drain (re-running it is safe and converges) or " +
-              "delete the stage dir if the stream is retired.")
-      }
+
+  /** Leave what an attempt of `batchId` that crashed before its
+    * marker leaves under `dir`: its stage dir — the crash-debris
+    * injection of the exactly-once drains' gates. */
+  private[graft] def crashedStage(dir: File, batchId: Long): Unit = {
+    stageDir(dir, batchId).mkdirs(); ()
+  }
+
+  /** The maintenance writers' in-flight guard on the index at `path`
+    * (its ledger is [[graft.Generations.ledger]]). A stage dir whose
+    * batch is COMMITTED is garbage from a crash between marker and
+    * cleanup — deleted. An UNCOMMITTED stage is an IN-FLIGHT append:
+    * this throws loudly instead of letting a rewrite fold a partial
+    * batch that a later re-delivery would then double. */
+  def refuseInflight(path: String, what: String): Unit = {
+    val ledger = graft.Generations.ledger(path)
+    stages(new File(path)).foreach { f =>
+      val bid = scala.util.Try(
+        f.getName.stripPrefix(".stage_append_b").toLong).toOption
+      if (bid.exists(isApplied(ledger, _))) graft.FileTree.delete(f)
+      else
+        throw new IllegalStateException(
+          s"$what: in-flight idempotent append ${f.getName} is staged " +
+            "but not committed — a rewrite now would fold a partial " +
+            "batch that its re-delivery would then double. Finish the " +
+            "ingest drain (re-running it is safe and converges) or " +
+            "delete the stage dir if the stream is retired.")
+    }
     // hidden `.b<id>.<attempt>.tmp` marker temps are crash debris of
     // [[commit]] (died between the payload write and the atomic
     // rename) — only the RENAMED marker is ever authoritative, and
@@ -307,7 +381,7 @@ object ExactlyOnce {
     * Intent markers (`i<id>`, the graph family's recovery signal)
     * are NOT swept — an intent is in-flight state, never retired
     * history. Returns the number of markers removed. */
-  def sweepLedger(ledger: java.io.File, belowBatchId: Long): Int = {
+  def sweepLedger(ledger: File, belowBatchId: Long): Int = {
     def idOf(name: String): Option[Long] =
       if (name.startsWith("b") && name.length > 1 &&
           name.tail.forall(_.isDigit))

@@ -20,6 +20,36 @@ class ExactlyOnceSpec extends SparkSpec {
   private lazy val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     .select(col("doc_id"), col("text"))
 
+  private def bandsOf(d: org.apache.spark.sql.DataFrame) =
+    Dedup.bandedSignatures(d, "doc_id", "text", 3, 16, 4)
+      .withColumn("sigbucket", pmod(hash(col("band"), col("bandsig")), lit(4)))
+
+  /** Spark jobs `body` runs on this thread: jobs carrying the probe's
+    * local property, counted once the closing bracket job's start
+    * event has come off the (asynchronous) listener bus — events
+    * arrive in submission order, so every earlier job start has too. */
+  private def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("eo.probe")))
+          .foreach(tags.add)
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setLocalProperty("eo.probe", "body")
+      try body finally sc.setLocalProperty("eo.probe", null)
+      sc.setLocalProperty("eo.probe", "close")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("eo.probe", null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!tags.contains("close") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(tags.contains("close"), "the closing bracket job never reached the listener")
+      tags.toArray.count(_ == "body")
+    } finally sc.removeSparkListener(l)
+  }
+
   test("partKey/promotedName: task + bucket + file counter parsed, non-data files skipped, bucket suffix survives") {
     assert(ExactlyOnce.partKey(
       "part-00003-0aa6256b-9ea6-4c07-8d5f-ab.c000.snappy.parquet")
@@ -38,6 +68,11 @@ class ExactlyOnceSpec extends SparkSpec {
     assert(ExactlyOnce.partKey(
       "part-00012-0aa6256b-9ea6-4c07-8d5f-ab_00007.c002.snappy.parquet")
       == Some((12, Some("00007"), Some("c002"))))
+    // a write uuid whose last segment reads `c` + digits is not the
+    // counter: the promoted name must not depend on the run's uuid
+    assert(ExactlyOnce.partKey(
+      "part-00000-0aa6256b-9ea6-4c07-8d5f-c94186886476.c000.snappy.parquet")
+      == Some((0, None, Some("c000"))))
     assert(ExactlyOnce.partKey("_SUCCESS").isEmpty)
     assert(ExactlyOnce.partKey(".part-00003.crc").isEmpty)
     assert(ExactlyOnce.promotedName(5L, 3, None, Some("c000"))
@@ -595,5 +630,94 @@ class ExactlyOnceSpec extends SparkSpec {
       .groupBy(col("part").cast("int").as("p")).agg(count(lit(1)).as("n"))
       .as[(Int, Long)].collect().toMap
     assert(meta == byPart, "cell-name counts must equal per-part node counts")
+  }
+
+  test("a committed batch's leftover stage dir goes with its re-delivery: the retired ledger never wedges maintenance") {
+    // crash between the marker commit and the stage delete: the
+    // re-delivery is skipped by the marker, the drain's watermark
+    // sweep then retires the marker — a stage dir still standing
+    // would now read as an UNCOMMITTED append and every later
+    // compaction or rebuild would refuse, with no re-delivery left to
+    // clear it
+    def crashAfterMarker(root: String, ledger: java.io.File)(deliver: => Unit): Unit = {
+      deliver
+      ExactlyOnce.stageDir(new java.io.File(root), 5L).mkdirs()
+      deliver // the re-delivery, skipped by its marker
+      assert(!ExactlyOnce.stageDir(new java.io.File(root), 5L).exists(),
+        s"the committed batch's re-delivery must delete its stage dir under $root")
+      ExactlyOnce.sweepLedger(ledger, 6L)
+    }
+    def noStage(root: String) =
+      assert(ExactlyOnce.stages(new java.io.File(root)).isEmpty, s"stage dir left under $root")
+
+    // IVF → compactIndex
+    val delta = emb.filter(col("vec_id") < 20)
+    val ivf = java.nio.file.Files.createTempDirectory("eo_wedge_ivf").toString
+    val cents = IVF.centroids(emb.filter(col("vec_id") >= 50), "vec_id", "v", 4).localCheckpoint()
+    IVF.writeIndexFrom(cents, IVF.assign(emb.filter(col("vec_id") >= 50), "vec_id", "v", cents), ivf)
+    crashAfterMarker(ivf, IVF.appendLedger(ivf)) {
+      IVF.appendToIndexIdempotent(spark, ivf, delta, "vec_id", "v", 5L)
+    }
+    IVF.compactIndex(spark, ivf)
+    noStage(ivf)
+
+    // SQ8 → the requant rebuild
+    val sq = java.nio.file.Files.createTempDirectory("eo_wedge_sq").toString
+    SQ.writeIndex(emb.filter(col("vec_id") >= 50), "vec_id", "v", 4, sq)
+    crashAfterMarker(sq, IVF.appendLedger(sq)) {
+      SQ.appendToIndexIdempotent(spark, sq, delta, "vec_id", "v", 5L)
+    }
+    SQ.rebuildIndex(emb, "vec_id", "v", 4, sq)
+    noStage(sq)
+
+    // register → compactRegister
+    val reg = java.nio.file.Files.createTempDirectory("eo_wedge_reg").toString + "/reg"
+    Dedup.writeRegister(bandsOf(docs.filter(col("doc_id") >= 3)), reg, 4)
+    val bands = bandsOf(docs.filter(col("doc_id") < 3)).localCheckpoint()
+    crashAfterMarker(reg, Generations.ledger(reg)) {
+      assert(Dedup.appendToRegisterIdempotent(spark, reg, bands, 4, 5L) == reg)
+    }
+    noStage(Dedup.compactRegister(spark, reg, 4))
+    noStage(reg)
+
+    // postings → compactPostings
+    val tbl = "eo_wedge_postings_spec"
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    val post = java.nio.file.Files.createTempDirectory("eo_wedge_post").toString + "/t"
+    Queries.writePostings(spark, docs.filter(col("doc_id") >= 3), tbl, post, "overwrite")
+    val batch = docs.filter(col("doc_id") < 3).localCheckpoint()
+    crashAfterMarker(post, Generations.ledger(post)) {
+      Queries.writePostingsIdempotent(spark, batch, tbl, 5L)
+    }
+    noStage(Queries.compactPostings(spark, tbl, post))
+  }
+
+  test("a committed batch re-delivered runs no Spark job, in every stage-and-promote family") {
+    val delta = emb.filter(col("vec_id") < 20).localCheckpoint()
+    val ivf = java.nio.file.Files.createTempDirectory("eo_nojob_ivf").toString
+    val cents = IVF.centroids(emb.filter(col("vec_id") >= 50), "vec_id", "v", 4).localCheckpoint()
+    IVF.writeIndexFrom(cents, IVF.assign(emb.filter(col("vec_id") >= 50), "vec_id", "v", cents), ivf)
+    assert(jobsIn(IVF.appendToIndexIdempotent(spark, ivf, delta, "vec_id", "v", 1L)) > 0,
+      "the probe must see the first delivery's jobs")
+    assert(jobsIn(IVF.appendToIndexIdempotent(spark, ivf, delta, "vec_id", "v", 1L)) == 0)
+
+    val sq = java.nio.file.Files.createTempDirectory("eo_nojob_sq").toString
+    SQ.writeIndex(emb.filter(col("vec_id") >= 50), "vec_id", "v", 4, sq)
+    assert(jobsIn(SQ.appendToIndexIdempotent(spark, sq, delta, "vec_id", "v", 1L)) > 0)
+    assert(jobsIn(SQ.appendToIndexIdempotent(spark, sq, delta, "vec_id", "v", 1L)) == 0)
+
+    val reg = java.nio.file.Files.createTempDirectory("eo_nojob_reg").toString + "/reg"
+    Dedup.writeRegister(bandsOf(docs.filter(col("doc_id") >= 3)), reg, 4)
+    val bands = bandsOf(docs.filter(col("doc_id") < 3)).localCheckpoint()
+    assert(jobsIn(Dedup.appendToRegisterIdempotent(spark, reg, bands, 4, 1L)) > 0)
+    assert(jobsIn(Dedup.appendToRegisterIdempotent(spark, reg, bands, 4, 1L)) == 0)
+
+    val tbl = "eo_nojob_postings_spec"
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    val post = java.nio.file.Files.createTempDirectory("eo_nojob_post").toString + "/t"
+    Queries.writePostings(spark, docs.filter(col("doc_id") >= 3), tbl, post, "overwrite")
+    val batch = docs.filter(col("doc_id") < 3).localCheckpoint()
+    assert(jobsIn(Queries.writePostingsIdempotent(spark, batch, tbl, 1L)) > 0)
+    assert(jobsIn(Queries.writePostingsIdempotent(spark, batch, tbl, 1L)) == 0)
   }
 }

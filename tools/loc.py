@@ -14,12 +14,14 @@ import os
 import sys
 
 
-def code_lines(text: str) -> int:
-    """Count lines holding code outside comments and blank space."""
-    n = 0
+def _scan(text: str):
+    """Yield, per line, the line's code with comments removed (string
+    and char literals kept verbatim) and whether the line starts
+    inside a triple-quoted string."""
     in_block = False
     in_triple = False
     for line in text.split("\n"):
+        in_string = in_triple
         kept = []
         i = 0
         while i < len(line):
@@ -33,16 +35,17 @@ def code_lines(text: str) -> int:
                 continue
             if in_triple:
                 end = line.find('"""', i)
-                kept.append("s")
                 if end < 0:
+                    kept.append(line[i:])
                     i = len(line)
                 else:
+                    kept.append(line[i:end + 3])
                     in_triple = False
                     i = end + 3
                 continue
             if line.startswith('"""', i):
                 in_triple = True
-                kept.append("s")
+                kept.append('"""')
                 i += 3
                 continue
             c = line[i]
@@ -53,7 +56,7 @@ def code_lines(text: str) -> int:
                 j = i + 1
                 while j < len(line) and line[j] != q:
                     j += 2 if line[j] == "\\" else 1
-                kept.append("s")
+                kept.append(line[i:j + 1])
                 i = j + 1
                 continue
             if line.startswith("/*", i):
@@ -64,9 +67,20 @@ def code_lines(text: str) -> int:
                 break
             kept.append(c)
             i += 1
-        if "".join(kept).strip():
-            n += 1
-    return n
+        yield "".join(kept), in_string
+
+
+def code_only(text: str) -> list:
+    """Each line of `text` with its comments removed; string literals
+    stay, so a caller can search them."""
+    return [kept for kept, _ in _scan(text)]
+
+
+def code_lines(text: str) -> int:
+    """Count lines holding code outside comments and blank space (a
+    line inside a triple-quoted string always counts)."""
+    return sum(1 for kept, in_string in _scan(text)
+               if in_string or kept.strip())
 
 
 def files_of(paths):
