@@ -7456,16 +7456,11 @@ $sqRows)
         col("embedding").cast("array<double>").as("v"))
     val queries = e.filter(col("vec_id") % 10 === 0 && col("vec_id") < 50)
       .select(col("vec_id").as("qid"), col("label").as("qlabel"), col("v").as("qv"))
-    e.filter(col("vec_id") % 10 =!= 0)
-      .crossJoin(broadcast(queries))
-      .filter(col("label") =!= col("qlabel"))
-      .select(col("qid"), col("vec_id"), dot(col("v"), col("qv")).as("score"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graftnative.TopKAggregate
-        .topK(col("vec_id").cast("long"), col("score"), 10).as("__tk"))
-      .select(col("qid"), explode(col("__tk")).as("__e"))
-      .select(col("qid"), col("__e.id").as("vec_id"), col("__e.rank").as("rank"),
-        round(col("__e.score"), 6).as("score"))
+    graft.search.Search.rankTopPerQuery(e.filter(col("vec_id") % 10 =!= 0)
+        .crossJoin(broadcast(queries))
+        .filter(col("label") =!= col("qlabel"))
+        .select(col("qid"), col("vec_id"), dot(col("v"), col("qv")).as("score")),
+        "vec_id", 10)
       .orderBy("qid", "rank")
   }
 
@@ -7516,16 +7511,11 @@ $sqRows)
       .withColumn("__r", row_number().over(w))
       .filter(col("__r") <= ivfProbe)
       .select(col("qid"), col("qlabel"), col("qv"), col("cid"))
-    s.read.parquet(graft.search.IVF.listsPath(path))
-      .join(broadcast(probes), "cid") // partition-pruned list scan
-      .filter(col("label") =!= col("qlabel")) // exclusion rides the scan
-      .select(col("qid"), col("vec_id"), dot(col("v"), col("qv")).as("score"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graftnative.TopKAggregate
-        .topK(col("vec_id").cast("long"), col("score"), 10).as("__tk"))
-      .select(col("qid"), explode(col("__tk")).as("__e"))
-      .select(col("qid"), col("__e.id").as("vec_id"), col("__e.rank").as("rank"),
-        round(col("__e.score"), 6).as("score"))
+    graft.search.Search.rankTopPerQuery(s.read.parquet(graft.search.IVF.listsPath(path))
+        .join(broadcast(probes), "cid") // partition-pruned list scan
+        .filter(col("label") =!= col("qlabel")) // exclusion rides the scan
+        .select(col("qid"), col("vec_id"), dot(col("v"), col("qv")).as("score")),
+        "vec_id", 10)
       .orderBy("qid", "rank")
   }
 

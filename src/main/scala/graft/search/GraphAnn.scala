@@ -241,19 +241,9 @@ object GraphAnn {
     beam.dequeueAll.toArray.sortBy { case (i, s) => (-s, i) }
   }
 
-  /** Final ranking shared by the in-memory and at-rest paths: sort
-    * the candidate union by (score desc, id asc), keep k, emit dense
-    * ranks and 6-dp scores (the Search.topK output contract). */
-  private def rankTopK(cands: DataFrame, idCol: String, k: Int): DataFrame =
-    cands
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-      .withColumn("rank", row_number().over(
-        Search.wAll.orderBy(col("score").desc, col(idCol).asc)).cast("long"))
-      .select(col(idCol), col("rank"), round(col("score"), 6).as("score"))
-
   /** Graph-ANN top-k: build/search one NSW graph per partition,
-    * exact-re-score the per-partition beams, global bounded top-k.
+    * exact-re-score the per-partition beams, global top-k through
+    * [[Search.rankTop]].
     * `query` must be a ONE-ROW frame (Search.topK contract). Knobs:
     * `m` = max neighbors per node (graph degree), `ef` = search beam
     * width — the efSearch dial of the reference's HNSW config.
@@ -305,7 +295,7 @@ object GraphAnn {
         }
       }
       .toDF(idCol, "score")
-    rankTopK(cands, idCol, k)
+    Search.rankTop(cands, idCol, k)
   }
 
   // ------------------------------------------------------------------
@@ -382,28 +372,16 @@ object GraphAnn {
       .flatMap(f => scala.util.Try(f.getName.stripPrefix("p").toInt).toOption)
       .sorted
 
-  /** The generation's valid part ids — its ROUTING TABLE's `part`
-    * column (NOT 0 until the count: Lloyd refinement drops cells
-    * whose members all migrate, so part ids can be non-contiguous).
-    * A parts-sized collect — full-scan and maintenance callers only;
-    * the serving path passes its probed parts explicitly. */
-  private val paramsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), (Int, Int, Int, Int)]
-
   /** The generation's one-row params table as (parts, m, efC,
-    * replicas) — memoized under the same content-fingerprint rule as
-    * [[partIdsOf]]: every append/serve/maintenance entry point reads
-    * it, and each uncached read is two driver jobs (footer + head)
-    * over an immutable one-row table. Pre-replication params lack the
-    * `replicas` column — those indexes were built at the then-default
-    * 2× assignment (same back-compat rule as partBeams' routing
-    * read). */
-  private def paramsOf(spark: SparkSession, root: String): (Int, Int, Int, Int) = {
-    val fp = graft.Memo.dirFingerprint(s"$root/params")
-    paramsCache.keys
-      .filter(k => k._1 == spark && k._2 == root && k._3 != fp)
-      .foreach(paramsCache.remove)
-    paramsCache.getOrElseUpdate((spark, root, fp), {
+    * replicas) — memoized per (session, params-content) through
+    * [[graft.Memo.cachedValue]]: every append/serve/maintenance entry
+    * point reads it, and each uncached read is two driver jobs
+    * (footer + head) over an immutable one-row table. Pre-replication
+    * params lack the `replicas` column — those indexes were built at
+    * the then-default 2× assignment (same back-compat rule as
+    * partBeams' routing read). */
+  private def paramsOf(spark: SparkSession, root: String): (Int, Int, Int, Int) =
+    graft.Memo.cachedValue(spark, s"$root/params", "graph_params") {
       val paramsDf = spark.read.parquet(s"$root/params")
       paramsDf.select(col("parts").cast("int"),
           col("m").cast("int"), col("efC").cast("int"),
@@ -412,27 +390,24 @@ object GraphAnn {
         .as[(Int, Int, Int, Int)](
           org.apache.spark.sql.Encoders.product[(Int, Int, Int, Int)])
         .head()
-    })
-  }
+    }
 
-  private val partIdsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), Seq[Int]]
-
-  private def partIdsOf(spark: SparkSession, genRoot: String): Seq[Int] = {
-    import spark.implicits._
-    // maintenance/gate paths re-read the same generation's routing
-    // several times per lifecycle row; the table is immutable once
-    // written, so memoize the collected ids under the same
-    // content-fingerprint invalidation rule as graft.Memo (a deleted
-    // and rebuilt index at the same path re-keys and re-reads)
-    val fp = graft.Memo.dirFingerprint(s"$genRoot/routing")
-    partIdsCache.keys
-      .filter(k => k._1 == spark && k._2 == genRoot && k._3 != fp)
-      .foreach(partIdsCache.remove)
-    partIdsCache.getOrElseUpdate((spark, genRoot, fp),
+  /** The generation's valid part ids — its ROUTING TABLE's `part`
+    * column (NOT 0 until the count: Lloyd refinement drops cells
+    * whose members all migrate, so part ids can be non-contiguous).
+    * A parts-sized collect — full-scan and maintenance callers only;
+    * the serving path passes its probed parts explicitly.
+    * Maintenance/gate paths re-read the same generation's routing
+    * several times per lifecycle row, so the collected ids are
+    * memoized per (session, routing-content) like [[paramsOf]] (a
+    * deleted and rebuilt index at the same path re-keys and
+    * re-reads). */
+  private def partIdsOf(spark: SparkSession, genRoot: String): Seq[Int] =
+    graft.Memo.cachedValue(spark, s"$genRoot/routing", "graph_part_ids") {
+      import spark.implicits._
       spark.read.parquet(s"$genRoot/routing")
-        .select(col("part").cast("int")).as[Int].collect().toSeq.sorted)
-  }
+        .select(col("part").cast("int")).as[Int].collect().toSeq.sorted
+    }
 
   /** The generation's cell visibility version (its `CELLS` file). */
   private[graft] def cellsVersion(genRoot: String): Int = {
@@ -1980,8 +1955,8 @@ object GraphAnn {
                    maxTombRows: Long): Boolean =
     tombstoneRows(spark, path) > maxTombRows
 
-  /** Beam-search a persisted graph index for ONE query (Search.topK
-    * output contract): per-query cost is the routed index scan +
+  /** Beam-search a persisted graph index for ONE query, ranked by
+    * [[Search.rankTop]]: per-query cost is the routed index scan +
     * beams + the O(probeParts × ef) exact-score merge. `probeParts`
     * is the nprobe dial — cells to route to. The default is
     * [[AutoProbe]]: the scale-aware probe count derived from the
@@ -2010,7 +1985,7 @@ object GraphAnn {
     val root = pinnedRoot(path, gen)
     val qv = query.select(col(queryVecCol).cast("array<double>"))
       .as[Seq[Double]].head().toArray
-    rankTopK(
+    Search.rankTop(
       partBeams(spark, path, root, Array((0L, qv)), ef, probeParts)
         .select(col("id").as(idCol), col("score")),
       idCol, k)
@@ -2030,9 +2005,8 @@ object GraphAnn {
 
   /** Multi-query search over a persisted graph index: ONE index scan
     * serves every query (the multiTopK shape — the query set is the
-    * driver-sized side by contract), per-query top-k through the
-    * bounded-heap aggregate so the exchange carries
-    * O(queries × k) rows. Output (qid, id, rank, score). */
+    * driver-sized side by contract), ranked by
+    * [[Search.rankTopPerQuery]]. */
   def searchIndexMulti(spark: SparkSession, path: String, idCol: String,
                        queries: DataFrame, qidCol: String, qvecCol: String,
                        k: Int, ef: Int, probeParts: Int = AutoProbe): DataFrame =
@@ -2053,13 +2027,8 @@ object GraphAnn {
       .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
       .as[(Long, Seq[Double])].collect()
       .map { case (qid, v) => (qid, v.toArray) }
-    partBeams(spark, path, root, qvs, ef, probeParts)
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graftnative.TopKAggregate
-        .topK(col("id"), col("score"), k).as("__tk"))
-      .select(col("qid"), explode(col("__tk")).as("__e"))
-      .select(col("qid"), col("__e.id").as(idCol), col("__e.rank").as("rank"),
-        round(col("__e.score"), 6).as("score"))
+    Search.rankTopPerQuery(partBeams(spark, path, root, qvs, ef, probeParts), "id", k)
+      .withColumnRenamed("id", idCol)
   }
 }
 

@@ -5,7 +5,6 @@ import graft.functions.VectorF._
 import graft.ingest.Ingest
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.graftnative.QueryBatch
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF-style approximate nearest-neighbor: a coarse quantizer
@@ -563,9 +562,17 @@ object IVF {
   def searchIndexPinned(spark: org.apache.spark.sql.SparkSession, path: String,
                         gen: (String, String), idCol: String, vecCol: String,
                         query: DataFrame, queryVecCol: String,
-                        k: Int, nprobe: Int): DataFrame =
-    searchResolved(spark, s"$path/${gen._1}", s"$path/${gen._2}",
+                        k: Int, nprobe: Int): DataFrame = {
+    // every serve hides the generation's tombstoned ids BEFORE the
+    // top-k (a request-sized broadcast anti-join; no sidecar → free):
+    // a deleted row must never be served, whatever the at-rest bytes
+    // still hold between delete and compaction
+    val listsDir = s"$path/${gen._1}"
+    ivfTopKAssigned(
+      Tombstones.hide(spark, Tombstones.ofLists(listsDir), spark.read.parquet(listsDir)),
+      spark.read.parquet(s"$path/${gen._2}"),
       idCol, vecCol, query, queryVecCol, k, nprobe)
+  }
 
   /** COMPACTION — the last quarter of the index-maintenance
     * lifecycle (build → append → refine → compact): every append
@@ -709,45 +716,15 @@ object IVF {
   /** Search a persisted IVF index: rank centroids for the query,
     * filter the lists table to the nprobe best cids (a pure partition
     * filter — see the PartitionFilters entry in the scan plan), exact
-    * re-rank inside. */
+    * re-rank inside — [[searchIndexPinned]] on the live generation. */
   def searchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                   idCol: String, vecCol: String,
                   query: DataFrame, queryVecCol: String,
-                  k: Int, nprobe: Int): DataFrame = {
+                  k: Int, nprobe: Int): DataFrame =
     // one pointer read for both names — listsPath + centroidsPath
     // would read CURRENT twice and could straddle a concurrent flip
-    val (ln, cn) = generationPair(path)
-    searchResolved(spark, s"$path/$ln", s"$path/$cn",
+    searchIndexPinned(spark, path, generationPair(path),
       idCol, vecCol, query, queryVecCol, k, nprobe)
-  }
-
-  private def searchResolved(spark: org.apache.spark.sql.SparkSession,
-                             listsDir: String, centsDir: String,
-                             idCol: String, vecCol: String,
-                             query: DataFrame, queryVecCol: String,
-                             k: Int, nprobe: Int): DataFrame = {
-    val cents = spark.read.parquet(centsDir)
-    val probes = query.select(col(queryVecCol).as("__qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("__cs", dot(col("__qv"), col("cvec")))
-      .orderBy(col("__cs").desc, col("cid").asc)
-      .limit(nprobe)
-      .select(col("cid"), col("__qv"))
-    // every serve hides the generation's tombstoned ids BEFORE the
-    // top-k (a request-sized broadcast anti-join; no sidecar → free):
-    // a deleted row must never be served, whatever the at-rest bytes
-    // still hold between delete and compaction
-    val lists = Tombstones.hide(spark, Tombstones.ofLists(listsDir),
-      spark.read.parquet(listsDir))
-    val scored = lists
-      .join(broadcast(probes), "cid") // becomes a partition filter on cid
-      .select(col(idCol), dot(col(vecCol), col("__qv")).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-    scored.withColumn("rank",
-        row_number().over(Search.wAll.orderBy(col("score").desc, col(idCol).asc)).cast("long"))
-      .select(col(idCol), col("rank"), round(col("score"), 6).as("score"))
-  }
 
   /** Multi-query IVF search over an in-memory corpus: trains the
     * centroids, assigns the corpus, then serves the batch as
@@ -844,26 +821,30 @@ object IVF {
     Search.batchTopK(lists, idCol, vecCol, batch.routed(pairs), Some(col("cid")), k)
   }
 
-  /** Single-query IVF search over a PRE-ASSIGNED corpus (the memoized
-    * or persisted index): per-query work is centroid ranking + the
-    * probed-list scan, never a fresh assignment. */
-  def ivfTopKAssigned(assigned: DataFrame, cents: DataFrame,
-                      idCol: String, vecCol: String,
-                      query: DataFrame, queryVecCol: String,
-                      k: Int, nprobe: Int): DataFrame = {
-    val probes = query.select(col(queryVecCol).as("__qv"))
+  /** The single-query centroid probe every IVF-family serve shares
+    * (IVF, IVF+PQ, SQ8): rank the centroid table (cid, cvec) against
+    * the one-row `query`'s vector by (score desc, cid asc) and keep
+    * the `nprobe` best cells, as (cid, __qv) rows — a request-sized
+    * table that the serve broadcast-joins onto its cid-keyed lists
+    * (a partition filter over a persisted index). */
+  private[graft] def probeCells(query: DataFrame, queryVecCol: String,
+                                cents: DataFrame, nprobe: Int): DataFrame =
+    query.select(col(queryVecCol).as("__qv"))
       .crossJoin(broadcast(cents))
       .withColumn("__cs", dot(col("__qv"), col("cvec")))
       .orderBy(col("__cs").desc, col("cid").asc)
       .limit(nprobe)
       .select(col("cid"), col("__qv"))
-    val scored = assigned
-      .join(broadcast(probes), "cid") // list-pruned scan
-      .select(col(idCol), dot(col(vecCol), col("__qv")).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-    scored.withColumn("rank",
-        row_number().over(Search.wAll.orderBy(col("score").desc, col(idCol).asc)).cast("long"))
-      .select(col(idCol), col("rank"), round(col("score"), 6).as("score"))
-  }
+
+  /** Single-query IVF search over a PRE-ASSIGNED corpus (the memoized
+    * or persisted index): per-query work is [[probeCells]] + the
+    * probed-list scan, never a fresh assignment, ranked by
+    * [[Search.rankTop]]. */
+  def ivfTopKAssigned(assigned: DataFrame, cents: DataFrame,
+                      idCol: String, vecCol: String,
+                      query: DataFrame, queryVecCol: String,
+                      k: Int, nprobe: Int): DataFrame =
+    Search.rankTop(assigned
+      .join(broadcast(probeCells(query, queryVecCol, cents, nprobe)), "cid") // list-pruned scan
+      .select(col(idCol), dot(col(vecCol), col("__qv")).as("score")), idCol, k)
 }

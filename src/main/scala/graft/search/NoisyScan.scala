@@ -32,21 +32,15 @@ object NoisyScan {
       .cast("double") / lit(1000003.0) * eps - lit(eps / 2)
 
   /** Noisy exact scan: dot product + per-row deterministic ε-noise,
-    * top-k with id tiebreak. Same plan shape as Search.topK. */
+    * ranked by [[Search.rankTop]]. Same plan shape as Search.topK. */
   def noisyTopK(docs: DataFrame, idCol: String, vecCol: String,
                 query: DataFrame, queryVecCol: String, k: Int,
-                eps: Double, seed: Long): DataFrame = {
-    val scored = docs
+                eps: Double, seed: Long): DataFrame =
+    Search.rankTop(docs
       .crossJoin(broadcast(query.select(col(queryVecCol).as("__qv"))))
       .select(col(idCol),
-        (dot(col(vecCol), col("__qv")) + scoreNoise(col(idCol), eps, seed)).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-    scored.withColumn("rank",
-        row_number().over(Search.wAll
-          .orderBy(col("score").desc, col(idCol).asc)).cast("long"))
-      .select(col(idCol), col("rank"), round(col("score"), 6).as("score"))
-  }
+        (dot(col(vecCol), col("__qv")) + scoreNoise(col(idCol), eps, seed)).as("score")),
+      idCol, k)
 
   /** M8: overlap fraction between two top-k id sets (the reference's
     * FHE-vs-plaintext sanity metric), as a single-row aggregate. */

@@ -36,8 +36,8 @@ object PQ {
     * subspace), reconstruct, and rank by dot(query, reconstruction).
     * The reconstruction is ONE codegen'd pass per row
     * ([[org.apache.spark.sql.graftnative.PQReconstruct]]) — no row
-    * inflation, no exchange; the plan is scan → project → top-k, the
-    * same shape as Search.topK.
+    * inflation, no exchange; the plan is scan → project →
+    * [[Search.rankTop]], the same shape as Search.topK.
     *
     * `query` must be a ONE-ROW frame (same contract as Search.topK —
     * it is broadcast and cross-joined, so a multi-row frame would
@@ -81,11 +81,9 @@ object PQ {
   /** Multi-query ADC: the corpus is quantized and reconstructed ONCE
     * (reconstruction is query-independent), every query scores
     * against the same reconstructed scan (broadcast query set, the
-    * multiTopK contract), and per-query top-k runs through the
-    * bounded-heap aggregate so the exchange carries O(queries × k)
-    * rows. The q48 recall surface probes this at several (m, K)
-    * codebook knobs over the shared memoized artifacts. Output
-    * (qid, id, rank, score). */
+    * multiTopK contract), ranked by [[Search.rankTopPerQuery]]. The
+    * q48 recall surface probes this at several (m, K) codebook knobs
+    * over the shared memoized artifacts. */
   def adcMultiTopK(docs: DataFrame, idCol: String, vecCol: String,
                    cents: DataFrame,
                    queries: DataFrame, qidCol: String, qvecCol: String,
@@ -96,19 +94,14 @@ object PQ {
     val packed = cents.agg(
       transform(array_sort(collect_list(struct(col("cid"), col("cvec")))),
         c => c.getField("cvec").cast("array<double>")).as("__cb"))
-    docs
+    Search.rankTopPerQuery(docs
       .crossJoin(broadcast(packed))
       .select(col(idCol), org.apache.spark.sql.graftnative.NativeExpressions
         .pqReconstructNative(col(vecCol), col("__cb"), m).as("__xhat"))
       .crossJoin(broadcast(queries.select(col(qidCol).as("qid"),
         col(qvecCol).as("__qv"))))
-      .select(col("qid"), col(idCol), dot(col("__qv"), col("__xhat")).as("score"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graftnative.TopKAggregate
-        .topK(col(idCol).cast("long"), col("score"), k).as("__tk"))
-      .select(col("qid"), explode(col("__tk")).as("__e"))
-      .select(col("qid"), col("__e.id").as(idCol), col("__e.rank").as("rank"),
-        round(col("__e.score"), 6).as("score"))
+      .select(col("qid"), col(idCol), dot(col("__qv"), col("__xhat")).as("score")),
+      idCol, k)
   }
 
   /** IVF+PQ — the production ANN layout (FAISS's IndexIVFPQ, recast
@@ -128,27 +121,16 @@ object PQ {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     require(m >= 1 && dim % m == 0,
       s"dim ($dim) must be divisible by the number of subspaces ($m)")
-    val probes = query.select(col(queryVecCol).as("__qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("__cs", dot(col("__qv"), col("cvec")))
-      .orderBy(col("__cs").desc, col("cid").asc)
-      .limit(nprobe)
-      .select(col("cid"), col("__qv"))
+    val probes = IVF.probeCells(query, queryVecCol, cents, nprobe)
     val packed = codebook.agg(
       transform(array_sort(collect_list(struct(col("cid"), col("cvec")))),
         c => c.getField("cvec").cast("array<double>")).as("__cb"))
-    val scored = assigned
+    Search.rankTop(assigned
       .join(broadcast(probes), "cid")
       .crossJoin(broadcast(packed))
       .select(col(idCol), dot(col("__qv"),
         org.apache.spark.sql.graftnative.NativeExpressions
-          .pqReconstructNative(col(vecCol), col("__cb"), m)).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-    scored
-      .withColumn("rank", row_number().over(
-        Search.wAll.orderBy(col("score").desc, col(idCol).asc)).cast("long"))
-      .select(col(idCol), col("rank"), round(col("score"), 6).as("score"))
+          .pqReconstructNative(col(vecCol), col("__cb"), m)).as("score")), idCol, k)
   }
 
   private def adcTopKImpl(docs: DataFrame, idCol: String, vecCol: String,
@@ -168,16 +150,10 @@ object PQ {
     val packed = cents.agg(
       transform(array_sort(collect_list(struct(col("cid"), col("cvec")))),
         c => c.getField("cvec").cast("array<double>")).as("__cb"))
-    val scored = docs
+    Search.rankTop(docs
       .crossJoin(broadcast(packed))
       .select(col(idCol), reconstruct(col(vecCol), col("__cb")).as("__xhat"))
       .crossJoin(broadcast(qdf))
-      .select(col(idCol), dot(col("__qv"), col("__xhat")).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-    scored
-      .withColumn("rank", row_number().over(
-        Search.wAll.orderBy(col("score").desc, col(idCol).asc)).cast("long"))
-      .select(col(idCol), col("rank"), round(col("score"), 6).as("score"))
+      .select(col(idCol), dot(col("__qv"), col("__xhat")).as("score")), idCol, k)
   }
 }

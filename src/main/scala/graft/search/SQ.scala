@@ -285,8 +285,8 @@ object SQ {
     * exact re-score from the full-precision vectors (an
     * O(queries × rerank)-row broadcast join), per-query top-k.
     * `rerank = k` measures raw ADC ordering; `rerank > k` measures
-    * how much exact margin repairs. Output matches
-    * [[Search.multiTopK]]: (qid, idCol, rank, score). */
+    * how much exact margin repairs. Ranked by
+    * [[Search.rankTopPerQuery]]. */
   def sqMultiTopK(docs: DataFrame, idCol: String, vecCol: String,
                   queries: DataFrame, qidCol: String, qvecCol: String,
                   k: Int, rerank: Int): DataFrame = {
@@ -314,16 +314,11 @@ object SQ {
     val ids = cand.select(col("id")).distinct()
       .as(org.apache.spark.sql.Encoders.scalaLong).collect().toSeq
     val candQ = cand.join(qs, "qid")
-    docs.select(col(idCol).cast("long").as("id"), col(vecCol).as("__v"))
-      .filter(col("id").isin(ids: _*))
-      .join(broadcast(candQ), "id")
-      .select(col("qid"), col("id"), dot(col("__v"), col("__qv")).as("score"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graftnative.TopKAggregate
-        .topK(col("id"), col("score"), k).as("__tk"))
-      .select(col("qid"), explode(col("__tk")).as("__e"))
-      .select(col("qid"), col("__e.id").as(idCol), col("__e.rank").as("rank"),
-        round(col("__e.score"), 6).as("score"))
+    Search.rankTopPerQuery(docs.select(col(idCol).cast("long").as("id"), col(vecCol).as("__v"))
+        .filter(col("id").isin(ids: _*))
+        .join(broadcast(candQ), "id")
+        .select(col("qid"), col("id"), dot(col("__v"), col("__qv")).as("score")), "id", k)
+      .withColumnRenamed("id", idCol)
   }
 
   /** The candidate stage of [[searchIndex]]: rank centroids for the
@@ -348,12 +343,8 @@ object SQ {
                               rerank: Int): DataFrame = {
     val cents = spark.read.parquet(s"$path/centroids")
     val ba = boundsArrays(spark.read.parquet(s"$path/bounds"))
-    val probes = spark.range(1).select(typedLit(qv).as("__qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("__cs", dot(col("__qv"), col("cvec")))
-      .orderBy(col("__cs").desc, col("cid").asc)
-      .limit(nprobe)
-      .select(col("cid"), col("__qv"))
+    val probes = IVF.probeCells(spark.range(1).select(typedLit(qv).as("__qv")), "__qv",
+      cents, nprobe)
     // tombstoned ids are hidden from the candidate scan (IVF's delete
     // sidecar — shared layout, shared hide), so a deleted code can
     // never reach the re-rank between delete and compaction
@@ -378,7 +369,7 @@ object SQ {
     * per-query top-`rerank` candidates come off the bounded heap, and
     * ONE exact point-fetch (the union of all queries' candidate ids
     * as an `In` predicate on the source scan) re-scores them
-    * full-precision before the final per-query top-k. The exchange
+    * full-precision before [[Search.rankTopPerQuery]]. The exchange
     * carries O(queries × rerank) rows; the fetch reads
     * O(queries × rerank) source rows. */
   def searchIndexMulti(spark: SparkSession, path: String,
@@ -417,16 +408,11 @@ object SQ {
       .as(org.apache.spark.sql.Encoders.scalaLong).collect().toSeq
     val qs = queries.select(col(qidCol).as("qid"), col(qvecCol).as("__qv"))
     val candQ = cand.join(qs, "qid")
-    source.select(col(idCol).cast("long").as("id"), col(vecCol).as("__v"))
-      .filter(col("id").isin(ids: _*)) // pushed: point fetch by id
-      .join(broadcast(candQ), "id")
-      .select(col("qid"), col("id"), dot(col("__v"), col("__qv")).as("score"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graftnative.TopKAggregate
-        .topK(col("id"), col("score"), k).as("__tk"))
-      .select(col("qid"), explode(col("__tk")).as("__e"))
-      .select(col("qid"), col("__e.id").as(idCol), col("__e.rank").as("rank"),
-        round(col("__e.score"), 6).as("score"))
+    Search.rankTopPerQuery(source.select(col(idCol).cast("long").as("id"), col(vecCol).as("__v"))
+        .filter(col("id").isin(ids: _*)) // pushed: point fetch by id
+        .join(broadcast(candQ), "id")
+        .select(col("qid"), col("id"), dot(col("__v"), col("__qv")).as("score")), "id", k)
+      .withColumnRenamed("id", idCol)
   }
 
   /** Search the persisted SQ8 index: [[adcCandidates]] over the
@@ -436,14 +422,14 @@ object SQ {
     * MMR-candidate discipline — and re-enter as an `In` predicate
     * PUSHED INTO the source scan: the re-rank is a point fetch
     * (parquet min/max row-group pruning on the id column), not a
-    * corpus scan wearing a broadcast join. Output contract matches
-    * [[IVF.searchIndex]]: (idCol, rank, score) with score the exact
-    * dot rounded to 6. */
+    * corpus scan wearing a broadcast join, ranked by
+    * [[Search.rankTop]] — [[searchIndexPinned]] on the live
+    * generation. */
   def searchIndex(spark: SparkSession, path: String,
                   source: DataFrame, idCol: String, vecCol: String,
                   query: DataFrame, queryVecCol: String,
                   k: Int, nprobe: Int, rerank: Int): DataFrame =
-    searchAt(spark, path, IVF.listsPath(path), source, idCol, vecCol,
+    searchIndexPinned(spark, path, IVF.currentGeneration(path), source, idCol, vecCol,
       query, queryVecCol, k, nprobe, rerank)
 
   /** [[searchIndex]] against a PINNED lists generation instead of the
@@ -459,32 +445,20 @@ object SQ {
                         gen: (String, String),
                         source: DataFrame, idCol: String, vecCol: String,
                         query: DataFrame, queryVecCol: String,
-                        k: Int, nprobe: Int, rerank: Int): DataFrame =
-    searchAt(spark, path, s"$path/${gen._1}", source, idCol, vecCol,
-      query, queryVecCol, k, nprobe, rerank)
-
-  private def searchAt(spark: SparkSession, path: String, lp: String,
-                       source: DataFrame, idCol: String, vecCol: String,
-                       query: DataFrame, queryVecCol: String,
-                       k: Int, nprobe: Int, rerank: Int): DataFrame = {
+                        k: Int, nprobe: Int, rerank: Int): DataFrame = {
     require(rerank >= k, s"need rerank >= k, got rerank=$rerank k=$k")
     import spark.implicits._
     val qv = query.select(col(queryVecCol).cast("array<double>"))
       .as[Seq[Double]].head()
-    val ids = adcCandidatesAt(spark, path, lp, qv, nprobe, rerank)
+    val ids = adcCandidatesAt(spark, path, s"$path/${gen._1}", qv, nprobe, rerank)
       .select(col("id").cast("long")).as[Long].collect().toSeq
     if (ids.isEmpty)
       return source.select(col(idCol), lit(0L).as("rank"),
         lit(0.0).as("score")).limit(0)
-    val exact = source
-      .select(col(idCol).as("id"), col(vecCol).as("__v"))
-      .filter(col("id").isin(ids: _*)) // pushed: point fetch by id
-      .select(col("id"), dot(col("__v"), typedLit(qv)).as("score"))
-      .orderBy(col("score").desc, col("id").asc)
-      .limit(k)
-    exact.withColumn("rank",
-        row_number().over(Search.wAll.orderBy(col("score").desc, col("id").asc))
-          .cast("long"))
-      .select(col("id").as(idCol), col("rank"), round(col("score"), 6).as("score"))
+    Search.rankTop(source
+        .select(col(idCol).as("id"), col(vecCol).as("__v"))
+        .filter(col("id").isin(ids: _*)) // pushed: point fetch by id
+        .select(col("id"), dot(col("__v"), typedLit(qv)).as("score")), "id", k)
+      .withColumnRenamed("id", idCol)
   }
 }

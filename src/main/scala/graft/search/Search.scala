@@ -16,15 +16,23 @@ import org.apache.spark.sql.functions._
   * `TakeOrderedAndProject` — a per-partition bounded heap + driver
   * merge, i.e. exactly FlatIP's heap-select but distributed. No
   * global sort, no shuffle of the corpus.
+  *
+  * Every ranked vector serve ends in one of two tails here, which
+  * own the output contract (SURVEY §7.4): ties broken by ascending
+  * id, dense ranks from 1, scores rounded to 6 places.
+  * [[rankTop]] ranks one query's `(id, score)` rows; [[rankTopPerQuery]]
+  * ranks `(qid, id, score)` rows through one bounded heap per qid.
+  * A serve spells only its scoring step.
   */
 object Search {
 
-  /** Every top-k in this module runs the final rank window AFTER a
-    * `limit(k)` — k rows in one task, so the single-partition window
-    * is intentional and harmless. The shared spec centralizes that
-    * intent; note the literal partition key is CONSTANT-FOLDED AWAY
-    * by Spark 4's optimizer (verified empirically), so it does NOT
-    * suppress WindowExec's "No Partition Defined" warning —
+  /** The single-partition window of [[rankTop]] (and of
+    * [[IVF.centroids]]' dense cid numbering) — the only places it
+    * runs. In [[rankTop]] it numbers the k rows a `limit(k)` kept, in
+    * one task, so the single partition is intentional and harmless.
+    * The literal partition key is CONSTANT-FOLDED AWAY by Spark 4's
+    * optimizer (verified empirically), so it does NOT suppress
+    * WindowExec's "No Partition Defined" warning —
     * `graft.Sessions.local` mutes that logger instead. */
   private[search] val wAll = Window.partitionBy(lit(0))
 
@@ -44,22 +52,41 @@ object Search {
       df.schema(idCol).dataType.simpleString)
   }
 
-  /** R1 single query: exact top-k by dot product against one query
-    * vector (as a one-row DataFrame, broadcast). Deterministic
-    * tiebreak on id (SURVEY §7.4). Output: id, rank, score. */
-  def topK(docs: DataFrame, idCol: String, vecCol: String,
-           query: DataFrame, queryVecCol: String, k: Int): DataFrame = {
-    val scored = docs
-      .crossJoin(broadcast(query.select(col(queryVecCol).as("__qv"))))
-      .select(col(idCol), dot(col(vecCol), col("__qv")).as("score"))
+  /** The ranked tail of every single-query vector serve: the k best
+    * `(idCol, score)` rows by (score desc, id asc) — planned as
+    * `TakeOrderedAndProject`, FlatIP's heap-select — numbered 1..k
+    * over those k rows in one task. Output: idCol, rank (bigint),
+    * score rounded to 6 places. */
+  private[graft] def rankTop(scored: DataFrame, idCol: String, k: Int): DataFrame =
+    scored
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
-    // rank assignment over the k surviving rows only (tiny, single task)
-    scored
       .withColumn("rank",
         row_number().over(wAll.orderBy(col("score").desc, col(idCol).asc)).cast("long"))
       .select(col(idCol), col("rank"), round(col("score"), 6).as("score"))
-  }
+
+  /** The ranked tail of every per-query vector serve: one bounded
+    * `graft_topk` heap per qid over `(qid, idCol, score)` rows (the
+    * exchange carries O(queries × k) heap entries), exploded to
+    * (qid, idCol, rank, score) with [[rankTop]]'s order, ranks and
+    * rounding. The id is carried as long; qid keeps its type. */
+  private[graft] def rankTopPerQuery(scored: DataFrame, idCol: String,
+                                     k: Int): DataFrame =
+    scored
+      .groupBy("qid")
+      .agg(TopKAggregate.topK(col(idCol).cast("long"), col("score"), k).as("__tk"))
+      .select(col("qid"), explode(col("__tk")).as("__e"))
+      .select(col("qid"), col("__e.id").as(idCol), col("__e.rank").as("rank"),
+        round(col("__e.score"), 6).as("score"))
+
+  /** R1 single query: exact top-k by dot product against one query
+    * vector (as a one-row DataFrame, broadcast), ranked by
+    * [[rankTop]]. Output: id, rank, score. */
+  def topK(docs: DataFrame, idCol: String, vecCol: String,
+           query: DataFrame, queryVecCol: String, k: Int): DataFrame =
+    rankTop(docs
+      .crossJoin(broadcast(query.select(col(queryVecCol).as("__qv"))))
+      .select(col(idCol), dot(col(vecCol), col("__qv")).as("score")), idCol, k)
 
   /** R1 multi-query: per-query exact top-k of a query batch in ONE
     * pass over the corpus — FlatIP's batch search (reference
@@ -169,8 +196,8 @@ object Search {
     * (`src/pipeline/pipeline_mode.py:221-228`). Probing stays an
     * EQUI-join on bucket id: the probe set is (1 + nBits) rows per
     * query, so candidate generation is bucket-partition-pruned at any
-    * corpus size — never a similarity scan. Per-query top-k via the
-    * bounded-heap aggregate, one corpus scan for all queries. */
+    * corpus size — never a similarity scan. One corpus scan for all
+    * queries, ranked by [[rankTopPerQuery]]. */
   def lshMultiTopK(docs: DataFrame, idCol: String, vecCol: String,
                    queries: DataFrame, qidCol: String, qvecCol: String,
                    k: Int, nBits: Int, dim: Int, hamming1: Boolean): DataFrame = {
@@ -185,16 +212,11 @@ object Search {
        else Seq.empty[Column])
     val probes = base.select(col("qid"), col("__qv"),
       explode(array(probeCols: _*)).as("__pb"))
-    docs
+    rankTopPerQuery(docs
       .withColumn("__db", lshBucket(col(vecCol), nBits, dim))
       .join(broadcast(probes), col("__db") === col("__pb"))
-      .select(col("qid"), col(idCol), dot(col(vecCol), col("__qv")).as("score"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graftnative.TopKAggregate
-        .topK(col(idCol).cast("long"), col("score"), k).as("__tk"))
-      .select(col("qid"), explode(col("__tk")).as("__e"))
-      .select(col("qid"), col("__e.id").as(idCol), col("__e.rank").as("rank"),
-        round(col("__e.score"), 6).as("score"))
+      .select(col("qid"), col(idCol), dot(col(vecCol), col("__qv")).as("score")),
+      idCol, k)
   }
 
   /** R2 (approximate kNN, scale path): restrict the scan to the
@@ -206,14 +228,9 @@ object Search {
               dim: Int): DataFrame = {
     val q = broadcast(query.select(
       col(queryVecCol).as("__qv"), lshBucket(col(queryVecCol), nBits, dim).as("__qb")))
-    val scored = docs
+    rankTop(docs
       .withColumn("__db", lshBucket(col(vecCol), nBits, dim))
       .join(q, col("__db") === col("__qb")) // bucket-pruned
-      .select(col(idCol), dot(col(vecCol), col("__qv")).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-    scored.withColumn("rank",
-        row_number().over(wAll.orderBy(col("score").desc, col(idCol).asc)).cast("long"))
-      .select(col(idCol), col("rank"), round(col("score"), 6).as("score"))
+      .select(col(idCol), dot(col(vecCol), col("__qv")).as("score")), idCol, k)
   }
 }

@@ -37,6 +37,21 @@ class PQSpec extends SparkSpec {
     assert(recall >= 0.2, s"ADC recall@10 = $recall")
   }
 
+  test("multi-query ADC equals the per-query ADC serves") {
+    val qs = emb.filter(col("vec_id") < 5).select(col("vec_id").as("qid"), col("v").as("qv"))
+    val multi = PQ.adcMultiTopK(emb, "vec_id", "v", cb, qs, "qid", "qv", 10, 8, 64)
+      .select("qid", "vec_id", "rank", "score")
+      .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
+    val single = (0L until 5L).flatMap { q =>
+      PQ.adcTopK(emb, "vec_id", "v", cb,
+          emb.filter(col("vec_id") === q).select(col("v").as("qv")), "qv", 10, 8, 64)
+        .select(lit(q).as("qid"), col("vec_id"), col("rank"), col("score"))
+        .as[(Long, Long, Long, Double)].collect()
+    }.sortBy(r => (r._1, r._3))
+    assert(multi.length == 50)
+    assert(multi == single)
+  }
+
   test("argmin assignment strictly beats a fixed-code-0 assignment") {
     // pins that the per-subspace argmin actually minimizes: mean
     // squared reconstruction error under the chosen codes must beat

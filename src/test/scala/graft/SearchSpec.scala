@@ -880,4 +880,42 @@ class SearchSpec extends SparkSpec {
       assert(rows.map(_._3).sorted.toSeq == (1L to 10L), s"query $q ranks")
     }
   }
+
+  test("every single-query serve breaks score ties by ascending id, ranks 1..n") {
+    import graft.search.{IVF, PQ, SQ}
+    // every vector twice: id x and id x + 1000 share one vector, so
+    // each score comes in an equal pair and every top-k has ties
+    val base = emb.filter(col("vec_id") < 100)
+    val docs = base.union(base.select((col("vec_id") + 1000L).as("vec_id"), col("v")))
+      .localCheckpoint()
+    val q = emb.filter(col("vec_id") === 7).select(col("v").as("qv"))
+    val ivfPath = java.nio.file.Files.createTempDirectory("graft_tie_ivf").toString
+    IVF.writeIndex(docs, "vec_id", "v", 8, refineIters = 0, ivfPath)
+    val sqPath = java.nio.file.Files.createTempDirectory("graft_tie_sq").toString
+    SQ.writeIndex(docs, "vec_id", "v", 8, sqPath)
+    val cents = IVF.centroids(docs, "vec_id", "v", 8).localCheckpoint()
+    val codebook = IVF.centroids(docs, "vec_id", "v", 16).localCheckpoint()
+    val assigned = IVF.assign(docs, "vec_id", "v", cents)
+    val serves = Seq(
+      "topK" -> Search.topK(docs, "vec_id", "v", q, "qv", 10),
+      "lshTopK" -> Search.lshTopK(docs, "vec_id", "v", q, "qv", 10, nBits = 4, dim = 64),
+      "IVF.searchIndex" -> IVF.searchIndex(spark, ivfPath, "vec_id", "v", q, "qv", 10, 8),
+      "SQ.searchIndex" -> SQ.searchIndex(spark, sqPath, docs, "vec_id", "v", q, "qv",
+        10, 8, RetrievalQueries.sqRerank),
+      "PQ.adcTopK" -> PQ.adcTopK(docs, "vec_id", "v", codebook, q, "qv", 10, 8, 64),
+      "PQ.ivfAdcTopK" -> PQ.ivfAdcTopK(assigned, cents, codebook, "vec_id", "v",
+        q, "qv", 10, 8, 8, 64))
+    serves.foreach { case (name, df) =>
+      val rows = df.select(col("vec_id").cast("long"), col("rank"), col("score"))
+        .as[(Long, Long, Double)].collect().toSeq.sortBy(_._2)
+      assert(rows.map(_._2) == (1L to rows.length.toLong), s"$name: ranks $rows")
+      val pairs = rows.zip(rows.drop(1))
+      pairs.foreach { case (a, b) =>
+        assert(a._3 >= b._3, s"$name: score rises at rank ${b._2}: $rows")
+        if (a._3 == b._3)
+          assert(a._1 < b._1, s"$name: tie at rank ${b._2} not by ascending id: $rows")
+      }
+      assert(pairs.exists { case (a, b) => a._3 == b._3 }, s"$name: no tie in $rows")
+    }
+  }
 }
