@@ -10,13 +10,13 @@ expression ids (`vec_id#123L`), `plan_id=`, RDD ids (`[12]` after an
 `RDD` name or `ExistingRDD`), JVM lambda class names and identity hash
 codes. The line number of a source callsite (`at SQ.scala:412`, the
 name a `localCheckpoint` RDD carries) is dropped too: it moves whenever
-code above it moves, which is no change of plan. Each `--tag` pair names one per-side string, such as the two
-sf-dir symlinks one run per side reads through; it is replaced on its
-own side, in its path form and in its roundtrip-dir form (`/` as `_`),
-by one placeholder. A query is the same when the normalised plans are
-equal. Prints one line per query (the first differing line for a
-difference) and exits 1 on any difference or on a query dumped on one
-side only.
+code above it moves, which is no change of plan. Each `--tag` pair
+names one per-side string, such as the two sf-dir symlinks one run per
+side reads through; it is replaced on its own side, in its path form
+and in its roundtrip-dir form (`/` as `_`), by one placeholder. A
+query is the same when the normalised plans are equal. Prints one line
+per query (the first differing line for a difference) and exits 1 on
+any difference or on a query dumped on one side only.
 """
 import os
 import re
@@ -58,6 +58,9 @@ def main(argv) -> int:
     i = 0
     while i < len(argv):
         if argv[i] == "--tag":
+            if i + 2 >= len(argv):
+                print(__doc__)
+                return 2
             tags_p.append(argv[i + 1])
             tags_c.append(argv[i + 2])
             i += 3
